@@ -28,8 +28,9 @@ object BenchLC {
     import java.util.Comparator
     val p = Paths.get(path)
     if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.deleteIfExists(f))
+      scala.util.Using.resource(Files.walk(p))(
+        _.sorted(Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(f => Files.deleteIfExists(f)))
   }
 
   def main(args: Array[String]): Unit = {

@@ -147,7 +147,11 @@ object EntityIndexBuilder {
     */
   def buildTracked(entities0: DataFrame, cfg: EntityIndexConfig,
       persistInput: Boolean): (DataFrame, Seq[DataFrame]) = {
-    val entities = if (persistInput) entities0.persist() else entities0
+    // a caller-cached input is read from its cache but never claimed: only
+    // an input this build cached is handed back for release (ADVICE r6 #1)
+    val ownsInput = persistInput &&
+      entities0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val entities = if (ownsInput) entities0.persist() else entities0
     val withInf = withInfo(entities, cfg)
     val uniq = uniqueAliases(entities)
 
@@ -286,6 +290,7 @@ object EntityIndexBuilder {
         col("qid").as("id"), lit(AliasInfo).as("kind"))
 
     (e1.union(e3Plain).union(e34Info).union(e5Plain).union(e5Info),
-      Seq(cand, e34, aliasCand, plainWinners, entities))
+      Seq(cand, e34, aliasCand, plainWinners) ++
+        (if (ownsInput) Seq(entities) else Nil))
   }
 }

@@ -3,6 +3,9 @@ package graft.io
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -63,12 +66,16 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
   private def versionFileNum(name: String): Option[Long] =
     "manifest-v(\\d+)\\.json".r.unapplySeq(name).flatMap(_.headOption).map(_.toLong)
 
+  /** `f` over the entries of directory `d`; the listing stream (one open
+    * file descriptor) is closed before this returns.
+    */
+  private def listDir[A](d: Path)(f: Iterator[Path] => A): A =
+    Using.resource(Files.list(d))(s => f(s.iterator().asScala))
+
   private def latestVersion(stage: String): Option[Long] = {
-    import scala.jdk.CollectionConverters._
     val d = versionsDir(stage)
     if (!Files.exists(d)) return None
-    Files.list(d).iterator().asScala
-      .flatMap(p => versionFileNum(p.getFileName.toString)).maxOption
+    listDir(d)(_.flatMap(p => versionFileNum(p.getFileName.toString)).maxOption)
   }
 
   /** Current commit version of the stage: 0 = never committed. */
@@ -277,7 +284,7 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
       maxRecordsPerFile: Long = 0L,
       degreeOf: Option[String] = None)(compute: => DataFrame): (DataFrame, Boolean) = {
     if (fingerprintOf(stage).contains(fingerprint)) {
-      return (spark.read.parquet(dataPath(stage)), true)
+      return (readCommitted(dataPath(stage), schemaOf(stage), partitionBy), true)
     }
     val expected = versionOf(stage)
     val out = compute
@@ -316,7 +323,7 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
            _: java.nio.file.FileSystemException =>
         deleteTree(Paths.get(inflight))
     }
-    val written = spark.read.parquet(path)
+    val written = readCommitted(path, Some(out.schema), partitionBy)
     val degreeJson = degreeOf
       .map(c => s""","max_degree":${maxDegree(written, c, rows)}""")
       .getOrElse("")
@@ -329,15 +336,30 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
       case Some(winner) if winner == fingerprint =>
         // a concurrent run of the SAME job won the version race: adopt its
         // commit (the data dir is shared and content-identical)
-        (spark.read.parquet(dataPath(stage)), true)
+        (readCommitted(dataPath(stage), schemaOf(stage), partitionBy), true)
       case Some(winner) =>
         throw new ConcurrentWriteException(stage, fingerprint, winner)
     }
   }
 
+  /** Read committed stage files under their KNOWN schema: a bare
+    * `spark.read.parquet` launches one footer-reading job per call to infer
+    * it. Partition columns move last, where a partitioned read places them;
+    * `None` (a legacy manifest without a schema) falls back to inference.
+    */
+  private def readCommitted(path: String, schema: Option[StructType],
+      partitionBy: Seq[String]): DataFrame = schema match {
+    case None => spark.read.parquet(path)
+    case Some(s) =>
+      val parts = partitionBy.flatMap(p => s.fields.find(_.name == p))
+      spark.read.schema(StructType(s.fields.filterNot(parts.contains) ++ parts))
+        .parquet(path)
+  }
+
   private def deleteTree(p: Path): Unit = if (Files.exists(p))
-    Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(f => Files.deleteIfExists(f))
+    Using.resource(Files.walk(p))(
+      _.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(f => Files.deleteIfExists(f)))
 
   /** Force the next run of `stage` to recompute: drop its commit metadata
     * (the numbered log AND the mirror — deleting `_MANIFEST.json` alone no
@@ -376,7 +398,7 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
       degreeOf: Option[String] = None)(compute: => DataFrame): (DataFrame, Boolean) = {
     val table = bucketedTableName(stage)
     def register(): Unit = if (!spark.catalog.tableExists(table)) {
-      val schema = spark.read.parquet(dataPath(stage)).schema
+      val schema = readCommitted(dataPath(stage), schemaOf(stage), Nil).schema
       spark.sql(
         s"""CREATE TABLE $table (${schema.toDDL}) USING parquet
            |CLUSTERED BY (${bucketCols.mkString(", ")})
@@ -436,6 +458,15 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
 
   private def snapshotsDir: Path = Paths.get(baseDir, "_snapshots")
 
+  /** Names of the stages committed under the base directory. */
+  private def stageNames(): Seq[String] = {
+    val base = Paths.get(baseDir)
+    if (!Files.exists(base)) Seq.empty
+    else listDir(base)(_
+      .filter(p => Files.isDirectory(p) && Files.exists(p.resolve("_MANIFEST.json")))
+      .map(_.getFileName.toString).toSeq.sorted)
+  }
+
   /** Atomically record the CURRENT committed version of every stage (its
     * fingerprint + versioned data dir) as one immutable snapshot file. A
     * reader that pins a snapshot ([[snapshotTable]]) keeps a consistent
@@ -448,15 +479,8 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     * overwriting had.
     */
   def commitSnapshot(): String = {
-    import scala.jdk.CollectionConverters._
-    val base = Paths.get(baseDir)
-    val stages =
-      if (!Files.exists(base)) Seq.empty[String]
-      else Files.list(base).iterator().asScala
-        .filter(p => Files.isDirectory(p) && Files.exists(p.resolve("_MANIFEST.json")))
-        .map(_.getFileName.toString).toSeq.sorted
     val id = s"snap-${System.currentTimeMillis()}-${System.nanoTime() % 1000000}"
-    val body = stages.flatMap { st =>
+    val body = stageNames().flatMap { st =>
       for (fp <- fingerprintOf(st); d <- dataDirOf(st))
         yield s""""$st":{"fingerprint":"$fp","data":"$d"}"""
     }.mkString(",")
@@ -472,12 +496,11 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
 
   /** Snapshot ids, oldest first. */
   def listSnapshots(): Seq[String] = {
-    import scala.jdk.CollectionConverters._
     if (!Files.exists(snapshotsDir)) return Seq.empty
-    Files.list(snapshotsDir).iterator().asScala
+    listDir(snapshotsDir)(_
       .map(_.getFileName.toString)
       .filter(_.endsWith(".json"))
-      .map(_.stripSuffix(".json")).toSeq.sorted
+      .map(_.stripSuffix(".json")).toSeq.sorted)
   }
 
   /** The data dir a snapshot pinned for `stage` (relative to the stage). */
@@ -545,29 +568,22 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     * @return (snapshot files deleted, version dirs deleted)
     */
   def gcSnapshots(keepSnapshots: Int): (Int, Int) = {
-    import scala.jdk.CollectionConverters._
     require(keepSnapshots >= 0)
     val all = listSnapshots()
     val (drop, keep) = all.splitAt(math.max(0, all.size - keepSnapshots))
     drop.foreach(id => Files.deleteIfExists(snapshotsDir.resolve(s"$id.json")))
-    val base = Paths.get(baseDir)
-    if (!Files.exists(base)) return (drop.size, 0)
-    val stages = Files.list(base).iterator().asScala
-      .filter(p => Files.isDirectory(p) && Files.exists(p.resolve("_MANIFEST.json")))
-      .map(_.getFileName.toString).toSeq
     var removedDirs = 0
-    stages.foreach { st =>
+    stageNames().foreach { st =>
       val referenced =
         dataDirOf(st).toSet ++ keep.flatMap(id => snapshotDataDirOf(id, st))
-      Files.list(base.resolve(st)).iterator().asScala
+      listDir(Paths.get(baseDir, st))(_
         .filter(p => Files.isDirectory(p) &&
           (p.getFileName.toString.startsWith(".inflight-") || // crashed writes
             p.getFileName.toString.startsWith("data-")) &&
           !referenced.contains(p.getFileName.toString))
-        .toSeq // materialize before mutating the directory stream's source
+        .toSeq) // materialize before mutating the directory stream's source
         .foreach { dir =>
-          Files.walk(dir).sorted(java.util.Comparator.reverseOrder[Path]())
-            .forEach(f => Files.deleteIfExists(f))
+          deleteTree(dir)
           removedDirs += 1
         }
     }

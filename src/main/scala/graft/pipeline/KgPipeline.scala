@@ -306,8 +306,11 @@ object KgPipeline {
 
     val mentionCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val mentions = timed("mentions", Seq("entity_index", "property_index"), Nil) {
-      val (df, caches) = Mentions.detectAutoTracked(transcripts, dict,
-        broadcastMaxRows = dictBroadcastMaxRows, knownDictRows = dictRowsHint)
+      // the trie path clusters its ordinal rows into the stage's buckets,
+      // so the bucketed write's repartition is planned away (Mentions.detectTrie)
+      val (df, caches) = Mentions.detectRouted(transcripts, dict, maxN = 4,
+        broadcastMaxRows = dictBroadcastMaxRows, knownDictRows = dictRowsHint,
+        buckets = buckets)
       mentionCaches ++= caches
       df
     }

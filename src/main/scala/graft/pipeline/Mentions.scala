@@ -19,7 +19,11 @@ import org.apache.spark.sql.functions._
   *  - [[detectFast]] — a broadcast token-TRIE scanned in one narrow
   *    `mapPartitions` (Aho-Corasick-style, SURVEY §2.7): no gram explode, no
   *    shuffle, zero string concatenation in the hot loop. The pipeline's
-  *    default for broadcast-sized dictionaries.
+  *    default for broadcast-sized dictionaries. The scan emits each match as
+  *    an `Int` ordinal into the broadcast dictionary and a narrow projection
+  *    decodes it; the conv-bucketed mentions stage clusters the ORDINAL rows
+  *    by `conv_id` between the two, so its one exchange carries ints, not
+  *    dictionary strings ([[detectTrie]]).
   *
   * [[detectAuto]] picks between the trie scan and the shuffle join by the
   * dictionary's size — an unconditional broadcast/driver-collect of a 10^8-row
@@ -207,18 +211,8 @@ object Mentions {
     }
   }
 
-  /** Trie-scan variant of [[detect]] — IDENTICAL semantics (same match set,
-    * same dominance rule; equivalence-tested), different physical shape: a
-    * single narrow `mapPartitions` over turns probing a broadcast token-trie.
-    * No gram explode, no self-join shuffle — overlap resolution happens per
-    * turn in memory, and the token walk allocates nothing per step (no gram
-    * concatenation; trie descent replaces the round-1 prefix-set probe).
-    *
-    * The dictionary is collected to the driver and broadcast — use
-    * [[detectAuto]] when the dictionary may exceed broadcast scale.
-    */
-  /** Compact the dictionary to flat arrays and broadcast it — the shared
-    * front end of [[detectFast]] and [[detectFastTs]].
+  /** Compact the dictionary to flat arrays and broadcast it — the one
+    * broadcast both ends of [[detectTrie]] (scan and decode) read.
     *
     * EXECUTOR-PARALLEL compaction: each partition decodes its rows into one
     * flat DictRows (the expensive per-row work runs on executors, in
@@ -304,52 +298,94 @@ object Mentions {
     }
   }
 
-  def detectFast(turns: DataFrame, dictionary: DataFrame, maxN: Int = 4): DataFrame = {
-    val spark = turns.sparkSession
-    import spark.implicits._
+  /** Trie-scan variant of [[detect]] — IDENTICAL semantics (same match set,
+    * same dominance rule; equivalence-tested), different physical shape: a
+    * single narrow `mapPartitions` over turns probing a broadcast token-trie,
+    * then a narrow decode projection ([[detectTrie]] with no exchange).
+    *
+    * The dictionary is collected to the driver and broadcast — use
+    * [[detectAuto]] when the dictionary may exceed broadcast scale.
+    */
+  def detectFast(turns: DataFrame, dictionary: DataFrame, maxN: Int = 4): DataFrame =
+    detectTrie(turns, dictionary, maxN)
+
+  /** The trie path as scan → (optional exchange) → decode, over ONE
+    * dictionary broadcast:
+    *
+    *  - the scan emits `(conv_id, turn_idx, span_start, span_end, payload)`
+    *    plus the `passThrough` columns, where `payload` is the match's index
+    *    into the broadcast [[DictRows]];
+    *  - `buckets > 0` hash-clusters those rows by `conv_id` into `buckets`
+    *    partitions — the distribution a conv-bucketed stage write requires,
+    *    so the write's own repartition is planned away and the stage's one
+    *    exchange moves ints instead of six dictionary-derived columns
+    *    (Hyper Dimension Shuffle's bytes-moved cost);
+    *  - the decode projection then maps `payload` to
+    *    `surface, id, kind, is_prop, score, base` through the same broadcast.
+    *
+    * The payload never leaves the plan that made it, so it needs no stable
+    * encoding and never reaches storage. Output columns: those of
+    * [[detectFast]], then `passThrough` (the streaming path carries `ts`).
+    */
+  private[graft] def detectTrie(turns: DataFrame, dictionary: DataFrame,
+      maxN: Int = 4, passThrough: Seq[String] = Nil, buckets: Int = 0): DataFrame = {
     val bcRows = compactDict(dictionary)
-    turns.select(col("conv_id"), col("turn_idx").cast("int"), col("text"))
-      .as[(String, Int, String)]
-      .mapPartitions { it =>
-        // trie built once per executor JVM from the flat broadcast arrays
-        val t = SurfaceTrie.of(bcRows.id, bcRows.value)
-        val d = t.rows
-        it.flatMap { case (conv, turn, text) =>
-          scanText(t, text, maxN).map { case (s, e, p) =>
-            (conv, turn, s, e, d.surfaces(p), d.ids(p), d.kinds(p), d.isProp(p),
-              d.weights(p), d.bases(p))
-          }
-        }
-      }
-      .toDF("conv_id", "turn_idx", "span_start", "span_end", "surface", "id",
-        "kind", "is_prop", "score", "base")
+    val scanned = scanPayloads(turns, bcRows, maxN, passThrough)
+    decodePayloads(
+      if (buckets > 0) scanned.repartition(buckets, col("conv_id")) else scanned,
+      bcRows, passThrough)
   }
 
-  /** [[detectFast]] with the turn's event time (`ts`) carried through — the
-    * streaming path re-applies `withWatermark` on the OUTPUT's ts column
-    * (this typed scan strips attribute metadata, so an upstream watermark
-    * would not reach a downstream stateful operator) and gates its state
-    * flushes on it ([[graft.streaming.IncrementalKg.statefulTriplesStream]]).
-    */
-  def detectFastTs(turns: DataFrame, dictionary: DataFrame, maxN: Int = 4): DataFrame = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val bcRows = compactDict(dictionary)
-    turns.select(col("conv_id"), col("turn_idx").cast("int"), col("text"),
-        col("ts"))
-      .as[(String, Int, String, java.sql.Timestamp)]
-      .mapPartitions { it =>
-        val t = SurfaceTrie.of(bcRows.id, bcRows.value)
-        val d = t.rows
-        it.flatMap { case (conv, turn, text, ts) =>
-          scanText(t, text, maxN).map { case (s, e, p) =>
-            (conv, turn, s, e, d.surfaces(p), d.ids(p), d.kinds(p), d.isProp(p),
-              d.weights(p), d.bases(p), ts)
-          }
+  private def scanPayloads(turns: DataFrame,
+      bcRows: org.apache.spark.broadcast.Broadcast[DictRows], maxN: Int,
+      passThrough: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    val in = turns.select(Seq(col("conv_id").cast("string"),
+      col("turn_idx").cast("int"), col("text")) ++ passThrough.map(col): _*)
+    val schema = StructType(Seq(
+      StructField("conv_id", StringType),
+      StructField("turn_idx", IntegerType, nullable = false),
+      StructField("span_start", IntegerType, nullable = false),
+      StructField("span_end", IntegerType, nullable = false),
+      StructField("payload", IntegerType, nullable = false)) ++
+      in.schema.fields.drop(3))
+    in.mapPartitions { it =>
+      // trie built once per executor JVM from the flat broadcast arrays
+      val t = SurfaceTrie.of(bcRows.id, bcRows.value)
+      it.flatMap { r =>
+        val conv = r.getString(0)
+        val turn = r.getInt(1) // a null turn_idx fails loudly here
+        scanText(t, r.getString(2), maxN).map { case (s, e, p) =>
+          // one flat array per row: building it from Seqs cost a quarter of
+          // the scan's CPU
+          val v = new Array[Any](r.length + 2)
+          v(0) = conv; v(1) = turn; v(2) = s; v(3) = e; v(4) = p
+          var k = 3
+          while (k < r.length) { v(k + 2) = r.get(k); k += 1 }
+          Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(v))
         }
       }
-      .toDF("conv_id", "turn_idx", "span_start", "span_end", "surface", "id",
-        "kind", "is_prop", "score", "base", "ts")
+    }(Encoders.row(schema))
+  }
+
+  /** Narrow projection: payload → the dictionary columns, through ONE udf
+    * returning all six (six single-column udfs measured ~10% more CPU).
+    * Every other column passes through as the same attribute, so a
+    * `conv_id` hash partitioning below survives it.
+    */
+  private def decodePayloads(scanned: DataFrame,
+      bcRows: org.apache.spark.broadcast.Broadcast[DictRows],
+      passThrough: Seq[String]): DataFrame = {
+    val decode = udf { (p: Int) =>
+      val d = bcRows.value
+      (d.surfaces(p), d.ids(p), d.kinds(p), d.isProp(p), d.weights(p), d.bases(p))
+    }.asNonNullable()
+    val span = Seq("conv_id", "turn_idx", "span_start", "span_end").map(col)
+    scanned.select(span ++ passThrough.map(col) :+ decode(col("payload")).as("decoded"): _*)
+      .select(span ++ Seq("surface", "id", "kind", "is_prop", "score", "base")
+        .zipWithIndex.map { case (c, i) => col(s"decoded._${i + 1}").as(c) } ++
+        passThrough.map(col): _*)
   }
 
   /** Size-guarded detection: trie scan while the dictionary fits broadcast
@@ -378,15 +414,27 @@ object Mentions {
   def detectAutoTracked(turns: DataFrame, dictionary: DataFrame, maxN: Int = 4,
       broadcastMaxRows: Long = 20000000L,
       knownDictRows: Option[Long] = None): (DataFrame, Seq[DataFrame]) =
+    detectRouted(turns, dictionary, maxN, broadcastMaxRows, knownDictRows)
+
+  /** [[detectAutoTracked]] for a conv-bucketed stage write: `buckets > 0`
+    * clusters the trie path's ordinal rows by `conv_id` before decoding
+    * (see [[detectTrie]]); the shuffle-join path keeps its shape and leaves
+    * the clustering to the write.
+    */
+  private[graft] def detectRouted(turns: DataFrame, dictionary: DataFrame,
+      maxN: Int, broadcastMaxRows: Long, knownDictRows: Option[Long],
+      buckets: Int = 0): (DataFrame, Seq[DataFrame]) =
     knownDictRows match {
       case Some(nr) =>
-        if (nr <= broadcastMaxRows) (detectFast(turns, dictionary, maxN), Nil)
+        if (nr <= broadcastMaxRows)
+          (detectTrie(turns, dictionary, maxN, buckets = buckets), Nil)
         else detectTracked(turns, dictionary, maxN, broadcastDict = false)
       case None =>
         val d = dictionary.persist()
         val nr = d.count()
         if (nr <= broadcastMaxRows) {
-          val out = detectFast(turns, d, maxN) // collects d NOW (cache hit)
+          // collects d NOW (cache hit)
+          val out = detectTrie(turns, d, maxN, buckets = buckets)
           d.unpersist(blocking = false)
           (out, Nil)
         } else {

@@ -198,11 +198,12 @@ object IncrementalKg {
       idleTtlMs: Long = 30L * 60L * 1000L): StreamingQuery = {
     val spark = transcripts.sparkSession
     import spark.implicits._
-    // stateless per-turn mention scan (broadcast trie) on the stream; the
-    // watermark attaches to the scan's OUTPUT ts (the typed scan strips
-    // attribute metadata, so a transcript-level watermark would not reach
-    // the stateful operator below)
-    val mentions = graft.pipeline.Mentions.detectFastTs(transcripts, dictionary)
+    // stateless per-turn mention scan (broadcast trie) on the stream, with
+    // the turn's ts as a pass-through column; the watermark attaches to the
+    // scan's OUTPUT ts (the typed scan strips attribute metadata, so a
+    // transcript-level watermark would not reach the stateful operator below)
+    val mentions = graft.pipeline.Mentions
+      .detectTrie(transcripts, dictionary, passThrough = Seq("ts"))
       .withWatermark("ts", watermarkDelay)
     val typed = mentions.select(col("conv_id"), col("turn_idx").cast("int"),
         col("span_start").cast("int"), col("span_end").cast("int"),

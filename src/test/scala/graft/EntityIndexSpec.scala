@@ -150,6 +150,24 @@ class EntityIndexSpec extends AnyFunSuite {
     h3.foreach(_.unpersist(blocking = true))
   }
 
+  test("build handles never release a cache the caller owns") {
+    import spark.implicits._
+    // the caller persisted the dump; neither the gated default nor a forced
+    // persistInput may hand it back as a handle to release
+    val dump = sample(genEntities, 11L).toDF().persist()
+    try {
+      for ((cfg, forced) <- Seq(
+          (EntityIndexConfig(ignoreTypes = true), false),
+          (EntityIndexConfig(), true))) {
+        val (idx, handles) = EntityIndexBuilder.buildTracked(dump, cfg, forced)
+        idx.count()
+        handles.foreach(_.unpersist(blocking = true))
+        assert(dump.storageLevel.useMemory,
+          s"caller-persisted input released by the handles (persistInput=$forced)")
+      }
+    } finally dump.unpersist(blocking = true)
+  }
+
   test("E6 invariant: at most one primary (kind<=1) surface per entity") {
     for (seed <- 1L to 20L) {
       val rows = sample(genEntities, 7000 + seed)

@@ -167,15 +167,125 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(store.rowCountOf("sized").contains(5000L))
   }
 
+  /** Spark jobs `body` launches. The listener bus is asynchronous, so a
+    * marker job in another group runs after `body`, and the count is read
+    * once the listener has seen the marker (events arrive in order).
+    */
+  def jobsLaunchedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"probe-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "probe")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains(s"$group-end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(s"$group-end"), "listener never saw the marker job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("stage reads use the recorded schema: no inference job, same schema") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-schema-read").toString
+    val store = new graft.io.ManifestStore(spark, out)
+    val df = (0 until 20).map(i => (i.toLong, s"v$i", i % 3, if (i % 2 == 0) "a" else "b"))
+      .toDF("k", "v", "n", "part")
+    def inferred(stage: String) =
+      spark.read.parquet(s"$out/$stage/${store.dataDirOf(stage).get}").schema
+    // plain stage: the commit runs what a bare write runs (no extra job to
+    // infer the schema back), the resume runs nothing
+    val bareJobs = jobsLaunchedBy(df.write.parquet(
+      Files.createTempDirectory("graft-bare").resolve("w").toString))
+    var committed: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunchedBy { committed = store.runStage("plain", "fp-p")(df)._1 } == bareJobs)
+    var resumed: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunchedBy {
+      resumed = store.runStage("plain", "fp-p")(fail("must resume"))._1
+    } == 0)
+    assert(committed.schema == inferred("plain") && resumed.schema == inferred("plain"))
+    assert(resumed.collect().map(_.toString).sorted.sameElements(
+      df.collect().map(_.toString).sorted))
+    // partitionBy stage: the partition column reads back last, as inferred
+    val (pCommitted, _) = store.runStage("parted", "fp-q", Seq("part"))(df)
+    val (pResumed, wasResumed) = store.runStage("parted", "fp-q", Seq("part"))(
+      fail("must resume"))
+    assert(wasResumed)
+    assert(pCommitted.schema == inferred("parted") && pResumed.schema == inferred("parted"))
+    assert(pResumed.schema.fieldNames.sameElements(Array("k", "v", "n", "part")))
+    assert(pResumed.filter(col("part") === "a").count() == 10)
+  }
+
+  test("manifest store closes its directory streams (no descriptor growth)") {
+    import spark.implicits._
+    val fdDir = Paths.get("/proc/self/fd")
+    assume(Files.isDirectory(fdDir), "needs /proc")
+    def openFds(): Long = scala.util.Using.resource(Files.list(fdDir))(_.count())
+    val out = Files.createTempDirectory("graft-fds").toString
+    val store = new graft.io.ManifestStore(spark, out)
+    val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    // warm-up: the first commit and resume load classes and open Spark's
+    // long-lived files
+    store.runStage("warm", "fp-w")(df)
+    store.runStage("warm", "fp-w")(fail("must resume"))
+    store.commitSnapshot()
+    val before = openFds()
+    for (_ <- 1 to 1000) { store.versionOf("warm"); store.fingerprintOf("warm") }
+    store.runStage("st", "fp-1")(df)
+    store.runStage("st", "fp-1")(fail("must resume"))
+    store.runStage("st", "fp-2")(df)
+    store.commitSnapshot()
+    store.listSnapshots()
+    store.gcSnapshots(keepSnapshots = 1)
+    store.invalidateStage("st")
+    assert(openFds() == before, "manifest-store calls leaked file descriptors")
+  }
+
   test("bucketed-mentions pipeline == default pipeline (full run equivalence)") {
     val entities = Synth.entityDump(spark, nEnts)
     val properties = Synth.propertyDump(spark, mProps)
     val redirects = Synth.redirects(spark, nEnts)
     val transcripts = Synth.transcripts(spark, convs, turnsPerConv, nEnts, mProps)
+    // the committed mentions stage of every shape is the trie scan's output
+    // under the schema the stage has always committed, with the same stats
+    val mentionSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      "conv_id STRING, turn_idx INT NOT NULL, span_start INT NOT NULL, " +
+        "span_end INT NOT NULL, surface STRING, id STRING, kind INT NOT NULL, " +
+        "is_prop BOOLEAN NOT NULL, score DOUBLE NOT NULL, base STRING")
+    def digest(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val r = df.agg(count(lit(1)),
+        expr(s"bit_xor(xxhash64(${mentionSchema.fieldNames.mkString(", ")}))"))
+        .head()
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
+    def checkMentions(res: KgPipeline.Result, outDir: String): Unit = {
+      val fast = graft.pipeline.Mentions.detectFast(transcripts,
+        KgPipeline.dictionary(res.entityIndex, entities, res.propertyIndex,
+          properties))
+      assert(fast.schema == mentionSchema)
+      val store = new graft.io.ManifestStore(spark, outDir)
+      assert(store.schemaOf("mentions").contains(mentionSchema))
+      val (rows, hash) = digest(fast)
+      assert(digest(res.mentions) == ((rows, hash)))
+      assert(store.rowCountOf("mentions").contains(rows))
+      assert(store.distinctCountOf("mentions").contains(
+        fast.agg(approx_count_distinct("id")).head().getLong(0)))
+      assert(store.maxDegreeOf("mentions").contains(
+        fast.groupBy("id").count().agg(max("count")).head().getLong(0)))
+    }
     def runWith(buckets: Int): Set[String] = {
       val outDir = Files.createTempDirectory(s"graft-bkt$buckets").toString
       val res = KgPipeline.run(spark, transcripts, entities, properties,
         redirects, outDir, mentionBuckets = buckets)
+      checkMentions(res, outDir)
       (res.triples.selectExpr("subj", "pred", "obj", "conv_id", "turn_idx",
           "round(score,6) AS s").collect().map(_.toString) ++
         res.edges.selectExpr("src", "pid", "dst", "weight").collect().map(_.toString) ++

@@ -136,6 +136,60 @@ class PlanSpec extends AnyFunSuite {
     assert(resumed1 && again.count() == 300)
   }
 
+  test("bucketed mentions write: its one exchange carries dictionary ordinals only") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val ents = graft.synth.Synth.entityDump(spark, 300)
+    val props = graft.synth.Synth.propertyDump(spark, 30)
+    val dict = graft.pipeline.KgPipeline.dictionary(
+      graft.index.EntityIndexBuilder.build(ents), ents,
+      graft.index.PropertyIndexBuilder.build(props), props)
+    val turns = graft.synth.Synth.transcripts(spark, 40, 6, 300, 30)
+    // every executed plan of the session, until a marker query arrives (the
+    // listener bus is asynchronous; events arrive in order)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val out = java.nio.file.Files.createTempDirectory("plan-ordinals").toString
+    val store = new graft.io.ManifestStore(spark, out)
+    try {
+      // the pipeline's mentions stage: trie path clustered into the buckets
+      store.runStageBucketed("mentions", "fp-ord",
+        graft.pipeline.KgPipeline.MentionBucketCols,
+        graft.pipeline.KgPipeline.MentionSortCols, nBuckets = 4) {
+        graft.pipeline.Mentions.detectRouted(turns, dict, 4, Long.MaxValue,
+          Some(1L), buckets = 4)._1
+      }
+      spark.range(1).toDF("plan_spec_marker").collect()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!plans.toArray(Array.empty[QueryExecution]).exists(
+          _.analyzed.output.exists(_.name == "plan_spec_marker")) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    object H extends AdaptiveSparkPlanHelper
+    val writes = plans.toArray(Array.empty[QueryExecution]).map(_.executedPlan)
+      .filter(p => H.find(p)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+    assert(writes.length == 1, s"expected one write plan, got ${writes.length}")
+    val exchanges = H.collect(writes.head) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.length == 1,
+      s"the bucketed write must plan exactly one exchange:\n${writes.head}")
+    assert(exchanges.head.child.output.map(_.name) ==
+      Seq("conv_id", "turn_idx", "span_start", "span_end", "payload"),
+      s"the exchange must carry ordinals, not dictionary strings:\n${writes.head}")
+    // and what it committed is the trie scan's decoded output
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("conv_id", "turn_idx", "span_start", "span_end", "surface",
+        "id", "kind", "is_prop", "score", "base").collect().map(_.toString).toSet
+    assert(rows(spark.table(store.bucketedTableName("mentions"))) ==
+      rows(graft.pipeline.Mentions.detectFast(turns, dict)))
+  }
+
   test("entity cascade under AQE: no forced join strategy, small sides broadcast") {
     val ents = graft.synth.Synth.entityDump(spark, 1000)
     val plan = executedPlan(graft.index.EntityIndexBuilder.build(ents))
