@@ -69,7 +69,7 @@ object BenchLC {
         .getOrCreate()
       s.sparkContext.setLogLevel("ERROR")
       // SPARK_GRAFT_STAGELOG=1 → per-stage wall/task/shuffle log on stderr
-      // (the same headless stage table BenchExtra offers, guide §7.1)
+      // (a headless stage table, guide §7.1)
       if (sys.env.get("SPARK_GRAFT_STAGELOG").contains("1"))
         s.sparkContext.addSparkListener(
           new org.apache.spark.scheduler.SparkListener {

@@ -27,6 +27,9 @@ final class ConcurrentWriteException(stage: String, mine: String, winner: String
 final class SchemaEvolutionException(stage: String, detail: String)
   extends RuntimeException(s"stage '$stage': incompatible schema change — $detail")
 
+/** Bucket spec of a bucketed stage. */
+private final case class Buckets(cols: Seq[String], sortCols: Seq[String], n: Int)
+
 /** Iceberg-style table layer (SURVEY.md §7.0): partitioned Parquet plus a
   * per-stage numbered-manifest commit log recording input fingerprint, row
   * count, schema and commit time. Gives the properties the north rule uses
@@ -115,29 +118,29 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes(StandardCharsets.UTF_8)).map(b => f"$b%02x").mkString
 
+  /** Manifest field `name`: a string value, or with `num` a bare integer. */
+  private def field(manifest: String, name: String, num: Boolean = false): Option[String] =
+    (s"\"$name\"\\s*:\\s*" + (if (num) "(\\d+)" else "\"([^\"]*)\"")).r
+      .findFirstMatchIn(manifest).map(_.group(1))
+
   /** The committed data dir of a stage per its manifest (legacy = `data`). */
   def dataDirOf(stage: String): Option[String] =
-    readManifest(stage).map(s =>
-      "\"data\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(s)
-        .map(_.group(1)).getOrElse("data"))
+    readManifest(stage).map(field(_, "data").getOrElse("data"))
   private def dataPath(stage: String): String =
     dataPathFor(stage, dataDirOf(stage).getOrElse("data"))
 
   def fingerprintOf(stage: String): Option[String] =
-    readManifest(stage).flatMap(
-      "\"fingerprint\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(_).map(_.group(1)))
+    readManifest(stage).flatMap(field(_, "fingerprint"))
 
   def rowCountOf(stage: String): Option[Long] =
-    readManifest(stage).flatMap(
-      "\"rows\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(_).map(_.group(1).toLong))
+    readManifest(stage).flatMap(field(_, "rows", num = true)).map(_.toLong)
 
   /** Approximate distinct count of the column named via `runStage`'s
     * `distinctOf` — an observability column stat (observed free during the
     * write job).
     */
   def distinctCountOf(stage: String): Option[Long] =
-    readManifest(stage).flatMap(
-      "\"distinct\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(_).map(_.group(1).toLong))
+    readManifest(stage).flatMap(field(_, "distinct", num = true)).map(_.toLong)
 
   /** Head-key degree (max rows per key) of the column named via `runStage`'s
     * `degreeOf` — the skew signal downstream salt gates key on. A mean
@@ -147,8 +150,13 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     * `Canonicalize.autoSaltMaxDegree`.
     */
   def maxDegreeOf(stage: String): Option[Long] =
-    readManifest(stage).flatMap(
-      "\"max_degree\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(_).map(_.group(1).toLong))
+    readManifest(stage).flatMap(field(_, "max_degree", num = true)).map(_.toLong)
+
+  /** The bucket spec the stage's manifest recorded (None: written plain). */
+  private def bucketsOf(stage: String, sortCols: Seq[String]): Option[Buckets] =
+    readManifest(stage).flatMap(m => for {
+      cols <- field(m, "bucketBy"); n <- field(m, "nBuckets", num = true)
+    } yield Buckets(cols.split(",").toSeq, sortCols, n.toInt))
 
   /** The committed schema of a stage (absent on legacy pre-schema manifests). */
   def schemaOf(stage: String): Option[StructType] =
@@ -282,9 +290,41 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
       partitionBy: Seq[String] = Nil,
       distinctOf: Option[String] = None,
       maxRecordsPerFile: Long = 0L,
-      degreeOf: Option[String] = None)(compute: => DataFrame): (DataFrame, Boolean) = {
+      degreeOf: Option[String] = None)(compute: => DataFrame): (DataFrame, Boolean) =
+    commit(stage, fingerprint, partitionBy, None, distinctOf, maxRecordsPerFile, degreeOf)(compute)
+
+  /** The one commit sequence of every stage: resume check → expected
+    * version → compute → schema-evolution check → observed write into an
+    * inflight dir → atomic rename → stats → manifest → CAS → adopt or abort.
+    * The layout (plain, or `bucketed`) changes only the write call and how
+    * committed data is read back.
+    */
+  private def commit(
+      stage: String, fingerprint: String, partitionBy: Seq[String],
+      bucketed: Option[Buckets], distinctOf: Option[String], maxRecordsPerFile: Long,
+      degreeOf: Option[String])(compute: => DataFrame): (DataFrame, Boolean) = {
+    // committed files → the stage's output. A bucketed stage reads them
+    // through its catalog table, re-pointed here — after a win, an adopt or
+    // a resume only — so the live name never points at uncommitted files
+    def readBack(path: String, schema: Option[StructType],
+        layout: Option[Buckets]): DataFrame = layout match {
+      case None => readCommitted(path, schema, partitionBy)
+      case Some(b) =>
+        val table = bucketedTableName(stage)
+        spark.sql(s"DROP TABLE IF EXISTS $table")
+        spark.sql(
+          s"""CREATE TABLE $table (${schema.getOrElse(spark.read.parquet(path).schema).toDDL})
+             |USING parquet CLUSTERED BY (${b.cols.mkString(", ")})
+             |SORTED BY (${b.sortCols.mkString(", ")}) INTO ${b.n} BUCKETS
+             |LOCATION '$path'""".stripMargin)
+        spark.table(table)
+    }
+    // a resume or an adopt reads the layout the commit recorded: the
+    // fingerprint does not cover the bucket spec
+    def readLive(): DataFrame = readBack(dataPath(stage), schemaOf(stage),
+      bucketed.flatMap(b => bucketsOf(stage, b.sortCols)))
     if (fingerprintOf(stage).contains(fingerprint)) {
-      return (readCommitted(dataPath(stage), schemaOf(stage), partitionBy), true)
+      return (readLive(), true)
     }
     val expected = versionOf(stage)
     val out = compute
@@ -301,14 +341,30 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     // stage, a fixed IO cost the scaling pair paid at every stage)
     val obs = new org.apache.spark.sql.Observation(
       s"rows-$stage-${System.nanoTime()}")
-    import org.apache.spark.sql.functions.{approx_count_distinct, count, lit}
+    import org.apache.spark.sql.functions.{approx_count_distinct, col, count, lit}
     val metricCols = count(lit(1)).as("rows") +:
       distinctOf.map(c => approx_count_distinct(c).as("distinct")).toSeq
-    val writer = out.observe(obs, metricCols.head, metricCols.tail: _*)
+    // one shuffle partition per bucket: one file per bucket, no
+    // tasks×buckets small-file spray
+    val shaped = bucketed.fold(out)(b => out.repartition(b.n, b.cols.map(col): _*))
+    val writer = shaped.observe(obs, metricCols.head, metricCols.tail: _*)
       .write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(inflight)
+    bucketed match {
+      case None =>
+        (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+          .parquet(inflight)
+      case Some(b) =>
+        // bucket metadata needs a catalog table: write through a throwaway
+        // name, then drop it (the table is external — its files stay, and
+        // keep their bucket-id names through the rename)
+        val scratch = s"${bucketedTableName(stage)}_inflight_${System.nanoTime()}"
+        try writer.option("path", inflight)
+          .bucketBy(b.n, b.cols.head, b.cols.tail: _*)
+          .sortBy(b.sortCols.head, b.sortCols.tail: _*)
+          .saveAsTable(scratch)
+        finally spark.sql(s"DROP TABLE IF EXISTS $scratch")
+    }
     val rows = obs.get("rows").asInstanceOf[Long]
     val distinctJson = distinctOf
       .map(_ => s""","distinct":${obs.get("distinct").asInstanceOf[Long]}""")
@@ -318,25 +374,24 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     try Files.move(Paths.get(inflight), Paths.get(path),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     catch {
-      case _: java.nio.file.FileAlreadyExistsException |
-           _: java.nio.file.DirectoryNotEmptyException |
-           _: java.nio.file.FileSystemException =>
-        deleteTree(Paths.get(inflight))
+      // FileAlreadyExists, DirectoryNotEmpty and the like
+      case _: java.nio.file.FileSystemException => deleteTree(Paths.get(inflight))
     }
-    val written = readCommitted(path, Some(out.schema), partitionBy)
     val degreeJson = degreeOf
-      .map(c => s""","max_degree":${maxDegree(written, c, rows)}""")
-      .getOrElse("")
+      .map(c => maxDegree(readCommitted(path, Some(out.schema), partitionBy), c, rows))
+      .map(d => s""","max_degree":$d""").getOrElse("")
+    val bucketJson = bucketed.fold("")(b =>
+      s""""bucketBy":"${b.cols.mkString(",")}","nBuckets":${b.n},""")
     val manifest =
       s"""{"stage":"$stage","fingerprint":"$fingerprint","data":"$dir","version":${expected + 1},""" +
         s""""rows":$rows$distinctJson$degreeJson,"maxRecordsPerFile":$maxRecordsPerFile,""" +
-        s""""committed_at":${System.currentTimeMillis()},"schema":"${jsonEscape(out.schema.json)}"}"""
+        s"""$bucketJson"committed_at":${System.currentTimeMillis()},"schema":"${jsonEscape(out.schema.json)}"}"""
     casCommit(stage, manifest, expected) match {
-      case None => (written, false)
+      case None => (readBack(path, Some(out.schema), bucketed), false)
       case Some(winner) if winner == fingerprint =>
         // a concurrent run of the SAME job won the version race: adopt its
         // commit (the data dir is shared and content-identical)
-        (readCommitted(dataPath(stage), schemaOf(stage), partitionBy), true)
+        (readLive(), true)
       case Some(winner) =>
         throw new ConcurrentWriteException(stage, fingerprint, winner)
     }
@@ -378,80 +433,23 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     s"graft_${stage}_${Integer.toHexString(baseDir.hashCode)}".replace('-', 'm')
 
   /** [[runStage]] for a BUCKETED stage: the output is written
-    * `bucketBy(bucketCols).sortBy(sortCols)` as a path-backed catalog table,
-    * pre-repartitioned to one shuffle partition per bucket (one file per
-    * bucket; tasks×buckets small-file spray avoided). Readers that cluster
-    * on a prefix of `bucketCols` — the conv-keyed triples walk, the
-    * co-reference groupBy — then satisfy their distribution straight off the
-    * scan: ONE exchange paid at write time replaces one per downstream
-    * consumer (VERDICT r03 next-step #8).
-    *
-    * Resume: the manifest carries the fingerprint as usual; if the session
-    * catalog lost the table (fresh session), it is re-registered over the
-    * committed files with the same bucket spec.
+    * `bucketBy(bucketCols).sortBy(sortCols)` and read back as a path-backed
+    * catalog table with that bucket spec, pre-repartitioned to one shuffle
+    * partition per bucket. Readers that cluster on a prefix of `bucketCols`
+    * — the conv-keyed triples walk, the co-reference groupBy — then satisfy
+    * their distribution straight off the scan: ONE exchange paid at write
+    * time replaces one per downstream consumer (VERDICT r03 next-step #8).
+    * Same commit sequence as [[runStage]] (inflight write, atomic rename,
+    * CAS); every read-back re-points the table at the committed dir.
     */
   def runStageBucketed(
       stage: String, fingerprint: String,
       bucketCols: Seq[String], sortCols: Seq[String], nBuckets: Int,
       distinctOf: Option[String] = None,
       maxRecordsPerFile: Long = 0L,
-      degreeOf: Option[String] = None)(compute: => DataFrame): (DataFrame, Boolean) = {
-    val table = bucketedTableName(stage)
-    def register(): Unit = if (!spark.catalog.tableExists(table)) {
-      val schema = readCommitted(dataPath(stage), schemaOf(stage), Nil).schema
-      spark.sql(
-        s"""CREATE TABLE $table (${schema.toDDL}) USING parquet
-           |CLUSTERED BY (${bucketCols.mkString(", ")})
-           |SORTED BY (${sortCols.mkString(", ")}) INTO $nBuckets BUCKETS
-           |LOCATION '${dataPath(stage)}'""".stripMargin)
-    }
-    if (fingerprintOf(stage).contains(fingerprint)) {
-      register()
-      return (spark.table(table), true)
-    }
-    val expected = versionOf(stage)
-    val out = compute
-    schemaOf(stage).foreach(prev => validateEvolution(stage, prev, out.schema))
-    val dir = versionedDataDir(fingerprint)
-    val path = dataPathFor(stage, dir)
-    val obs = new org.apache.spark.sql.Observation(
-      s"rows-$stage-${System.nanoTime()}")
-    import org.apache.spark.sql.functions.{approx_count_distinct, col, count, lit}
-    val metricCols = count(lit(1)).as("rows") +:
-      distinctOf.map(c => approx_count_distinct(c).as("distinct")).toSeq
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    out.repartition(nBuckets, bucketCols.map(col): _*)
-      .observe(obs, metricCols.head, metricCols.tail: _*)
-      .write.mode("overwrite")
-      .option("path", path)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(sortCols.head, sortCols.tail: _*)
-      .saveAsTable(table)
-    val rows = obs.get("rows").asInstanceOf[Long]
-    val distinctJson = distinctOf
-      .map(_ => s""","distinct":${obs.get("distinct").asInstanceOf[Long]}""")
-      .getOrElse("")
-    val degreeJson = degreeOf
-      .map(c => s""","max_degree":${maxDegree(spark.table(table), c, rows)}""")
-      .getOrElse("")
-    // saveAsTable writes the version dir directly (bucket metadata needs the
-    // catalog), so bucketed stages are single-writer on the DATA path; the
-    // manifest still commits through the CAS, so a racing writer is
-    // detected rather than silently last-wins
-    val manifest =
-      s"""{"stage":"$stage","fingerprint":"$fingerprint","data":"$dir","version":${expected + 1},""" +
-        s""""rows":$rows$distinctJson$degreeJson,"maxRecordsPerFile":$maxRecordsPerFile,""" +
-        s""""bucketBy":"${bucketCols.mkString(",")}","nBuckets":$nBuckets,""" +
-        s""""committed_at":${System.currentTimeMillis()},"schema":"${jsonEscape(out.schema.json)}"}"""
-    casCommit(stage, manifest, expected) match {
-      case None => (spark.table(table), false)
-      case Some(winner) if winner == fingerprint =>
-        register(); (spark.table(table), true)
-      case Some(winner) =>
-        throw new ConcurrentWriteException(stage, fingerprint, winner)
-    }
-  }
+      degreeOf: Option[String] = None)(compute: => DataFrame): (DataFrame, Boolean) =
+    commit(stage, fingerprint, Nil, Some(Buckets(bucketCols, sortCols, nBuckets)),
+      distinctOf, maxRecordsPerFile, degreeOf)(compute)
 
   // ---- run-level snapshots (second table-format property: snapshot ----
   // ---- isolation — VERDICT r04 next-step #7) ----
@@ -553,8 +551,7 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
   def tableAsOfVersion(stage: String, v: Long): DataFrame = {
     val m = readManifestVersion(stage, v).getOrElse(
       throw new IllegalArgumentException(s"stage '$stage' has no version $v"))
-    val dir = "\"data\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(m)
-      .map(_.group(1)).getOrElse("data")
+    val dir = field(m, "data").getOrElse("data")
     spark.read.parquet(dataPathFor(stage, dir))
   }
 

@@ -147,7 +147,7 @@ object Canonicalize {
     *                      absorbing millions of rows for one key is where
     *                      the two-phase reduction starts paying for itself)
     * @param driverMaxEdges size guard for the driver union-find fast path
-    *                      (the `detectAuto` pattern): a bounded
+    *                      (the `detectRouted` pattern): a bounded
     *                      `limit(N+1).collect()` probes the deduped edge
     *                      set — under the bound, one job replaces the whole
     *                      fixpoint; over it, the probe cost is capped at N

@@ -85,6 +85,34 @@ object KgPipeline {
   val MentionSortCols: Seq[String] =
     Seq("conv_id", "turn_idx", "span_start", "span_end", "id")
 
+  /** The stage hook `run` and `linkAndMaterialize`'s default share: chains
+    * each stage's fingerprint onto its parents' (a parent this hook never
+    * ran — the prebuilt dictionary — resolves to `unknownParent`), commits
+    * through `store` (bucketed for the mentions stage when `buckets > 0`)
+    * and records each stage's (name, wall ms, resumed).
+    */
+  private final class Stages(store: ManifestStore, baseFp: String,
+      unknownParent: String, buckets: Int, maxRecordsPerFile: Long)
+      extends ((String, Seq[String], Seq[String]) => (=> DataFrame) => DataFrame) {
+    val chain = scala.collection.mutable.Map.empty[String, String]
+    val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Boolean)]
+    def apply(stage: String, parents: Seq[String],
+        partitionBy: Seq[String]): (=> DataFrame) => DataFrame = f => {
+      val fp = stageFp(baseFp, stage, parents.map(p => p -> chain.getOrElse(p, unknownParent)))
+      chain(stage) = fp
+      val s = System.currentTimeMillis()
+      val (df, resumed) =
+        if (stage == "mentions" && buckets > 0)
+          store.runStageBucketed(stage, fp, MentionBucketCols, MentionSortCols,
+            buckets, StageDistinct.get(stage), maxRecordsPerFile,
+            StageDegree.get(stage))(f)
+        else store.runStage(stage, fp, partitionBy,
+          StageDistinct.get(stage), maxRecordsPerFile, StageDegree.get(stage))(f)
+      timings += ((stage, System.currentTimeMillis() - s, resumed))
+      df
+    }
+  }
+
   /** Rendered entity+property dictionary for the linker, with popularity
     * weights carried from the dumps.
     */
@@ -163,7 +191,7 @@ object KgPipeline {
     *                      None → executor-local checkpoints
     * @param dictBroadcastMaxRows dictionary rows above which mention detection
     *                             switches from the broadcast trie scan to the
-    *                             shuffle join (see [[Mentions.detectAuto]])
+    *                             shuffle join (see [[Mentions.detectRouted]])
     * @param mentionBuckets conv-bucketed mentions stage: negative (default)
     *                       = AUTO (defaultParallelism buckets — the
     *                       production shape); 0 opts out (unbucketed);
@@ -187,39 +215,23 @@ object KgPipeline {
     val store = new ManifestStore(spark, outDir)
     val buckets = resolveBuckets(spark, mentionBuckets)
     val t0 = System.currentTimeMillis()
-    val metricsRows = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Boolean)]
     // fingerprint chain: stage fp = base config + input version + parent fps
-    val baseFp = s"cfg=$cfg;saltN=$saltN;iv=$inputVersion"
-    val chain = scala.collection.mutable.Map.empty[String, String]
-    def timed(stage: String, parents: Seq[String],
-        partitionBy: Seq[String] = Nil)(f: => DataFrame): DataFrame = {
-      val fp = stageFp(baseFp, stage, parents.map(p => p -> chain(p)))
-      chain(stage) = fp
-      val s = System.currentTimeMillis()
-      val (df, resumed) =
-        if (stage == "mentions" && buckets > 0)
-          store.runStageBucketed(stage, fp, MentionBucketCols, MentionSortCols,
-            buckets, StageDistinct.get(stage), maxRecordsPerFile,
-            StageDegree.get(stage))(f)
-        else store.runStage(stage, fp, partitionBy,
-          StageDistinct.get(stage), maxRecordsPerFile, StageDegree.get(stage))(f)
-      metricsRows += ((stage, store.rowCountOf(stage).getOrElse(-1L),
-        System.currentTimeMillis() - s, resumed))
-      df
-    }
+    // (every parent of a `run` stage ran before it)
+    val stages = new Stages(store, s"cfg=$cfg;saltN=$saltN;iv=$inputVersion", "",
+      buckets, maxRecordsPerFile)
 
     // persistInput forced: the pipeline reads the dump beyond the cascade
     // (dictionary weights join + nodes stage), and its input is often a
     // synthesized/derived plan, not a pruned columnar scan
     val (entityIndexRaw, entityCaches) =
       EntityIndexBuilder.buildTracked(entities, cfg, persistInput = true)
-    val entityIndex = timed("entity_index", Nil) { entityIndexRaw }
-    val propertyIndex = timed("property_index", Nil) {
+    val entityIndex = stages("entity_index", Nil, Nil) { entityIndexRaw }
+    val propertyIndex = stages("property_index", Nil, Nil) {
       PropertyIndexBuilder.build(properties)
     }
     val dict = dictionary(entityIndex, entities, propertyIndex, properties)
     // safe UPPER bound on dictionary rows from the committed stage manifests
-    // (renderSurfaces only dedups) — saves detectAuto a counting job over the
+    // (renderSurfaces only dedups) — saves detectRouted a counting job over the
     // dictionary plan (VERDICT r02 #5 / ADVICE r02)
     val dictRowsHint = for {
       e <- store.rowCountOf("entity_index")
@@ -228,9 +240,8 @@ object KgPipeline {
 
     val r = linkAndMaterialize(spark, transcripts, entities, redirects, dict,
       entityIndex, propertyIndex, outDir, saltN, inputVersion, checkpointDir,
-      dictBroadcastMaxRows, dictRowsHint, s"ei=${chain("entity_index")};pi=${chain("property_index")}",
-      (st, pr, pb) => f => timed(st, pr, pb)(f),
-      maxRecordsPerFile, buckets)
+      dictBroadcastMaxRows, dictRowsHint, s"ei=${stages.chain("entity_index")};pi=${stages.chain("property_index")}",
+      stages, maxRecordsPerFile, buckets)
     // release the builder's caches only now (r6): the INPUT dump cache is
     // among them, and the dictionary weights join above plus the nodes
     // stage inside linkAndMaterialize each read the dump again — releasing
@@ -239,8 +250,9 @@ object KgPipeline {
     entityCaches.foreach(_.unpersist(blocking = false))
 
     import spark.implicits._
-    val metrics = metricsRows.toSeq
-      .map { case (st, rows, ms, res) => (st, rows, ms, res, System.currentTimeMillis() - t0) }
+    val metrics = stages.timings.toSeq
+      .map { case (st, ms, res) =>
+        (st, store.rowCountOf(st).getOrElse(-1L), ms, res, System.currentTimeMillis() - t0) }
       .toDF("stage", "rows_out", "wall_ms", "resumed", "total_ms")
     // lineage/metrics land next to the data (append: one batch per run)
     metrics.coalesce(1).write.mode("append").parquet(s"$outDir/_metrics")
@@ -283,26 +295,13 @@ object KgPipeline {
       mentionBuckets: Int = -1): Result = {
 
     val buckets = resolveBuckets(spark, mentionBuckets)
+    val mStore = new ManifestStore(spark, outDir)
+    // unknown parents (the prebuilt dictionary) resolve to dictVersion, so
+    // the dictionary's identity enters the fingerprint chain
     val timed: (String, Seq[String], Seq[String]) => (=> DataFrame) => DataFrame =
       if (timedOpt != null) timedOpt
-      else {
-        val store = new ManifestStore(spark, outDir)
-        val chain = scala.collection.mutable.Map.empty[String, String]
-        (stage, parents, partitionBy) => f => {
-          // unknown parents (the prebuilt dictionary) resolve to dictVersion,
-          // so the dictionary's identity enters the fingerprint chain
-          val fp = stageFp(s"iv=$inputVersion;saltN=$saltN", stage,
-            parents.map(p => p -> chain.getOrElse(p, dictVersion)))
-          chain(stage) = fp
-          if (stage == "mentions" && buckets > 0)
-            store.runStageBucketed(stage, fp, MentionBucketCols, MentionSortCols,
-              buckets, StageDistinct.get(stage), maxRecordsPerFile,
-              StageDegree.get(stage))(f)._1
-          else store.runStage(stage, fp, partitionBy,
-            StageDistinct.get(stage), maxRecordsPerFile,
-            StageDegree.get(stage))(f)._1
-        }
-      }
+      else new Stages(mStore, s"iv=$inputVersion;saltN=$saltN", dictVersion, buckets,
+        maxRecordsPerFile)
 
     val mentionCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val mentions = timed("mentions", Seq("entity_index", "property_index"), Nil) {
@@ -321,7 +320,6 @@ object KgPipeline {
     // column stat in its manifest — a mean cannot bound the head degree
     // (ADVICE r04). A resumed pre-hint manifest yields None → the
     // conservative salted shape (unless the caller forced saltN).
-    val mStore = new ManifestStore(spark, outDir)
     val maxIdDegree = mStore.maxDegreeOf("mentions")
     val scores = timed("link_scores", Seq("mentions"), Nil) {
       SaltedAgg.linkScores(mentions, saltN, maxIdDegree)

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *    by `conv_id` between the two, so its one exchange carries ints, not
   *    dictionary strings ([[detectTrie]]).
   *
-  * [[detectAuto]] picks between the trie scan and the shuffle join by the
+  * [[detectRouted]] picks between the trie scan and the shuffle join by the
   * dictionary's size — an unconditional broadcast/driver-collect of a 10^8-row
   * dictionary would be a multi-GB driver build (VERDICT r01 #4).
   *
@@ -266,10 +266,12 @@ object Mentions {
   private val Whitespace = java.util.regex.Pattern.compile("\\s+")
 
   /** One turn's trie scan + dominance filter: (span_start, span_end,
-    * payload index) of the surviving matches.
+    * payload index) of the surviving matches. A NULL text has none, as in
+    * [[detect]].
     */
   private[graft] def scanText(t: SurfaceTrie, text: String,
       maxN: Int): Iterator[(Int, Int, Int)] = {
+    if (text == null) return Iterator.empty
     val toks = Whitespace.split(text)
     // (start, end, payload)
     val found = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
@@ -304,7 +306,7 @@ object Mentions {
     * then a narrow decode projection ([[detectTrie]] with no exchange).
     *
     * The dictionary is collected to the driver and broadcast — use
-    * [[detectAuto]] when the dictionary may exceed broadcast scale.
+    * [[detectRouted]] when the dictionary may exceed broadcast scale.
     */
   def detectFast(turns: DataFrame, dictionary: DataFrame, maxN: Int = 4): DataFrame =
     detectTrie(turns, dictionary, maxN)
@@ -391,38 +393,24 @@ object Mentions {
   /** Size-guarded detection: trie scan while the dictionary fits broadcast
     * (row-count proxy; ~100 bytes/entry ⇒ the 20M default is a ~2 GB
     * broadcast), shuffle join beyond it. Both paths produce identical rows.
-    *
-    * Prefer [[detectAutoTracked]] with a `knownDictRows` hint: the pipeline
-    * already knows the index stage row counts from their manifests, so the
-    * path decision costs no extra job (VERDICT r02 #3 / ADVICE r02).
-    */
-  def detectAuto(turns: DataFrame, dictionary: DataFrame, maxN: Int = 4,
-      broadcastMaxRows: Long = 20000000L): DataFrame =
-    detectAutoTracked(turns, dictionary, maxN, broadcastMaxRows)._1
-
-  /** [[detectAuto]] plus the persisted handles to release after the result
-    * is materialized.
+    * Returns the persisted handles to release after the result is
+    * materialized.
     *
     * @param knownDictRows caller-known dictionary row count (or a safe UPPER
     *                      bound, e.g. the sum of the committed index stage
     *                      manifests' row counts — an overestimate can only
-    *                      flip to the always-safe shuffle join). None →
-    *                      count once over a persisted dictionary so the
-    *                      (often expensive) dictionary plan is not evaluated
-    *                      twice by count + collect.
+    *                      flip to the always-safe shuffle join): the path
+    *                      decision then costs no extra job (VERDICT r02 #3 /
+    *                      ADVICE r02). None → count once over a persisted
+    *                      dictionary so the (often expensive) dictionary plan
+    *                      is not evaluated twice by count + collect.
+    * @param buckets for a conv-bucketed stage write: `buckets > 0` clusters
+    *                the trie path's ordinal rows by `conv_id` before decoding
+    *                (see [[detectTrie]]); the shuffle-join path keeps its
+    *                shape and leaves the clustering to the write.
     */
-  def detectAutoTracked(turns: DataFrame, dictionary: DataFrame, maxN: Int = 4,
-      broadcastMaxRows: Long = 20000000L,
-      knownDictRows: Option[Long] = None): (DataFrame, Seq[DataFrame]) =
-    detectRouted(turns, dictionary, maxN, broadcastMaxRows, knownDictRows)
-
-  /** [[detectAutoTracked]] for a conv-bucketed stage write: `buckets > 0`
-    * clusters the trie path's ordinal rows by `conv_id` before decoding
-    * (see [[detectTrie]]); the shuffle-join path keeps its shape and leaves
-    * the clustering to the write.
-    */
-  private[graft] def detectRouted(turns: DataFrame, dictionary: DataFrame,
-      maxN: Int, broadcastMaxRows: Long, knownDictRows: Option[Long],
+  def detectRouted(turns: DataFrame, dictionary: DataFrame, maxN: Int = 4,
+      broadcastMaxRows: Long = 20000000L, knownDictRows: Option[Long] = None,
       buckets: Int = 0): (DataFrame, Seq[DataFrame]) =
     knownDictRows match {
       case Some(nr) =>

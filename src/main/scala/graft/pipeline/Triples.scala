@@ -63,7 +63,7 @@ object Triples {
   type MentionRow = (String, Int, Int, Int, String, Boolean, Double)
 
   /** One conversation's turn walk — the per-group state machine both
-    * [[extractFast]] (batch) and the streaming stateful extractor share.
+    * [[extractBucketed]] (batch) and the streaming stateful extractor share.
     * `seed` is the conversation-focus entity carried in from EARLIER turns
     * (an earlier micro-batch on the streaming path; None in batch, where the
     * group holds the whole conversation).
@@ -113,35 +113,17 @@ object Triples {
     ms.sortBy(m => (m._2, m._3, m._4, m._5))
 
   /** Single-pass variant of [[extract]] — identical semantics
-    * (equivalence-tested), one shuffle + one sort instead of two opposite-
-    * order window sorts: conversations group on one key, each group is a
-    * bounded turn sequence walked once. The per-group state (conversation
-    * focus entity) is exactly what the two growing window frames encode.
-    */
-  def extractFast(mentions: DataFrame): DataFrame = {
-    val spark = mentions.sparkSession
-    import spark.implicits._
-    mentions
-      .select(col("conv_id"), col("turn_idx").cast("int"),
-        col("span_start").cast("int"), col("span_end").cast("int"),
-        col("id"), col("is_prop"), col("score").cast("double"))
-      .as[MentionRow]
-      .groupByKey(_._1)
-      .flatMapGroups { (conv, it) =>
-        walkTurns(conv, sortMentions(it.toArray), None)._1.iterator
-      }
-      .toDF("subj", "pred", "obj", "conv_id", "turn_idx", "score")
-  }
-
-  /** [[extractFast]] in RELATIONAL grouping form — identical semantics
-    * (equivalence-tested), but the group key is the `conv_id` COLUMN rather
-    * than a typed lambda, so the walk's required distribution is
-    * `ClusteredDistribution(conv_id)` and Catalyst can satisfy it from the
+    * (equivalence-tested): conversations group on the `conv_id` COLUMN, and
+    * each group is a bounded turn sequence walked once; the per-group state
+    * (conversation focus entity) is exactly what the two growing window
+    * frames encode. The walk's required distribution is
+    * `ClusteredDistribution(conv_id)`, which Catalyst can satisfy from the
     * scan: over a conv-bucketed mentions table
     * ([[graft.io.ManifestStore.runStageBucketed]]) the whole stage plans
     * with ZERO Exchange (plan-asserted in PlanSpec) — the write-side bucket
     * repartition already co-located every conversation. On unbucketed input
-    * it degrades gracefully to the same one-shuffle shape as extractFast.
+    * it costs one shuffle + one sort instead of two opposite-order window
+    * sorts.
     */
   def extractBucketed(mentions: DataFrame): DataFrame = {
     val spark = mentions.sparkSession

@@ -55,7 +55,7 @@ object IncrementalKg {
       checkpointDir: String): StreamingQuery = {
     val withWm = transcripts.withWatermark("ts", "10 minutes")
     // per-batch: the same batch operators as the pipeline — mention scan is
-    // stateless per turn, triple extraction windows stay WITHIN a batch
+    // stateless per turn, the triple walk groups conversations WITHIN a batch
     // (conversations are assumed batch-aligned by the ingest partitioner;
     // for conversations that SPLIT across batches use
     // [[statefulTriplesStream]], which carries the focus entity in a
@@ -66,7 +66,7 @@ object IncrementalKg {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val mentions = graft.pipeline.Mentions.detectFast(batch.toDF(), dictionary)
-        graft.pipeline.Triples.extract(mentions)
+        graft.pipeline.Triples.extractBucketed(mentions)
           .dropDuplicates("conv_id", "turn_idx", "subj", "pred", "obj")
           // idempotent: replays of batch N overwrite batch N's own directory
           .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")

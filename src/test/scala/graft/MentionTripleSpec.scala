@@ -62,7 +62,7 @@ class MentionTripleSpec extends AnyFunSuite {
       ("Q1490", "P47", "Q1490", "c1", 2)))
   }
 
-  test("extractFast (single pass) == extract (windows) on synth mentions") {
+  test("extractBucketed (single-pass walk) == extract (windows) on synth mentions") {
     val ents = graft.synth.Synth.entityDump(spark, 200)
     val props = graft.synth.Synth.propertyDump(spark, 20)
     val dict = graft.pipeline.KgPipeline.dictionary(
@@ -74,7 +74,7 @@ class MentionTripleSpec extends AnyFunSuite {
       .selectExpr("subj", "pred", "obj", "conv_id", "turn_idx", "round(score, 6) AS s")
       .collect().map(_.toString).sorted.toSeq
     val a = c(Triples.extract(mentions))
-    val b = c(Triples.extractFast(mentions))
+    val b = c(Triples.extractBucketed(mentions))
     assert(a == b)
     assert(a.nonEmpty)
   }
@@ -160,11 +160,32 @@ class MentionTripleSpec extends AnyFunSuite {
         "kind", "is_prop", "score")
         .collect().map(_.toString).toSet
     // force the guard BOTH ways: threshold 0 → shuffle join, huge → trie scan
-    val viaShuffle = collectM(Mentions.detectAuto(turns, dict, broadcastMaxRows = 0L))
-    val viaTrie = collectM(Mentions.detectAuto(turns, dict, broadcastMaxRows = Long.MaxValue))
+    val (shuffled, caches) = Mentions.detectRouted(turns, dict, broadcastMaxRows = 0L)
+    val viaShuffle = collectM(shuffled)
+    caches.foreach(_.unpersist(blocking = false))
+    val viaTrie = collectM(Mentions.detectRouted(turns, dict, broadcastMaxRows = Long.MaxValue)._1)
     assert(viaShuffle == viaTrie,
       s"only-shuffle=${(viaShuffle -- viaTrie).take(5)} only-trie=${(viaTrie -- viaShuffle).take(5)}")
     assert(viaTrie.nonEmpty)
+  }
+
+  test("NULL, empty and whitespace-only text: no matches on every detection path") {
+    val d = dict(
+      ("paris", "Q90", false, 50L),
+      ("borders", "P47", true, 20L),
+      ("berlin", "Q64", false, 40L))
+    val t = turns(
+      ("c1", 0, null), ("c1", 1, ""), ("c1", 2, "   "), ("c1", 3, "\t \n"),
+      ("c2", 0, "paris borders berlin"))
+    def spans(df: org.apache.spark.sql.DataFrame) =
+      df.select("conv_id", "turn_idx", "span_start", "span_end", "id")
+        .collect().map(_.toString).toSet
+    val reference = spans(Mentions.detect(t, d))
+    assert(reference == Set("[c2,0,0,1,Q90]", "[c2,0,1,2,P47]", "[c2,0,2,3,Q64]"))
+    assert(spans(Mentions.detect(t, d, broadcastDict = false)) == reference)
+    assert(spans(Mentions.detectFast(t, d)) == reference)
+    assert(spans(Mentions.detectRouted(t, d, knownDictRows = Some(3L), buckets = 4)._1) ==
+      reference)
   }
 
   test("detectTracked leaves no cached blocks after materialize + release") {
@@ -182,14 +203,14 @@ class MentionTripleSpec extends AnyFunSuite {
       s"detect-and-materialize cycle leaked cached RDDs: ${after -- before}")
   }
 
-  test("detectAutoTracked with a row-count hint runs no dictionary count job") {
+  test("detectRouted with a row-count hint runs no dictionary count job") {
     val d = dict(("paris", "Q90", false, 50L))
     val t = turns(("c1", 0, "paris is nice"))
     // hint below the broadcast bound → trie path, zero extra jobs over dict
-    val (fast, c1) = Mentions.detectAutoTracked(t, d, knownDictRows = Some(1L))
+    val (fast, c1) = Mentions.detectRouted(t, d, knownDictRows = Some(1L))
     assert(c1.isEmpty && fast.count() == 1)
     // hint above the bound → shuffle join, caches returned for release
-    val (slow, c2) = Mentions.detectAutoTracked(t, d,
+    val (slow, c2) = Mentions.detectRouted(t, d,
       broadcastMaxRows = 0L, knownDictRows = Some(1L))
     assert(slow.count() == 1)
     c2.foreach(_.unpersist(blocking = false))
@@ -248,7 +269,7 @@ class MentionTripleSpec extends AnyFunSuite {
       graft.index.EntityIndexBuilder.build(rich), rich,
       graft.index.PropertyIndexBuilder.build(props), props)
     val turns = graft.synth.Synth.transcripts(spark, 30, 6, n, 20, richLabels = true)
-    val triples = Triples.extractFast(Mentions.detectFast(turns, dict))
+    val triples = Triples.extractBucketed(Mentions.detectFast(turns, dict))
     assert(triples.count() > 0)
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -491,45 +493,101 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(mentionsManifest() != m1, "new dictionary must invalidate mentions")
   }
 
-  test("concurrent writers, same job: the loser adopts the winner's commit") {
-    import spark.implicits._
-    val out = Files.createTempDirectory("graft-ccw-same").toString
-    val store = new graft.io.ManifestStore(spark, out)
-    // deterministic interleave: writer B's compute runs writer A's ENTIRE
-    // runStage as a side effect, so A commits between B's version read and
-    // B's commit — the exact window optimistic concurrency must handle
-    var aResumed: Option[Boolean] = None
-    val (bDf, bResumed) = store.runStage("st", "fp-x") {
-      val (_, r) = store.runStage("st", "fp-x")(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
-      aResumed = Some(r)
-      Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+  /** The two stage layouts the store commits, by test-name suffix: plain,
+    * and bucketed on `k`. Both run one commit sequence.
+    */
+  val layouts: Seq[(String, graft.io.ManifestStore => (String, String) =>
+      (=> org.apache.spark.sql.DataFrame) => (org.apache.spark.sql.DataFrame, Boolean))] = Seq(
+    "" -> (store => (st, fp) => f => store.runStage(st, fp)(f)),
+    " (bucketed)" -> (store => (st, fp) => f =>
+      store.runStageBucketed(st, fp, Seq("k"), Seq("k"), nBuckets = 2)(f)))
+
+  /** Names of the data files in a stage's committed dir. */
+  def committedFiles(out: String, store: graft.io.ManifestStore, st: String): Set[String] =
+    scala.util.Using.resource(Files.list(Paths.get(out, st, store.dataDirOf(st).get)))(
+      _.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet)
+
+  /** Catalog tables a bucketed write leaves behind under a throwaway name. */
+  def inflightTables(): Seq[String] =
+    spark.catalog.listTables().collect().map(_.name).filter(_.contains("inflight")).toSeq
+
+  for ((suffix, layout) <- layouts) {
+    test(s"concurrent writers, same job: the loser adopts the winner's commit$suffix") {
+      import spark.implicits._
+      val out = Files.createTempDirectory("graft-ccw-same").toString
+      val store = new graft.io.ManifestStore(spark, out)
+      val commit = layout(store)
+      // deterministic interleave: writer B's compute runs writer A's ENTIRE
+      // commit as a side effect, so A commits between B's version read and
+      // B's commit — the exact window optimistic concurrency must handle
+      var aResumed: Option[Boolean] = None
+      var aFiles = Set.empty[String]
+      val (bDf, bResumed) = commit("st", "fp-x") {
+        val (_, r) = commit("st", "fp-x")(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+        aResumed = Some(r)
+        aFiles = committedFiles(out, store, "st")
+        Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+      }
+      assert(aResumed.contains(false), "inner writer A must commit fresh")
+      assert(bResumed, "B lost the version race on its own fingerprint -> adopt")
+      assert(bDf.collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+      assert(store.versionOf("st") == 1L, "one committed version, not two")
+      assert(store.fingerprintOf("st").contains("fp-x"))
+      // B published nothing over A's commit: the same files, by name
+      assert(aFiles.nonEmpty && committedFiles(out, store, "st") == aFiles,
+        s"winner's files rewritten: $aFiles -> ${committedFiles(out, store, "st")}")
+      assert(inflightTables().isEmpty, s"throwaway tables left: ${inflightTables()}")
     }
-    assert(aResumed.contains(false), "inner writer A must commit fresh")
-    assert(bResumed, "B lost the version race on its own fingerprint -> adopt")
-    assert(bDf.collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-    assert(store.versionOf("st") == 1L, "one committed version, not two")
-    assert(store.fingerprintOf("st").contains("fp-x"))
+
+    test(s"concurrent writers, different jobs: the loser aborts with a conflict$suffix") {
+      import spark.implicits._
+      val out = Files.createTempDirectory("graft-ccw-diff").toString
+      val store = new graft.io.ManifestStore(spark, out)
+      val commit = layout(store)
+      val ex = intercept[graft.io.ConcurrentWriteException] {
+        commit("st", "fp-b") {
+          commit("st", "fp-a")(Seq((1L, "a")).toDF("k", "v"))
+          Seq((9L, "z")).toDF("k", "v")
+        }
+      }
+      assert(ex.getMessage.contains("fp-a") && ex.getMessage.contains("fp-b"))
+      // the winner's commit is intact, and a resume of it reads its rows
+      assert(store.fingerprintOf("st").contains("fp-a"))
+      assert(store.versionOf("st") == 1L)
+      val (resumed, wasResumed) = commit("st", "fp-a")(fail("must resume"))
+      assert(wasResumed)
+      assert(resumed.collect().map(r => (r.getLong(0), r.getString(1))).toSet == Set((1L, "a")))
+      assert(inflightTables().isEmpty, s"throwaway tables left: ${inflightTables()}")
+      // the loser's orphan dir is GC-able
+      store.commitSnapshot()
+      val (_, dirsGone) = store.gcSnapshots(keepSnapshots = 1)
+      assert(dirsGone == 1, s"loser's orphan version dir collected: $dirsGone")
+      assert(spark.read.parquet(s"$out/st/${store.dataDirOf("st").get}")
+        .collect().map(_.getLong(0)).toSet == Set(1L))
+    }
   }
 
-  test("concurrent writers, different jobs: the loser aborts with a conflict") {
+  test("resume reads the bucket layout the commit recorded, not the caller's") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft-ccw-diff").toString
+    val out = Files.createTempDirectory("graft-layout-resume").toString
     val store = new graft.io.ManifestStore(spark, out)
-    val ex = intercept[graft.io.ConcurrentWriteException] {
-      store.runStage("st", "fp-b") {
-        store.runStage("st", "fp-a")(Seq((1L, "a")).toDF("k", "v"))
-        Seq((9L, "z")).toDF("k", "v")
-      }
-    }
-    assert(ex.getMessage.contains("fp-a") && ex.getMessage.contains("fp-b"))
-    // the winner's commit is intact; the loser's orphan dir is GC-able
-    assert(store.fingerprintOf("st").contains("fp-a"))
-    assert(store.versionOf("st") == 1L)
-    store.commitSnapshot()
-    val (_, dirsGone) = store.gcSnapshots(keepSnapshots = 1)
-    assert(dirsGone == 1, s"loser's orphan version dir collected: $dirsGone")
-    assert(spark.read.parquet(s"$out/st/${store.dataDirOf("st").get}")
-      .collect().map(_.getLong(0)).toSet == Set(1L))
+    val df = (0 until 50).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+    def numBuckets(st: String): String =
+      spark.sql(s"DESCRIBE TABLE EXTENDED ${store.bucketedTableName(st)}")
+        .filter(col("col_name") === "Num Buckets").collect().map(_.getString(1)).mkString
+    // committed plain (the fingerprint does not cover the layout), resumed by
+    // a bucketed caller: read plain, not as a bucketed table over files
+    // without bucket ids
+    store.runStage("plain", "fp")(df)
+    val (p, pResumed) = store.runStageBucketed("plain", "fp", Seq("k"), Seq("k"), 4)(
+      fail("must resume"))
+    assert(pResumed && p.count() == 50L)
+    // committed with 4 buckets, resumed by a 3-bucket caller: still 4
+    store.runStageBucketed("bk", "fp", Seq("k"), Seq("k"), 4)(df)
+    val (b, bResumed) = store.runStageBucketed("bk", "fp", Seq("k"), Seq("k"), 3)(
+      fail("must resume"))
+    assert(bResumed && numBuckets("bk") == "4")
+    assert(b.groupBy("k").count().filter(col("count") =!= 1).count() == 0L && b.count() == 50L)
   }
 
   test("schema evolution: additive commit ok, old snapshots read under the live schema") {

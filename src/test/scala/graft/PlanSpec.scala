@@ -95,11 +95,11 @@ class PlanSpec extends AnyFunSuite {
     val walkPlan = executedPlan(walked).split("== Initial Plan ==")(0)
     assert(!walkPlan.contains("Exchange"),
       s"bucket-aligned walk must not shuffle:\n$walkPlan")
-    // and it matches the one-shuffle walk on the same rows
+    // and it matches the window reference on the same rows
     def c(df: org.apache.spark.sql.DataFrame) = df
       .selectExpr("subj", "pred", "obj", "conv_id", "turn_idx", "round(score,6) AS s")
       .collect().map(_.toString).sorted.toSeq
-    assert(c(walked) == c(graft.pipeline.Triples.extractFast(mentions)))
+    assert(c(walked) == c(graft.pipeline.Triples.extract(mentions)))
     assert(walked.count() > 0)
 
     // 2) the co-reference groupBy (conv_id, base): clustering on a superset
