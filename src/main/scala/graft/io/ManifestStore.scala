@@ -1,7 +1,7 @@
 package graft.io
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Using
@@ -118,9 +118,9 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes(StandardCharsets.UTF_8)).map(b => f"$b%02x").mkString
 
-  /** Manifest field `name`: a string value, or with `num` a bare integer. */
+  /** Manifest field `name`: a string value (JSON-escaped), or with `num` an integer. */
   private def field(manifest: String, name: String, num: Boolean = false): Option[String] =
-    (s"\"$name\"\\s*:\\s*" + (if (num) "(\\d+)" else "\"([^\"]*)\"")).r
+    (s"\"$name\"\\s*:\\s*" + (if (num) "(\\d+)" else "\"((?:[^\"\\\\]|\\\\.)*)\"")).r
       .findFirstMatchIn(manifest).map(_.group(1))
 
   /** The committed data dir of a stage per its manifest (legacy = `data`). */
@@ -152,11 +152,14 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
   def maxDegreeOf(stage: String): Option[Long] =
     readManifest(stage).flatMap(field(_, "max_degree", num = true)).map(_.toLong)
 
-  /** The bucket spec the stage's manifest recorded (None: written plain). */
-  private def bucketsOf(stage: String, sortCols: Seq[String]): Option[Buckets] =
+  /** The bucket spec the stage's manifest recorded (None: written plain;
+    * no sort columns on a manifest that predates `sortBy`).
+    */
+  private def bucketsOf(stage: String): Option[Buckets] =
     readManifest(stage).flatMap(m => for {
       cols <- field(m, "bucketBy"); n <- field(m, "nBuckets", num = true)
-    } yield Buckets(cols.split(",").toSeq, sortCols, n.toInt))
+    } yield Buckets(cols.split(",").toSeq,
+      field(m, "sortBy").toSeq.flatMap(_.split(",")).filter(_.nonEmpty), n.toInt))
 
   /** The committed schema of a stage (absent on legacy pre-schema manifests). */
   def schemaOf(stage: String): Option[StructType] =
@@ -164,9 +167,7 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
 
   /** The schema committed at stage version `v`. */
   def schemaOfVersion(stage: String, v: Long): Option[StructType] =
-    readManifestVersion(stage, v)
-      .flatMap("\"schema\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
-        .findFirstMatchIn(_).map(_.group(1)))
+    readManifestVersion(stage, v).flatMap(field(_, "schema"))
       .map(s => DataType.fromJson(jsonUnescape(s)).asInstanceOf[StructType])
 
   private def jsonEscape(s: String): String = s.flatMap {
@@ -230,17 +231,20 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     try {
       Files.createLink(target, tmp)
       Files.delete(tmp)
-      val mirrorTmp = manifestPath(stage).resolveSibling("_MANIFEST.json.tmp")
-      Files.write(mirrorTmp, manifestJson.getBytes(StandardCharsets.UTF_8))
-      Files.move(mirrorTmp, manifestPath(stage),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      writeAtomic(manifestPath(stage), manifestJson)
       None
     } catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         Files.deleteIfExists(tmp)
         Some(fingerprintOf(stage).getOrElse(""))
     }
+  }
+
+  /** Write `body` to `target` through a sibling temp file and one atomic rename. */
+  private def writeAtomic(target: Path, body: String): Unit = {
+    val tmp = target.resolveSibling(s"${target.getFileName}.tmp")
+    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Max rows-per-key of `c` over the written stage — an Iceberg-style
@@ -315,14 +319,14 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
         spark.sql(
           s"""CREATE TABLE $table (${schema.getOrElse(spark.read.parquet(path).schema).toDDL})
              |USING parquet CLUSTERED BY (${b.cols.mkString(", ")})
-             |SORTED BY (${b.sortCols.mkString(", ")}) INTO ${b.n} BUCKETS
-             |LOCATION '$path'""".stripMargin)
+             |${if (b.sortCols.isEmpty) "" else b.sortCols.mkString("SORTED BY (", ", ", ")")}
+             |INTO ${b.n} BUCKETS LOCATION '$path'""".stripMargin)
         spark.table(table)
     }
     // a resume or an adopt reads the layout the commit recorded: the
     // fingerprint does not cover the bucket spec
-    def readLive(): DataFrame = readBack(dataPath(stage), schemaOf(stage),
-      bucketed.flatMap(b => bucketsOf(stage, b.sortCols)))
+    def readLive(): DataFrame =
+      readBack(dataPath(stage), schemaOf(stage), bucketed.flatMap(_ => bucketsOf(stage)))
     if (fingerprintOf(stage).contains(fingerprint)) {
       return (readLive(), true)
     }
@@ -330,7 +334,11 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     val out = compute
     // fail BEFORE the write if this commit would break pinned history
     schemaOf(stage).foreach(prev => validateEvolution(stage, prev, out.schema))
-    val dir = versionedDataDir(fingerprint)
+    // a bucketed dir's name also digests the bucket spec the manifest records,
+    // so a reused dir (stale, or a concurrent same-job commit's) holds it
+    val bucketJson = bucketed.fold("")(b =>
+      s""""bucketBy":"${b.cols.mkString(",")}","sortBy":"${b.sortCols.mkString(",")}","nBuckets":${b.n},""")
+    val dir = versionedDataDir(fingerprint + bucketJson)
     val path = dataPathFor(stage, dir)
     // data lands in an inflight dir first, then one atomic rename publishes
     // it — a concurrent same-fingerprint writer never half-overwrites the
@@ -371,8 +379,7 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
       .getOrElse("")
     // publish the version dir (a same-fingerprint winner racing us may have
     // published it already — identical content by contract, keep theirs)
-    try Files.move(Paths.get(inflight), Paths.get(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    try Files.move(Paths.get(inflight), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
     catch {
       // FileAlreadyExists, DirectoryNotEmpty and the like
       case _: java.nio.file.FileSystemException => deleteTree(Paths.get(inflight))
@@ -380,8 +387,6 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     val degreeJson = degreeOf
       .map(c => maxDegree(readCommitted(path, Some(out.schema), partitionBy), c, rows))
       .map(d => s""","max_degree":$d""").getOrElse("")
-    val bucketJson = bucketed.fold("")(b =>
-      s""""bucketBy":"${b.cols.mkString(",")}","nBuckets":${b.n},""")
     val manifest =
       s"""{"stage":"$stage","fingerprint":"$fingerprint","data":"$dir","version":${expected + 1},""" +
         s""""rows":$rows$distinctJson$degreeJson,"maxRecordsPerFile":$maxRecordsPerFile,""" +
@@ -485,10 +490,7 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     val json =
       s"""{"id":"$id","created_at":${System.currentTimeMillis()},"stages":{$body}}"""
     Files.createDirectories(snapshotsDir)
-    val tmp = snapshotsDir.resolve(s"$id.json.tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, snapshotsDir.resolve(s"$id.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    writeAtomic(snapshotsDir.resolve(s"$id.json"), json)
     id
   }
 
@@ -551,8 +553,7 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
   def tableAsOfVersion(stage: String, v: Long): DataFrame = {
     val m = readManifestVersion(stage, v).getOrElse(
       throw new IllegalArgumentException(s"stage '$stage' has no version $v"))
-    val dir = field(m, "data").getOrElse("data")
-    spark.read.parquet(dataPathFor(stage, dir))
+    spark.read.parquet(dataPathFor(stage, field(m, "data").getOrElse("data")))
   }
 
   /** Garbage-collect retired stage versions: keep the newest

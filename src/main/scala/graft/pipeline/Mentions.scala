@@ -404,30 +404,30 @@ object Mentions {
     *                      ADVICE r02). None → count once over a persisted
     *                      dictionary so the (often expensive) dictionary plan
     *                      is not evaluated twice by count + collect.
-    * @param buckets for a conv-bucketed stage write: `buckets > 0` clusters
-    *                the trie path's ordinal rows by `conv_id` before decoding
-    *                (see [[detectTrie]]); the shuffle-join path keeps its
-    *                shape and leaves the clustering to the write.
     */
   def detectRouted(turns: DataFrame, dictionary: DataFrame, maxN: Int = 4,
-      broadcastMaxRows: Long = 20000000L, knownDictRows: Option[Long] = None,
-      buckets: Int = 0): (DataFrame, Seq[DataFrame]) =
-    knownDictRows match {
-      case Some(nr) =>
-        if (nr <= broadcastMaxRows)
-          (detectTrie(turns, dictionary, maxN, buckets = buckets), Nil)
-        else detectTracked(turns, dictionary, maxN, broadcastDict = false)
-      case None =>
-        val d = dictionary.persist()
-        val nr = d.count()
-        if (nr <= broadcastMaxRows) {
-          // collects d NOW (cache hit)
-          val out = detectTrie(turns, d, maxN, buckets = buckets)
-          d.unpersist(blocking = false)
-          (out, Nil)
-        } else {
-          val (out, caches) = detectTracked(turns, d, maxN, broadcastDict = false)
-          (out, caches :+ d)
-        }
+      broadcastMaxRows: Long = 20000000L,
+      knownDictRows: Option[Long] = None): (DataFrame, Seq[DataFrame]) =
+    detectRoutedInto(turns, dictionary, maxN, broadcastMaxRows, knownDictRows, buckets = 0)
+
+  /** [[detectRouted]] for a conv-bucketed stage write: `buckets > 0`
+    * clusters the trie path's ordinal rows by `conv_id` before decoding
+    * (see [[detectTrie]]); the shuffle-join path keeps its shape and leaves
+    * the clustering to the write.
+    */
+  private[graft] def detectRoutedInto(turns: DataFrame, dictionary: DataFrame,
+      maxN: Int, broadcastMaxRows: Long, knownDictRows: Option[Long],
+      buckets: Int): (DataFrame, Seq[DataFrame]) = {
+    // without a hint, count once over a persisted dictionary: the trie path
+    // then collects it from the cache, the shuffle join keeps it as a handle
+    val d = if (knownDictRows.isEmpty) dictionary.persist() else dictionary
+    if (knownDictRows.getOrElse(d.count()) <= broadcastMaxRows) {
+      val out = detectTrie(turns, d, maxN, buckets = buckets)
+      if (knownDictRows.isEmpty) d.unpersist(blocking = false)
+      (out, Nil)
+    } else {
+      val (out, caches) = detectTracked(turns, d, maxN, broadcastDict = false)
+      (out, if (knownDictRows.isEmpty) caches :+ d else caches)
     }
+  }
 }

@@ -572,9 +572,10 @@ class PipelineE2ESpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft-layout-resume").toString
     val store = new graft.io.ManifestStore(spark, out)
     val df = (0 until 50).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-    def numBuckets(st: String): String =
+    def describe(st: String, row: String): String =
       spark.sql(s"DESCRIBE TABLE EXTENDED ${store.bucketedTableName(st)}")
-        .filter(col("col_name") === "Num Buckets").collect().map(_.getString(1)).mkString
+        .filter(col("col_name") === row).collect().map(_.getString(1)).mkString
+    def numBuckets(st: String): String = describe(st, "Num Buckets")
     // committed plain (the fingerprint does not cover the layout), resumed by
     // a bucketed caller: read plain, not as a bucketed table over files
     // without bucket ids
@@ -582,12 +583,42 @@ class PipelineE2ESpec extends AnyFunSuite {
     val (p, pResumed) = store.runStageBucketed("plain", "fp", Seq("k"), Seq("k"), 4)(
       fail("must resume"))
     assert(pResumed && p.count() == 50L)
-    // committed with 4 buckets, resumed by a 3-bucket caller: still 4
+    // committed with 4 buckets sorted by k, resumed by a 3-bucket caller
+    // sorting by v: still 4 buckets, sorted by k
     store.runStageBucketed("bk", "fp", Seq("k"), Seq("k"), 4)(df)
-    val (b, bResumed) = store.runStageBucketed("bk", "fp", Seq("k"), Seq("k"), 3)(
+    val (b, bResumed) = store.runStageBucketed("bk", "fp", Seq("k"), Seq("v"), 3)(
       fail("must resume"))
     assert(bResumed && numBuckets("bk") == "4")
+    assert(describe("bk", "Sort Columns").contains("k") &&
+      !describe("bk", "Sort Columns").contains("v"), describe("bk", "Sort Columns"))
     assert(b.groupBy("k").count().filter(col("count") =!= 1).count() == 0L && b.count() == 50L)
+  }
+
+  test("a bucketed commit never reuses a dir written under another layout") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-layout-dirs").toString
+    val store = new graft.io.ManifestStore(spark, out)
+    val df = (0 until 50).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+    // reads that trust the table's bucket metadata — a bucketed scan (the
+    // groupBy on the bucket column) and bucket pruning (point lookups): plain
+    // files have no bucket id, and a wrong bucket count drops or misses files
+    def bucketedReads(t: org.apache.spark.sql.DataFrame): (Long, Int) =
+      (t.groupBy("k").count().filter(col("count") === 1).count(),
+        (0 until 50 by 5).count(i => t.filter(col("k") === i.toLong).count() == 1L))
+    // the same fingerprint committed plain, invalidated, rerun bucketed
+    store.runStage("st", "fp")(df)
+    store.invalidateStage("st")
+    val (s, sResumed) = store.runStageBucketed("st", "fp", Seq("k"), Seq("k"), 4)(df)
+    assert(!sResumed && s.count() == 50L && bucketedReads(s) == ((50L, 10)))
+    // the same fingerprint committed with 4 buckets, invalidated, rerun with 3
+    store.runStageBucketed("bk", "fp", Seq("k"), Seq("k"), 4)(df)
+    store.invalidateStage("bk")
+    val (b, bResumed) = store.runStageBucketed("bk", "fp", Seq("k"), Seq("k"), 3)(df)
+    assert(!bResumed && b.count() == 50L && bucketedReads(b) == ((50L, 10)))
+    // each layout got its own version dir
+    val stDirs = scala.util.Using.resource(Files.list(Paths.get(out, "st")))(
+      _.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("data-")).toSet)
+    assert(stDirs.size == 2 && stDirs.contains(store.dataDirOf("st").get), stDirs)
   }
 
   test("schema evolution: additive commit ok, old snapshots read under the live schema") {
