@@ -307,7 +307,7 @@ object KgPipeline {
     val mentions = timed("mentions", Seq("entity_index", "property_index"), Nil) {
       // the trie path clusters its ordinal rows into the stage's buckets,
       // so the bucketed write's repartition is planned away (Mentions.detectTrie)
-      val (df, caches) = Mentions.detectRoutedInto(transcripts, dict, maxN = 4,
+      val (df, caches) = Mentions.detectRouted(transcripts, dict, maxN = 4,
         broadcastMaxRows = dictBroadcastMaxRows, knownDictRows = dictRowsHint,
         buckets = buckets)
       mentionCaches ++= caches

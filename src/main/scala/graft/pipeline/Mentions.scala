@@ -408,14 +408,14 @@ object Mentions {
   def detectRouted(turns: DataFrame, dictionary: DataFrame, maxN: Int = 4,
       broadcastMaxRows: Long = 20000000L,
       knownDictRows: Option[Long] = None): (DataFrame, Seq[DataFrame]) =
-    detectRoutedInto(turns, dictionary, maxN, broadcastMaxRows, knownDictRows, buckets = 0)
+    detectRouted(turns, dictionary, maxN, broadcastMaxRows, knownDictRows, buckets = 0)
 
-  /** [[detectRouted]] for a conv-bucketed stage write: `buckets > 0`
+  /** The size-routed detection above, for a conv-bucketed stage write: `buckets > 0`
     * clusters the trie path's ordinal rows by `conv_id` before decoding
     * (see [[detectTrie]]); the shuffle-join path keeps its shape and leaves
     * the clustering to the write.
     */
-  private[graft] def detectRoutedInto(turns: DataFrame, dictionary: DataFrame,
+  private[graft] def detectRouted(turns: DataFrame, dictionary: DataFrame,
       maxN: Int, broadcastMaxRows: Long, knownDictRows: Option[Long],
       buckets: Int): (DataFrame, Seq[DataFrame]) = {
     // without a hint, count once over a persisted dictionary: the trie path

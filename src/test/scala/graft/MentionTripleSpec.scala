@@ -184,7 +184,7 @@ class MentionTripleSpec extends AnyFunSuite {
     assert(reference == Set("[c2,0,0,1,Q90]", "[c2,0,1,2,P47]", "[c2,0,2,3,Q64]"))
     assert(spans(Mentions.detect(t, d, broadcastDict = false)) == reference)
     assert(spans(Mentions.detectFast(t, d)) == reference)
-    assert(spans(Mentions.detectRoutedInto(t, d, 4, 20000000L, Some(3L), buckets = 4)._1) ==
+    assert(spans(Mentions.detectRouted(t, d, 4, 20000000L, Some(3L), buckets = 4)._1) ==
       reference)
   }
 

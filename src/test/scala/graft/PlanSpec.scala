@@ -163,7 +163,7 @@ class PlanSpec extends AnyFunSuite {
       store.runStageBucketed("mentions", "fp-ord",
         graft.pipeline.KgPipeline.MentionBucketCols,
         graft.pipeline.KgPipeline.MentionSortCols, nBuckets = 4) {
-        graft.pipeline.Mentions.detectRoutedInto(turns, dict, 4, Long.MaxValue,
+        graft.pipeline.Mentions.detectRouted(turns, dict, 4, Long.MaxValue,
           Some(1L), buckets = 4)._1
       }
       spark.range(1).toDF("plan_spec_marker").collect()
