@@ -3,6 +3,7 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.CacheScope
 import graft.index.{EntityIndexBuilder, EntityIndexConfig, IndexSinks, IndexStats}
 import graft.parse.{Kg, ParseKit}
 import graft.sources.TsvLoader
@@ -63,7 +64,10 @@ object KgEntitiesMain {
     val ents = ParseKit.parseEntities(raw, kg, a.ignoreTypes)
     val cfg = EntityIndexConfig(a.ignoreTypes, a.keepMostCommonNonUnique,
       a.checkForPopularAliases)
-    val index = EntityIndexBuilder.build(ents, cfg).persist()
+    // the builder's caches and the index cache, released after the stats
+    val caches = new CacheScope
+    val index = caches.persist(
+      EntityIndexBuilder.build(ents, caches, cfg, persistInput = !cfg.ignoreTypes))
 
     def fmt(c: org.apache.spark.sql.Column) = ParseKit.formatEntity(kg, c, a.shortEntities)
     val formatted = index.withColumn("id", fmt(col("id")))
@@ -88,7 +92,7 @@ object KgEntitiesMain {
     IndexStats.entityStats(spark, index, ents).collect().foreach { r =>
       println(f"${r.getString(0)}%-26s ${r.getDouble(1)}%.2f")
     }
-    index.unpersist(blocking = false)
+    caches.close()
   }
 
   def main(argv: Array[String]): Unit = {

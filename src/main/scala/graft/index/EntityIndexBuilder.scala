@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.CacheScope
+
 /** Flags of the reference's `kg-entities` CLI (`kg-entities.rs:17-45`). */
 final case class EntityIndexConfig(
     ignoreTypes: Boolean = false,
@@ -119,19 +121,26 @@ object EntityIndexBuilder {
   /** Full cascade. Input: canonical entity schema
     * `(qid, label, desc, count, types, aliases, seq)` (unique qids — asserted
     * upstream per `kg-entities.rs:140`). Output: `(surface, info, id, kind)`.
+    * Its intermediates stay cached; the scoped form below releases them.
     */
   def build(entities: DataFrame, cfg: EntityIndexConfig = EntityIndexConfig()): DataFrame =
-    buildTracked(entities, cfg)._1
+    build(entities, new CacheScope, cfg, persistInput = !cfg.ignoreTypes)
 
-  /** [[build]] plus handles to the persisted intermediates, so callers that
-    * materialize the result (e.g. the pipeline's stage write) can
-    * `unpersist` them instead of leaking cached blocks until LRU pressure.
+  /** [[build]] plus the caches it persisted, for callers that materialize
+    * the result and release them instead of leaking cached blocks until
+    * LRU pressure (kept for callers built against this signature).
     */
-  def buildTracked(entities0: DataFrame,
-      cfg: EntityIndexConfig = EntityIndexConfig()): (DataFrame, Seq[DataFrame]) =
-    buildTracked(entities0, cfg, persistInput = !cfg.ignoreTypes)
+  def buildTracked(entities: DataFrame, cfg: EntityIndexConfig,
+      persistInput: Boolean): (DataFrame, Seq[DataFrame]) = {
+    val scope = new CacheScope
+    (build(entities, scope, cfg, persistInput), scope.claimed)
+  }
 
-  /** @param persistInput cache the input dump for the duration of the build.
+  /** The cascade, persisting its intermediates through the caller's
+    * `scope`, which the caller closes once the result is materialized
+    * (e.g. by the pipeline's stage write).
+    *
+    * @param persistInput cache the input dump for the duration of the build.
     * Pays when the dump plan is expensive or read often: the non-ignoreTypes
     * cascade reads it FIVE times (type-id distinct, type-info join, type
     * explode, the main row set, the alias explode), and the pipeline's
@@ -141,17 +150,14 @@ object EntityIndexBuilder {
     * projection), and for a columnar source two column-pruned scans are
     * cheaper than one full-width cache materialization plus two cache reads
     * (the persist-always r6 draft cost kg_entity_index ~15% at sf0.1) —
-    * hence the default `!cfg.ignoreTypes`. The dump is KG-sized (~GB at
-    * Wikidata scale — NOT the corpus), so caching it when it pays is the
-    * coarse-codebook-style contract; released with the other handles.
+    * hence [[build]]'s default `!cfg.ignoreTypes`. The dump is KG-sized
+    * (~GB at Wikidata scale — NOT the corpus), so caching it when it pays
+    * is the coarse-codebook-style contract. A caller-cached input is read
+    * from its cache but never claimed by the scope (ADVICE r6 #1).
     */
-  def buildTracked(entities0: DataFrame, cfg: EntityIndexConfig,
-      persistInput: Boolean): (DataFrame, Seq[DataFrame]) = {
-    // a caller-cached input is read from its cache but never claimed: only
-    // an input this build cached is handed back for release (ADVICE r6 #1)
-    val ownsInput = persistInput &&
-      entities0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val entities = if (ownsInput) entities0.persist() else entities0
+  def build(entities0: DataFrame, scope: CacheScope, cfg: EntityIndexConfig,
+      persistInput: Boolean): DataFrame = {
+    val entities = if (persistInput) scope.persist(entities0) else entities0
     val withInf = withInfo(entities, cfg)
     val uniq = uniqueAliases(entities)
 
@@ -160,10 +166,9 @@ object EntityIndexBuilder {
     // them keeps the cache narrow; aliases stay because E5's candidate set
     // derives from this cache (re-deriving it from `withInf` would run the
     // type-resolution join a second time on the non-ignoreTypes path)
-    val cand = withOverride(
+    val cand = scope.persist(withOverride(
       withInf.withColumn("grp_n", count(lit(1)).over(wLabel)), uniq, "label", cfg)
-      .drop("desc", "types")
-      .persist()
+      .drop("desc", "types"))
 
     // ---- E1: unique plain labels (kg-entities.rs:186-196) ----
     val e1 = cand
@@ -225,11 +230,10 @@ object EntityIndexBuilder {
     // info round) — unpersisted it re-ran the two window sorts per consumer,
     // the dominant cost of the whole build (profiled at sf0.1: the cascade
     // stages held ~2/3 of executor time, ×3 evaluations)
-    val e34 = groups
+    val e34 = scope.persist(groups
       .withColumn("eligible", !col("override"))
       .withColumn("cum_eligible", sum(when(col("eligible"), 1).otherwise(0)).over(wO1))
-      .withColumn("is_plain", col("eligible") && col("cum_eligible") === 1)
-      .persist()
+      .withColumn("is_plain", col("eligible") && col("cum_eligible") === 1))
     val e3Plain = e34
       .filter(col("is_plain"))
       .select(col("label").as("surface"), lit(null: String).as("info"),
@@ -253,19 +257,17 @@ object EntityIndexBuilder {
     // a single long — a codegen'd HashAggregate with map-side combine
     // instead of the r5 SortAggregate (string first() buffers are not
     // hash-mutable) and its two sorts (r6, guide §2.4).
-    val aliasCand = cand
+    val aliasCand = scope.persist(cand
       .select(col("qid"), col("count"), col("info"), explode(col("aliases")).as("alias"))
       .groupBy(col("qid"), col("alias"), col("count"), col("info"))
       .agg(count(lit(1)).as("occ_n"))
-      .select(col("qid"), col("alias"), col("count"), col("info"), col("occ_n"))
-      .persist()
+      .select(col("qid"), col("alias"), col("count"), col("info"), col("occ_n")))
     val wAlias = Window.partitionBy(col("alias"))
       .orderBy(col("count").desc, col("qid").asc)
-    val plainWinners = aliasCand
+    val plainWinners = scope.persist(aliasCand
       .join(takenPlain, aliasCand("alias") === takenPlain("surface"), "left_anti")
       .withColumn("rn", row_number().over(wAlias))
-      .filter(col("rn") === 1)
-      .persist()
+      .filter(col("rn") === 1))
     val e5Plain = plainWinners
       .select(col("alias").as("surface"), lit(null: String).as("info"),
         col("qid").as("id"), lit(Alias).as("kind"))
@@ -289,8 +291,6 @@ object EntityIndexBuilder {
       .select(col("alias").as("surface"), col("info"),
         col("qid").as("id"), lit(AliasInfo).as("kind"))
 
-    (e1.union(e3Plain).union(e34Info).union(e5Plain).union(e5Info),
-      Seq(cand, e34, aliasCand, plainWinners) ++
-        (if (ownsInput) Seq(entities) else Nil))
+    e1.union(e3Plain).union(e34Info).union(e5Plain).union(e5Info)
   }
 }

@@ -118,10 +118,10 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes(StandardCharsets.UTF_8)).map(b => f"$b%02x").mkString
 
-  /** Manifest field `name`: a string value (JSON-escaped), or with `num` an integer. */
+  /** Manifest field `name`: a string value (unescaped), or with `num` an integer. */
   private def field(manifest: String, name: String, num: Boolean = false): Option[String] =
     (s"\"$name\"\\s*:\\s*" + (if (num) "(\\d+)" else "\"((?:[^\"\\\\]|\\\\.)*)\"")).r
-      .findFirstMatchIn(manifest).map(_.group(1))
+      .findFirstMatchIn(manifest).map(m => if (num) m.group(1) else jsonUnescape(m.group(1)))
 
   /** The committed data dir of a stage per its manifest (legacy = `data`). */
   def dataDirOf(stage: String): Option[String] =
@@ -168,7 +168,7 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
   /** The schema committed at stage version `v`. */
   def schemaOfVersion(stage: String, v: Long): Option[StructType] =
     readManifestVersion(stage, v).flatMap(field(_, "schema"))
-      .map(s => DataType.fromJson(jsonUnescape(s)).asInstanceOf[StructType])
+      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
 
   private def jsonEscape(s: String): String = s.flatMap {
     case '"' => "\\\""
@@ -388,7 +388,7 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
       .map(c => maxDegree(readCommitted(path, Some(out.schema), partitionBy), c, rows))
       .map(d => s""","max_degree":$d""").getOrElse("")
     val manifest =
-      s"""{"stage":"$stage","fingerprint":"$fingerprint","data":"$dir","version":${expected + 1},""" +
+      s"""{"stage":"$stage","fingerprint":"${jsonEscape(fingerprint)}","data":"$dir","version":${expected + 1},""" +
         s""""rows":$rows$distinctJson$degreeJson,"maxRecordsPerFile":$maxRecordsPerFile,""" +
         s"""$bucketJson"committed_at":${System.currentTimeMillis()},"schema":"${jsonEscape(out.schema.json)}"}"""
     casCommit(stage, manifest, expected) match {
@@ -485,7 +485,7 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     val id = s"snap-${System.currentTimeMillis()}-${System.nanoTime() % 1000000}"
     val body = stageNames().flatMap { st =>
       for (fp <- fingerprintOf(st); d <- dataDirOf(st))
-        yield s""""$st":{"fingerprint":"$fp","data":"$d"}"""
+        yield s""""$st":{"fingerprint":"${jsonEscape(fp)}","data":"$d"}"""
     }.mkString(",")
     val json =
       s"""{"id":"$id","created_at":${System.currentTimeMillis()},"stages":{$body}}"""
@@ -508,9 +508,9 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     val p = snapshotsDir.resolve(s"$snapshotId.json")
     if (!Files.exists(p)) return None
     val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    (java.util.regex.Pattern.quote(s""""$stage":{""") +
-      """"fingerprint":"[^"]*","data":"([^"]*)"""").r
-      .findFirstMatchIn(s).map(_.group(1))
+    // the stage's own entry: escaped values never hold a bare `"<stage>":{`
+    val at = s.indexOf(s""""$stage":{""")
+    if (at < 0) None else field(s.substring(at), "data")
   }
 
   /** Read `stage` AS OF `snapshotId` — pinned to the version dirs the

@@ -82,11 +82,3 @@ final case class Triple(
     conv_id: String,
     turn_idx: Int,
     score: Double)
-
-/** Per-stage lineage / metrics row (north rule: checkpoint with lineage). */
-final case class StageMetrics(
-    stage: String,
-    rows_in: Long,
-    rows_out: Long,
-    wall_ms: Long,
-    detail: String)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.CacheScope
+
 /** Corpus curation — the end-to-end shape a training-data pipeline runs
   * before a corpus ships: quality gate → near-duplicate CLUSTER dedup (keep
   * one representative per component) → deterministic train/val/test split.
@@ -49,12 +51,19 @@ object Curate {
   /** Quality gate → cluster dedup (drop every clustered doc except its
     * min-id representative) → split assignment.
     *
-    * The cluster pass goes through the tracked capped dedup path
-    * ([[Dedup.minhashClusters]] → `minhashNearDupsTracked`), so the 100-TB
+    * The cluster pass goes through the capped dedup path
+    * ([[Dedup.minhashClusters]] → [[Dedup.minhashNearDups]]), so the 100-TB
     * defaults apply here too: bucket cap 1000, df cap corpus/100 (of the
     * GATE SURVIVORS — the corpus the dedup actually runs on), dropped
     * volume logged, signature plan evaluated once. Uncapped is an explicit
     * opt-in via `maxBucket = Long.MaxValue, maxDfFraction = 1.0`.
+    *
+    * The gated quality table is persisted, so the quality regex scan over
+    * the corpus runs ONCE — the uncached r5 shape re-evaluated it three
+    * times (under the gate semi-join feeding dedup, and under the final
+    * anti-join), each a full corpus scan with three `regexp_replace` passes
+    * per row. The narrow (id, quality, split) survivor table is
+    * materialized once against that cache, which is then released.
     *
     * @return (idCol, quality_milli, split) for every SURVIVING document
     */
@@ -62,54 +71,27 @@ object Curate {
       minQualityMilli: Int = 500,
       numHashes: Int = 32, bands: Int = 8, thresholdPct: Int = 80,
       maxBucket: Long = 1000L, maxDfFraction: Double = 0.01,
-      trainBp: Int = 9000, valBp: Int = 500): DataFrame = {
-    val (out, handles) = curateTracked(df, idCol, textCol, minQualityMilli,
-      numHashes, bands, thresholdPct, maxBucket, maxDfFraction, trainBp, valBp)
-    // materialize the narrow (id, quality, split) survivor table once
-    // against the hot caches, then release them (the semanticDedup
-    // lifecycle; blocks free when the caller drops the result)
-    val mat = out.localCheckpoint()
-    handles.foreach(_.unpersist(blocking = false))
-    mat
-  }
-
-  /** [[curate]] as a lazy plan plus the persisted handles backing it: the
-    * gated quality table is persisted, so the quality regex scan over the
-    * corpus runs ONCE — the untracked r5 shape re-evaluated it three times
-    * (under the gate semi-join feeding dedup, and under the final
-    * anti-join), each a full corpus scan with three `regexp_replace`
-    * passes per row. The cluster phase's own caches ride along from
-    * [[Dedup.minhashClustersTracked]]; its eager CC materialization also
-    * fills the quality cache (the gate feeds the dedup corpus), so no
-    * extra action is needed. Callers release `handles` when done.
-    */
-  def curateTracked(df: DataFrame, idCol: String, textCol: String,
-      minQualityMilli: Int = 500,
-      numHashes: Int = 32, bands: Int = 8, thresholdPct: Int = 80,
-      maxBucket: Long = 1000L, maxDfFraction: Double = 0.01,
-      trainBp: Int = 9000, valBp: Int = 500): (DataFrame, Seq[DataFrame]) = {
-    val scored = TextAnalysis.quality(df, idCol, textCol)
+      trainBp: Int = 9000, valBp: Int = 500): DataFrame = CacheScope.materialized { scope =>
+    val scored = scope.persist(TextAnalysis.quality(df, idCol, textCol)
       .select(col(idCol), col("quality_milli"))
-      .filter(col("quality_milli") >= minQualityMilli)
-      .persist()
+      .filter(col("quality_milli") >= minQualityMilli))
     // dedup runs AFTER the gate: a low-quality doc must not be the
     // representative that evicts a high-quality near-duplicate
     val kept = df.join(scored.select(col(idCol)), Seq(idCol), "left_semi")
     // the dedup corpus size for the maxDf rail is the gate-survivor count —
     // counting the persisted `scored` table fills the quality cache (a scan
     // the cluster phase was about to pay anyway) and replaces the extra
-    // corpus-scan count job `minhashNearDupsTracked` would otherwise run
+    // corpus-scan count job `minhashNearDups` would otherwise run
     // over the semi-join (VERDICT r05 #4). Equal by the dedup family's
     // unique-id contract: one gate row per surviving document.
-    val (clusters, _, handles) = Dedup.minhashClustersTracked(kept, idCol,
+    val clusters = Dedup.minhashClusters(kept, idCol,
       textCol, numHashes, bands, thresholdPct, maxBucket, maxDfFraction,
       corpusRowsHint = Some(scored.count()))
     val dupes = clusters
       .filter(col("doc_id") =!= col("rep_id"))
       .select(col("doc_id").as(idCol))
-    val out = scored.join(dupes, Seq(idCol), "left_anti")
+    scored.join(dupes, Seq(idCol), "left_anti")
       .withColumn("split", splitCol(col(idCol), trainBp, valBp))
-    (out, handles :+ scored)
   }
 
   /** Deterministic per-domain sampling rate (basis points of 10000) and

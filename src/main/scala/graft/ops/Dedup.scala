@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.CacheScope
+
 /** Large-scale deduplication operators for training-data pipelines.
   * All shapes are inverted-index joins / banded LSH — no cross join ever
   * touches the full corpus, so each scales by partitioning on the
@@ -189,7 +191,7 @@ object Dedup {
 
   /** Candidate join + exact verify over prepared token sets and (uncapped)
     * banding rows — the back half shared by [[minhashLshPairs]] (fresh plans)
-    * and [[minhashNearDupsTracked]] (persisted plans, evaluated once).
+    * and [[minhashNearDups]] (persisted plans, evaluated once).
     */
   private def minhashPairsFrom(toks: DataFrame, bandedUncapped: DataFrame,
       thresholdPct: Int, maxBucket: Long,
@@ -220,15 +222,15 @@ object Dedup {
     * uses, [[graft.pipeline.Canonicalize.connectedComponents]]) → one
     * representative (the minimum id) per cluster.
     *
-    * Routed through [[minhashNearDupsTracked]] (VERDICT r04 #2), so the
+    * Routed through [[minhashNearDups]] (VERDICT r04 #2), so the
     * top-of-stack entry point gets the 100-TB defaults: BOTH caps on
     * (`maxBucket` = 1000, `maxDf` = corpus/100 — one viral boilerplate
     * bucket is a k² candidate blowup at corpus scale), dropped volume
     * logged, and the tokenize→sign→band plan persisted and evaluated
     * exactly once across the cap semi-join, candidate join, verify join
-    * and CC's initial edge materialization (the caches release after CC's
-    * eager checkpoint/probe pins the edge set). Uncapped stays an explicit
-    * opt-in: compose the raw [[minhashLshPairs]] with
+    * and CC's initial edge materialization (its own scope releases the
+    * caches once CC's eager checkpoint/probe pins the edge set). Uncapped
+    * stays an explicit opt-in: compose the raw [[minhashLshPairs]] with
     * `Canonicalize.connectedComponents` directly.
     *
     * @return (doc_id, rep_id) for every document in some cluster; documents
@@ -239,34 +241,17 @@ object Dedup {
   def minhashClusters(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 32, bands: Int = 8, thresholdPct: Int = 60,
       maxBucket: Long = 1000L, maxDfFraction: Double = 0.01,
-      corpusRowsHint: Option[Long] = None): DataFrame = {
-    val (clusters, _, handles) = minhashClustersTracked(df, idCol, textCol,
-      numHashes, bands, thresholdPct, maxBucket, maxDfFraction, corpusRowsHint)
-    // connectedComponents has already materialized the edge set (driver
-    // union-find probe, or the eager initial checkpoint of the distributed
-    // fixpoint) — the signature caches are no longer referenced
-    handles.foreach(_.unpersist(blocking = false))
-    clusters
-  }
-
-  /** [[minhashClusters]] plus the underlying pairs plan and the persisted
-    * handles (for callers that also want the pair evidence, and for the
-    * plan assertion that every pairs-plan leaf reads the cache). NOTE:
-    * construction runs TWO actions (the drop-volume measurement and CC's
-    * edge materialization); the returned `clusters` frame itself is cheap
-    * to re-collect. Callers must release `handles` when done.
-    */
-  def minhashClustersTracked(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 32, bands: Int = 8, thresholdPct: Int = 60,
-      maxBucket: Long = 1000L, maxDfFraction: Double = 0.01,
-      corpusRowsHint: Option[Long] = None): (DataFrame, DataFrame, Seq[DataFrame]) = {
-    val (pairs, handles) = minhashNearDupsTracked(df, idCol, textCol,
-      numHashes, bands, thresholdPct, maxBucket, maxDfFraction, corpusRowsHint)
-    val clusters = graft.pipeline.Canonicalize.connectedComponents(
-      pairs.select(col("a").as("u"), col("b").as("v")))
-      .select(col("node").as("doc_id"), col("canonical_id").as("rep_id"))
-    (clusters, pairs, handles)
-  }
+      corpusRowsHint: Option[Long] = None): DataFrame =
+    scala.util.Using.resource(new CacheScope) { scope =>
+      val pairs = minhashNearDups(df, idCol, textCol, scope, numHashes, bands,
+        thresholdPct, maxBucket, maxDfFraction, corpusRowsHint)
+      // connectedComponents materializes the edge set (driver union-find
+      // probe, or the eager initial checkpoint of the distributed fixpoint)
+      // before it returns — the signature caches are no longer referenced
+      graft.pipeline.Canonicalize.connectedComponents(
+        pairs.select(col("a").as("u"), col("b").as("v")))
+        .select(col("node").as("doc_id"), col("canonical_id").as("rep_id"))
+    }
 
   private val SimhashBits = 48
 
@@ -374,17 +359,10 @@ object Dedup {
     * Dropped-bucket volume is measured ([[countOverfullBuckets]]) and logged
     * so capped runs are observable, never silent. Both caps are exact SQL
     * (GROUP BY … HAVING), so capped outputs stay oracle-checkable.
-    */
-  def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 32, bands: Int = 8, thresholdPct: Int = 60,
-      maxBucket: Long = 1000L, maxDfFraction: Double = 0.01,
-      corpusRowsHint: Option[Long] = None): DataFrame =
-    minhashNearDupsTracked(df, idCol, textCol, numHashes, bands, thresholdPct,
-      maxBucket, maxDfFraction, corpusRowsHint)._1
-
-  /** [[minhashNearDups]] plus the persisted handles to release once the
-    * result is materialized (the `detectTracked` pattern — VERDICT r03 #1):
-    * the tokenize → sign → band plan — the dominant cost at corpus scale —
+    *
+    * The caches persist through the caller's `scope`, which the caller
+    * closes once the result is materialized (VERDICT r03 #1): the
+    * tokenize → sign → band plan — the dominant cost at corpus scale —
     * is persisted and evaluated EXACTLY ONCE, by the drop-volume measurement
     * action; the cap semi-join and the candidate/verify joins then read the
     * cache (every leaf of the returned plan is an InMemoryRelation —
@@ -396,20 +374,20 @@ object Dedup {
     * @param corpusRowsHint known corpus row count (e.g. a table manifest's) —
     *                       skips the sizing count job
     */
-  def minhashNearDupsTracked(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 32, bands: Int = 8, thresholdPct: Int = 60,
-      maxBucket: Long = 1000L, maxDfFraction: Double = 0.01,
-      corpusRowsHint: Option[Long] = None): (DataFrame, Seq[DataFrame]) = {
+  def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
+      scope: CacheScope, numHashes: Int = 32, bands: Int = 8,
+      thresholdPct: Int = 60, maxBucket: Long = 1000L,
+      maxDfFraction: Double = 0.01, corpusRowsHint: Option[Long] = None): DataFrame = {
     val corpus = corpusRowsHint.getOrElse(df.count())
     val maxDf = math.max(100L, (corpus * maxDfFraction).toLong)
-    val toks = cappedTokenSets(df, idCol, textCol, maxDf).persist()
-    val banded = bandsOfToks(toks, numHashes, bands).persist()
+    val toks = scope.persist(cappedTokenSets(df, idCol, textCol, maxDf))
+    val banded = scope.persist(bandsOfToks(toks, numHashes, bands))
     // bucket counts aggregated ONCE over the cached banding (r6, guide
     // §2.3): the drop-volume probe and the cap semi-join both need them —
     // the earlier shape ran the (band, bhash) groupBy twice. The cache
     // holds exactly the rows that aggregation produces anyway.
-    val counts = banded.groupBy(col("band"), col("bhash"))
-      .agg(count(lit(1)).as("bn")).persist()
+    val counts = scope.persist(banded.groupBy(col("band"), col("bhash"))
+      .agg(count(lit(1)).as("bn")))
     // this ONE action evaluates the signature plan and fills ALL caches
     val over = counts.filter(col("bn") > maxBucket)
       .agg(count(lit(1)).as("buckets"), coalesce(sum(col("bn")), lit(0L)).as("rows"))
@@ -418,29 +396,21 @@ object Dedup {
     if (nb > 0)
       log.info(s"minhashNearDups: dropping $nb overfull band buckets " +
         s"($nr rows) at maxBucket=$maxBucket, maxDf=$maxDf, corpus=$corpus")
-    (minhashPairsFrom(toks, banded, thresholdPct, maxBucket, Some(counts)),
-      Seq(toks, banded, counts))
+    minhashPairsFrom(toks, banded, thresholdPct, maxBucket, Some(counts))
   }
 
   /** Capped-by-default SimHash near-dup entry point — see
     * [[minhashNearDups]] for the cap rationale. Single-evaluation like the
-    * minhash twin; prefer [[simhashNearDupsTracked]] to release the cache.
+    * minhash twin, with its caches persisted through the caller's `scope`.
     */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, chunks: Int = 4, maxBucket: Long = 1000L): DataFrame =
-    simhashNearDupsTracked(df, idCol, textCol, maxHamming, chunks, maxBucket)._1
-
-  /** [[simhashNearDups]] plus the persisted handle to release once the
-    * result is materialized (see [[minhashNearDupsTracked]]).
-    */
-  def simhashNearDupsTracked(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, chunks: Int = 4,
-      maxBucket: Long = 1000L): (DataFrame, Seq[DataFrame]) = {
-    val banded = simhashBandedBits(df, idCol, textCol, chunks).persist()
+      scope: CacheScope, maxHamming: Int = 3, chunks: Int = 4,
+      maxBucket: Long = 1000L): DataFrame = {
+    val banded = scope.persist(simhashBandedBits(df, idCol, textCol, chunks))
     // single bucket-counts aggregation shared by probe and cap — see
-    // [[minhashNearDupsTracked]]
-    val counts = banded.groupBy(col("chunk"), col("ckey"))
-      .agg(count(lit(1)).as("bn")).persist()
+    // [[minhashNearDups]]
+    val counts = scope.persist(banded.groupBy(col("chunk"), col("ckey"))
+      .agg(count(lit(1)).as("bn")))
     val over = counts.filter(col("bn") > maxBucket)
       .agg(count(lit(1)).as("buckets"), coalesce(sum(col("bn")), lit(0L)).as("rows"))
       .collect()(0)
@@ -448,7 +418,6 @@ object Dedup {
     if (nb > 0)
       log.info(s"simhashNearDups: dropping $nb overfull chunk buckets " +
         s"($nr rows) at maxBucket=$maxBucket")
-    (simhashPairsFrom(banded, maxHamming, maxBucket, Some(counts)),
-      Seq(banded, counts))
+    simhashPairsFrom(banded, maxHamming, maxBucket, Some(counts))
   }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.CacheScope
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (array<float>). Brute-force cosine top-k is the exact baseline (broadcast
   * nested-loop with the query side broadcast); the scale path is IVF —
@@ -200,8 +202,8 @@ object Similarity {
 
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String, k: Int,
       nCentroids: Int = 0, nProbe: Int = 2, lloydRounds: Int = 2,
-      quantScale: Int = 1000): DataFrame = {
-    val v = quantized(df, idCol, vecCol, quantScale).persist()
+      quantScale: Int = 1000): DataFrame = CacheScope.materialized { scope =>
+    val v = scope.persist(quantized(df, idCol, vecCol, quantScale))
     val nVec = v.count()
     val nc = if (nCentroids > 0) nCentroids else math.ceil(math.sqrt(nVec.toDouble)).toInt
     val assign = lloydAssign(v, nc, lloydRounds)
@@ -210,7 +212,7 @@ object Similarity {
     // a window top-nProbe) feeds BOTH sides of the candidate self-join — the
     // r4 shape re-ran it twice (and the quantization four times) because the
     // caches were dropped before the caller's action
-    val probed = assign(nProbe).persist()
+    val probed = scope.persist(assign(nProbe))
     val cands = probed.as("a").join(probed.as("b"),
         col("a.cid") === col("b.cid") && col("a.id") =!= col("b.id"))
       .select(col("a.id").as("vec_id"), col("b.id").as("neighbor_id"))
@@ -229,16 +231,11 @@ object Similarity {
       .withColumn("ck", cosKey(qdot(col("qa"), col("qb")), col("na2"), col("nb2")))
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("ck").desc, col("neighbor_id").asc)
-    val out = ranked.withColumn("rank", row_number().over(w))
+    // materialized ONCE against the hot caches (N·k narrow rows), then
+    // released — same lifecycle as [[semanticDedup]]
+    ranked.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("vec_id"), col("neighbor_id"), col("rank").cast("int").as("rank"))
-      // materialize ONCE against the hot caches (N·k narrow rows), then
-      // release them — same lifecycle as [[semanticDedup]]; the checkpoint
-      // blocks free when the caller drops the result
-      .localCheckpoint()
-    probed.unpersist(blocking = false)
-    v.unpersist(blocking = false)
-    out
   }
 
   /** Sign-LSH bucketing on quantized vectors: `nPlanes` pseudo-random ±1
@@ -338,43 +335,26 @@ object Similarity {
     */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
       thresholdPct: Int, nClusters: Int = 0, lloydRounds: Int = 2,
-      quantScale: Int = 1000, maxCluster: Long = 10000L): DataFrame = {
-    val (out, handles) = semanticDedupTracked(df, idCol, vecCol, thresholdPct,
-      nClusters, lloydRounds, quantScale, maxCluster)
-    // materialize ONCE against the filled caches, then release them — the
-    // r5-original shape unpersisted a/v BEFORE the caller's first action, so
-    // the returned lazy plan re-derived the Lloyd assignment (crossJoin vs
-    // centroids + window top-1) THREE times uncached: under the x and y pair
-    // sides and under the final keep join. localCheckpoint (eager) is the
-    // same materialize-then-release the cluster dedup path gets from CC's
-    // checkpoint; blocks free when the result is collected by GC.
-    val mat = out.localCheckpoint()
-    handles.foreach(_.unpersist(blocking = false))
-    mat
-  }
-
-  /** [[semanticDedup]] as a lazy plan plus the persisted handles backing it
-    * (the `minhashNearDupsTracked` pattern): the quantized vectors and the
-    * Lloyd assignment are persisted and the assignment is evaluated EXACTLY
-    * ONCE — by the cap-probe action, which runs even uncapped so it doubles
-    * as the cache-filling measurement. Every leaf of the returned plan is
-    * the assignment cache (plan-asserted in OpsSpec). Callers release
-    * `handles` once the result is materialized.
-    */
-  def semanticDedupTracked(df: DataFrame, idCol: String, vecCol: String,
-      thresholdPct: Int, nClusters: Int = 0, lloydRounds: Int = 2,
       quantScale: Int = 1000, maxCluster: Long = 10000L)
-      : (DataFrame, Seq[DataFrame]) = {
-    val v = quantized(df, idCol, vecCol, quantScale).persist()
+      : DataFrame = CacheScope.materialized { scope =>
+    // the quantized vectors and the Lloyd assignment are persisted and the
+    // assignment is evaluated EXACTLY ONCE — by the cap-probe action, which
+    // runs even uncapped so it doubles as the cache-filling measurement.
+    // Every leaf of the pair+keep plan is a cache (plan-asserted in
+    // OpsSpec). The r5-original shape unpersisted a/v BEFORE the caller's
+    // first action, so the returned lazy plan re-derived the Lloyd
+    // assignment (crossJoin vs centroids + window top-1) THREE times
+    // uncached: under the x and y pair sides and under the final keep join.
+    val v = scope.persist(quantized(df, idCol, vecCol, quantScale))
     val nVec = v.count()
     val nc = if (nClusters > 0) nClusters else math.ceil(math.sqrt(nVec.toDouble)).toInt
-    val a = lloydAssign(v, nc, lloydRounds)(1).persist()
+    val a = scope.persist(lloydAssign(v, nc, lloydRounds)(1))
     // cluster sizes aggregated ONCE over the cached assignment (r6, guide
     // §2.3): the cap probe and the size rail both need them — the earlier
     // shape ran the full-assignment groupBy twice (once inside the probe
     // action, once under the rail's semi-join). ≤nc rows by the codebook
     // contract, so the cache is trivially small.
-    val sizes = a.groupBy(col("cid")).agg(count(lit(1)).as("csize")).persist()
+    val sizes = scope.persist(a.groupBy(col("cid")).agg(count(lit(1)).as("csize")))
     // the one measurement action: fills the sizes cache (and a's and v's
     // beneath it) and logs what the cap will exclude from the pair phase
     val over = sizes.filter(col("csize") > maxCluster)
@@ -401,11 +381,10 @@ object Similarity {
           lit(thresholdPct.toDouble * thresholdPct) *
             col("x.n2").cast("double") * col("y.n2").cast("double"))
       .select(col("y.id").as("id")).distinct()
-    val out = a.select(col("id"), col("cid"))
+    a.select(col("id"), col("cid"))
       .join(dropped.withColumn("is_dup", lit(1L)), Seq("id"), "left")
       .select(col("id").as(idCol), col("cid").as("cluster"),
         when(col("is_dup").isNull, 1L).otherwise(0L).as("keep"))
-    (out, Seq(a, v, sizes))
   }
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.ops.Similarity")

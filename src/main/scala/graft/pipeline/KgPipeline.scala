@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.CacheScope
 import graft.index.{EntityIndexBuilder, EntityIndexConfig, PropertyIndexBuilder}
 import graft.io.ManifestStore
 
@@ -223,8 +224,8 @@ object KgPipeline {
     // persistInput forced: the pipeline reads the dump beyond the cascade
     // (dictionary weights join + nodes stage), and its input is often a
     // synthesized/derived plan, not a pruned columnar scan
-    val (entityIndexRaw, entityCaches) =
-      EntityIndexBuilder.buildTracked(entities, cfg, persistInput = true)
+    val entityCaches = new CacheScope
+    val entityIndexRaw = EntityIndexBuilder.build(entities, entityCaches, cfg, persistInput = true)
     val entityIndex = stages("entity_index", Nil, Nil) { entityIndexRaw }
     val propertyIndex = stages("property_index", Nil, Nil) {
       PropertyIndexBuilder.build(properties)
@@ -247,7 +248,7 @@ object KgPipeline {
     // stage inside linkAndMaterialize each read the dump again — releasing
     // right after the entity_index stage (the r5 shape) made those re-run
     // the upstream dump plan. Every stage is committed by this point.
-    entityCaches.foreach(_.unpersist(blocking = false))
+    entityCaches.close()
 
     import spark.implicits._
     val metrics = stages.timings.toSeq
@@ -303,18 +304,16 @@ object KgPipeline {
       else new Stages(mStore, s"iv=$inputVersion;saltN=$saltN", dictVersion, buckets,
         maxRecordsPerFile)
 
-    val mentionCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val mentionCaches = new CacheScope
     val mentions = timed("mentions", Seq("entity_index", "property_index"), Nil) {
       // the trie path clusters its ordinal rows into the stage's buckets,
       // so the bucketed write's repartition is planned away (Mentions.detectTrie)
-      val (df, caches) = Mentions.detectRouted(transcripts, dict, maxN = 4,
+      Mentions.detectRouted(transcripts, dict, mentionCaches, maxN = 4,
         broadcastMaxRows = dictBroadcastMaxRows, knownDictRows = dictRowsHint,
         buckets = buckets)
-      mentionCaches ++= caches
-      df
     }
     // the stage is materialized (or resumed) — release detection's caches
-    mentionCaches.foreach(_.unpersist(blocking = false))
+    mentionCaches.close()
     // skew hint for the link-score salt gate: the HEAD-KEY degree (max
     // mentions per linked id) recorded by the mentions stage write as a
     // column stat in its manifest — a mean cannot bound the head degree

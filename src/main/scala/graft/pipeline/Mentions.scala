@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.CacheScope
+
 /** Batched mention detection (SURVEY.md §2.9): token n-grams of every turn
   * joined against the natural-language index, then overlap resolution by a
   * non-recursive longest-match dominance rule.
@@ -104,16 +106,15 @@ object Mentions {
     */
   def detect(turns: DataFrame, dictionary: DataFrame, maxN: Int = 4,
       broadcastDict: Boolean = true): DataFrame =
-    detectTracked(turns, dictionary, maxN, broadcastDict)._1
+    detect(turns, dictionary, new CacheScope, maxN, broadcastDict)
 
-  /** [[detect]] plus the persisted intermediate it pins (the match set rides
-    * BOTH sides of the dominance anti-join). Callers that materialize the
-    * result should unpersist the returned handles afterwards — `detect`
-    * alone would leak its cache across repeated calls in one session
-    * (VERDICT r02 #2; mirrors `EntityIndexBuilder.buildTracked`).
+  /** [[detect]] persisting its intermediate (the match set rides BOTH sides
+    * of the dominance anti-join) through the caller's `scope`, which the
+    * caller closes once the result is materialized — the scope-less form
+    * above leaks that cache across repeated calls in one session.
     */
-  def detectTracked(turns: DataFrame, dictionary: DataFrame, maxN: Int = 4,
-      broadcastDict: Boolean = true): (DataFrame, Seq[DataFrame]) = {
+  def detect(turns: DataFrame, dictionary: DataFrame, scope: CacheScope,
+      maxN: Int, broadcastDict: Boolean): DataFrame = {
     val grams = turns
       .select(col("conv_id"), col("turn_idx"),
         explode(ngrams(col("text"), maxN)).as("g"))
@@ -125,12 +126,11 @@ object Mentions {
     val dictSide = if (broadcastDict) broadcast(dict) else dict
     // persisted: the dominance anti-join reads `matches` on BOTH sides — the
     // gram generate + dictionary probe (the expensive part) must run once.
-    val matches = grams
+    val matches = scope.persist(grams
       .join(dictSide, Seq("surface"))
       .select(col("conv_id"), col("turn_idx"), col("span_start"), col("span_end"),
         col("surface"), col("id"), col("kind"), col("is_prop"),
-        col("weight").cast("double").as("score"), col("base"))
-      .persist()
+        col("weight").cast("double").as("score"), col("base")))
 
     // dominance anti-join: drop matches overlapped by a strictly better one
     val m = matches.alias("m")
@@ -141,11 +141,10 @@ object Mentions {
       (col("d.span_end") - col("d.span_start")) > (col("m.span_end") - col("m.span_start")) ||
         ((col("d.span_end") - col("d.span_start")) === (col("m.span_end") - col("m.span_start")) &&
           col("d.span_start") < col("m.span_start"))
-    val out = m.join(d,
+    m.join(d,
       col("m.conv_id") === col("d.conv_id") &&
         col("m.turn_idx") === col("d.turn_idx") && overlap && better,
       "left_anti")
-    (out, Seq(matches))
   }
 
   /** The dictionary as compact parallel arrays — what actually rides the
@@ -393,8 +392,11 @@ object Mentions {
   /** Size-guarded detection: trie scan while the dictionary fits broadcast
     * (row-count proxy; ~100 bytes/entry ⇒ the 20M default is a ~2 GB
     * broadcast), shuffle join beyond it. Both paths produce identical rows.
-    * Returns the persisted handles to release after the result is
-    * materialized.
+    * Persists through the caller's `scope`, released once the result is
+    * materialized. `buckets > 0` clusters the trie path's ordinal rows by
+    * `conv_id` for a conv-bucketed stage write (see [[detectTrie]]); the
+    * shuffle-join path keeps its shape and leaves the clustering to the
+    * write.
     *
     * @param knownDictRows caller-known dictionary row count (or a safe UPPER
     *                      bound, e.g. the sum of the committed index stage
@@ -405,29 +407,14 @@ object Mentions {
     *                      dictionary so the (often expensive) dictionary plan
     *                      is not evaluated twice by count + collect.
     */
-  def detectRouted(turns: DataFrame, dictionary: DataFrame, maxN: Int = 4,
-      broadcastMaxRows: Long = 20000000L,
-      knownDictRows: Option[Long] = None): (DataFrame, Seq[DataFrame]) =
-    detectRouted(turns, dictionary, maxN, broadcastMaxRows, knownDictRows, buckets = 0)
-
-  /** The size-routed detection above, for a conv-bucketed stage write: `buckets > 0`
-    * clusters the trie path's ordinal rows by `conv_id` before decoding
-    * (see [[detectTrie]]); the shuffle-join path keeps its shape and leaves
-    * the clustering to the write.
-    */
   private[graft] def detectRouted(turns: DataFrame, dictionary: DataFrame,
-      maxN: Int, broadcastMaxRows: Long, knownDictRows: Option[Long],
-      buckets: Int): (DataFrame, Seq[DataFrame]) = {
+      scope: CacheScope, maxN: Int, broadcastMaxRows: Long,
+      knownDictRows: Option[Long], buckets: Int): DataFrame = {
     // without a hint, count once over a persisted dictionary: the trie path
-    // then collects it from the cache, the shuffle join keeps it as a handle
-    val d = if (knownDictRows.isEmpty) dictionary.persist() else dictionary
-    if (knownDictRows.getOrElse(d.count()) <= broadcastMaxRows) {
-      val out = detectTrie(turns, d, maxN, buckets = buckets)
-      if (knownDictRows.isEmpty) d.unpersist(blocking = false)
-      (out, Nil)
-    } else {
-      val (out, caches) = detectTracked(turns, d, maxN, broadcastDict = false)
-      (out, if (knownDictRows.isEmpty) caches :+ d else caches)
-    }
+    // then collects it from the cache, the shuffle join reads it again
+    val d = if (knownDictRows.isEmpty) scope.persist(dictionary) else dictionary
+    if (knownDictRows.getOrElse(d.count()) <= broadcastMaxRows)
+      detectTrie(turns, d, maxN, buckets = buckets)
+    else detect(turns, d, scope, maxN, broadcastDict = false)
   }
 }

@@ -42,7 +42,7 @@ object OpsQueries {
 
   /** Near-dup clusters over the same sample as [[dedupMinhashLsh]]:
     * CAPPED-BY-DEFAULT pairs (df cap greatest(100, corpus/100), bucket cap
-    * 1000 — the entry point routes through the tracked capped dedup) →
+    * 1000 — the entry point routes through the scoped capped dedup) →
     * connected components → (doc_id, rep_id). The oracle reproduces the
     * caps as HAVING clauses and closes the pair set with a recursive CTE,
     * so the composition (capped LSH × union-find) is driver-verified end

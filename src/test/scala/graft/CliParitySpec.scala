@@ -63,10 +63,13 @@ class CliParitySpec extends AnyFunSuite {
     val file = writeLines(s"$dir/ents.tsv", entDump)
     val rfile = writeLines(s"$dir/redirects.tsv", redirectDump)
     val out = s"$dir/out"
-    KgEntitiesMain.run(spark, KgEntitiesMain.CliArgs(
-      file = file, output = out, kb = "wikidata", redirects = Some(rfile),
-      keepMostCommonNonUnique = true, checkForPopularAliases = true,
-      shortEntities = true))
+    // one run releases every cache it made: the index's and the builder's
+    CacheChecks.assertReleased {
+      KgEntitiesMain.run(spark, KgEntitiesMain.CliArgs(
+        file = file, output = out, kb = "wikidata", redirects = Some(rfile),
+        keepMostCommonNonUnique = true, checkForPopularAliases = true,
+        shortEntities = true))
+    }
 
     // golden: oracle over the SAME parsed rows
     val raw = graft.sources.TsvLoader.loadEntities(spark, file)

@@ -105,49 +105,60 @@ class EntityIndexSpec extends AnyFunSuite {
 
   test("r6 internals: input persist gated on fan-out; e34 shares one label exchange") {
     import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    object H extends AdaptiveSparkPlanHelper
     val dump = sample(genEntities, 7L).toDF()
-    // ignoreTypes reads the dump exactly twice (withInfo is a projection) —
-    // the build must NOT cache it (two pruned scans beat a full-width cache)
-    val (idx1, h1) = EntityIndexBuilder.buildTracked(
-      dump, EntityIndexConfig(ignoreTypes = true))
-    idx1.count()
-    assert(!dump.storageLevel.useMemory,
-      "ignoreTypes build must not cache the input dump")
-    h1.foreach(_.unpersist(blocking = true))
-    // the pipeline path forces the cache (dump read 5+ times) and the
-    // handles release it
-    val (idx2, h2) = EntityIndexBuilder.buildTracked(
-      dump, EntityIndexConfig(), persistInput = true)
-    idx2.count()
-    assert(dump.storageLevel.useMemory, "persistInput=true must cache the dump")
-    h2.foreach(_.unpersist(blocking = true))
-    assert(!dump.storageLevel.useMemory, "handles must release the dump cache")
-    // e34 (handles(1)) carries the shared-exchange shape: the group
-    // aggregate sits on an explicit label repartition (whose partitioning
-    // also satisfies the O1 window), so the logical plan has exactly ONE
-    // repartition and the optimizer plans no second exchange for the window
-    val (idx3, h3) = EntityIndexBuilder.buildTracked(
-      dump, EntityIndexConfig(ignoreTypes = true))
-    val e34 = h3(1)
-    // e34 is persisted, so the plan of interest is the one INSIDE its
-    // InMemoryRelation: exactly one hash exchange (the explicit label
-    // repartition), shared by the group aggregate and the O1 window
-    val cached = e34.queryExecution.optimizedPlan.collectFirst {
-      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        r.cachedPlan.toString
-    }.getOrElse(fail(s"e34 must be cached:\n${e34.queryExecution.optimizedPlan}"))
-    // count only the exchanges of e34's OWN stage — the plan print expands
-    // the upstream cand cache's subtree below its InMemory* boundary
-    val ownStage = cached.split("\n").takeWhile(l =>
-      !l.contains("InMemoryTableScan") && !l.contains("InMemoryRelation"))
-    val exchanges = ownStage.filter(_.contains("Exchange hashpartitioning"))
-    assert(exchanges.length == 1,
-      s"e34 must plan exactly one hash exchange (shared by aggregate and window), got ${exchanges.length}:\n$cached")
-    assert(exchanges.head.contains("label") &&
-      exchanges.head.contains("REPARTITION_BY_COL"),
-      s"the one exchange must be the explicit label repartition:\n${exchanges.head}")
-    idx3.count()
-    h3.foreach(_.unpersist(blocking = true))
+    // the pipeline path forces the cache (dump read 5+ times) and closing
+    // the scope releases it
+    CacheChecks.assertReleased {
+      val scope = new CacheScope
+      EntityIndexBuilder.build(dump, scope, EntityIndexConfig(), persistInput = true).count()
+      assert(dump.storageLevel.useMemory, "persistInput=true must cache the dump")
+      CacheChecks.closeReleased(scope)
+      assert(!dump.storageLevel.useMemory, "closing the scope must release the dump cache")
+    }
+    CacheChecks.assertReleased {
+      val cfg = EntityIndexConfig(ignoreTypes = true)
+      val scope = new CacheScope
+      val idx = EntityIndexBuilder.build(dump, scope, cfg, persistInput = false)
+      // ignoreTypes reads the dump exactly twice (withInfo is a projection) —
+      // the default build must NOT cache it (two pruned scans beat a
+      // full-width cache)
+      EntityIndexBuilder.build(dump, cfg)
+      assert(!dump.storageLevel.useMemory, "ignoreTypes build must not cache the input dump")
+      // e34 carries the shared-exchange shape: the group aggregate sits on an
+      // explicit label repartition (whose partitioning also satisfies the O1
+      // window), so the optimizer plans no second exchange for the window.
+      // It is the cache whose own plan holds the label-partitioned O1 window.
+      def isO1(p: org.apache.spark.sql.execution.SparkPlan) = p match {
+        case w: WindowExec =>
+          w.partitionSpec.flatMap(_.references.map(_.name)) == Seq("label") &&
+            w.orderSpec.exists(_.child.references.exists(_.name == "g_max"))
+        case _ => false
+      }
+      val e34 = idx.queryExecution.optimizedPlan
+        .collect { case r: InMemoryRelation => r.cachedPlan }.distinct
+        .filter(H.find(_)(isO1).isDefined)
+      assert(e34.length == 1, s"one cache must hold the O1 window:\n${idx.queryExecution.optimizedPlan}")
+      // exactly one exchange in e34's OWN stage (the cand cache below it is
+      // a leaf scan): the explicit label repartition, shared by the group
+      // aggregate and the O1 window
+      val exchanges = H.collect(e34.head) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.length == 1,
+        s"e34 must plan exactly one hash exchange (shared by aggregate and window), got ${exchanges.length}:\n${e34.head}")
+      val keys = exchanges.head.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+        case _ => Nil
+      }
+      assert(exchanges.head.shuffleOrigin == REPARTITION_BY_COL && keys == Seq("label"),
+        s"the one exchange must be the explicit label repartition:\n${exchanges.head}")
+      idx.count()
+      CacheChecks.closeReleased(scope)
+    }
   }
 
   test("build handles never release a cache the caller owns") {

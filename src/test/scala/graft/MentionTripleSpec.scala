@@ -160,10 +160,13 @@ class MentionTripleSpec extends AnyFunSuite {
         "kind", "is_prop", "score")
         .collect().map(_.toString).toSet
     // force the guard BOTH ways: threshold 0 → shuffle join, huge → trie scan
-    val (shuffled, caches) = Mentions.detectRouted(turns, dict, broadcastMaxRows = 0L)
-    val viaShuffle = collectM(shuffled)
-    caches.foreach(_.unpersist(blocking = false))
-    val viaTrie = collectM(Mentions.detectRouted(turns, dict, broadcastMaxRows = Long.MaxValue)._1)
+    def routed(broadcastMaxRows: Long) = {
+      val scope = new CacheScope
+      try collectM(Mentions.detectRouted(turns, dict, scope, 4, broadcastMaxRows, None, 0))
+      finally scope.close()
+    }
+    val viaShuffle = routed(0L)
+    val viaTrie = routed(Long.MaxValue)
     assert(viaShuffle == viaTrie,
       s"only-shuffle=${(viaShuffle -- viaTrie).take(5)} only-trie=${(viaTrie -- viaShuffle).take(5)}")
     assert(viaTrie.nonEmpty)
@@ -184,36 +187,37 @@ class MentionTripleSpec extends AnyFunSuite {
     assert(reference == Set("[c2,0,0,1,Q90]", "[c2,0,1,2,P47]", "[c2,0,2,3,Q64]"))
     assert(spans(Mentions.detect(t, d, broadcastDict = false)) == reference)
     assert(spans(Mentions.detectFast(t, d)) == reference)
-    assert(spans(Mentions.detectRouted(t, d, 4, 20000000L, Some(3L), buckets = 4)._1) ==
-      reference)
+    assert(spans(Mentions.detectRouted(t, d, new CacheScope, 4, 20000000L, Some(3L),
+      buckets = 4)) == reference)
   }
 
-  test("detectTracked leaves no cached blocks after materialize + release") {
+  test("detect join form through a scope leaves no cached blocks after close") {
     val d = dict(
       ("paris", "Q90", false, 50L),
       ("borders", "P47", true, 20L),
       ("berlin", "Q64", false, 40L))
-    val t = turns(("c1", 0, "paris borders berlin today"))
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (df, caches) = Mentions.detectTracked(t, d)
-    assert(df.count() == 3)
-    caches.foreach(_.unpersist(blocking = true))
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((after -- before).isEmpty,
-      s"detect-and-materialize cycle leaked cached RDDs: ${after -- before}")
+    // a plan of its own: the scope claims only what it cached, and an
+    // earlier scope-less detect over the same turns leaves its cache behind
+    val t = turns(("c-scope", 0, "paris borders berlin today"))
+    CacheChecks.assertReleased {
+      val scope = new CacheScope
+      assert(Mentions.detect(t, d, scope, 4, broadcastDict = true).count() == 3)
+      CacheChecks.closeReleased(scope)
+    }
   }
 
   test("detectRouted with a row-count hint runs no dictionary count job") {
     val d = dict(("paris", "Q90", false, 50L))
     val t = turns(("c1", 0, "paris is nice"))
     // hint below the broadcast bound → trie path, zero extra jobs over dict
-    val (fast, c1) = Mentions.detectRouted(t, d, knownDictRows = Some(1L))
-    assert(c1.isEmpty && fast.count() == 1)
-    // hint above the bound → shuffle join, caches returned for release
-    val (slow, c2) = Mentions.detectRouted(t, d,
-      broadcastMaxRows = 0L, knownDictRows = Some(1L))
+    val s1 = new CacheScope
+    val fast = Mentions.detectRouted(t, d, s1, 4, 20000000L, Some(1L), 0)
+    assert(s1.claimed.isEmpty && fast.count() == 1)
+    // hint above the bound → shuffle join, its cache claimed for release
+    val s2 = new CacheScope
+    val slow = Mentions.detectRouted(t, d, s2, 4, 0L, Some(1L), 0)
     assert(slow.count() == 1)
-    c2.foreach(_.unpersist(blocking = false))
+    CacheChecks.closeReleased(s2)
   }
 
   test("co-reference edges link distinct ids sharing a base surface") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.CacheChecks.{assertReleased, checkpointedPlan, closeReleased}
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
 
 /** In-engine verification for the ops without SQL oracles: LSH variants are
@@ -213,7 +214,8 @@ class OpsSpec extends AnyFunSuite {
     val pair = Seq((5000L, s"$shared mu"), (5001L, s"$shared buzz"))
     val df = (hot ++ pair).toDF("doc_id", "text")
 
-    val mh = Dedup.minhashNearDups(df, "doc_id", "text",
+    val scope = new CacheScope
+    val mh = Dedup.minhashNearDups(df, "doc_id", "text", scope,
       thresholdPct = 60, maxDfFraction = 1.0)
       .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(mh == Set((5000L, 5001L)),
@@ -223,9 +225,10 @@ class OpsSpec extends AnyFunSuite {
       .count()
     assert(uncapped > 1100L * 1099 / 2)
 
-    val sh = Dedup.simhashNearDups(df, "doc_id", "text")
+    val sh = Dedup.simhashNearDups(df, "doc_id", "text", scope)
       .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(sh == Set((5000L, 5001L)), s"simhash capped default: $sh")
+    closeReleased(scope)
   }
 
   test("minhash clusters close transitive near-dup chains (pairs alone don't)") {
@@ -271,55 +274,58 @@ class OpsSpec extends AnyFunSuite {
         minQualityMilli = 900, thresholdPct = 80)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getString(2)))).toMap
     assert(out == again)
-    // tracked == plain; the gated quality table is a persisted leaf of the
-    // returned plan (the quality regex scan runs once, not three times),
-    // and the handles release cleanly
-    val (tr, handles) = graft.ops.Curate.curateTracked(df, "doc_id", "text",
-      minQualityMilli = 900, thresholdPct = 80)
-    val got = tr.collect().map(r => (r.getLong(0), (r.getLong(1), r.getString(2)))).toMap
-    assert(got == out)
-    val leaves = tr.queryExecution.optimizedPlan.collectLeaves()
-    assert(leaves.exists(
+    // the gated quality table is a persisted leaf of the materialized
+    // survivor plan (the quality regex scan runs once, not three times),
+    // and every cache curate persisted is released
+    var got: org.apache.spark.sql.DataFrame = null
+    val plan = checkpointedPlan {
+      got = assertReleased(graft.ops.Curate.curate(df, "doc_id", "text",
+        minQualityMilli = 900, thresholdPct = 80))
+    }
+    assert(got.collect().map(r => (r.getLong(0), (r.getLong(1), r.getString(2)))).toMap == out)
+    assert(plan.collectLeaves().exists(
       _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]),
-      s"the quality cache must back the survivor plan:\n${tr.queryExecution.optimizedPlan}")
-    handles.foreach(_.unpersist(blocking = true))
-    assert(handles.forall(!_.storageLevel.useMemory))
+      s"the quality cache must back the survivor plan:\n$plan")
   }
 
-  test("tracked near-dup entry points evaluate the signature plan once") {
-    import spark.implicits._
+  test("scoped near-dup entry points evaluate the signature plan once") {
     val df = corpus
-    // minhash: tracked == plain capped operator, and the returned plan's
-    // leaves are ALL InMemoryRelations — no path in it can re-run the
+    // minhash: the scoped entry == the capped operator, and the returned
+    // plan's leaves are ALL InMemoryRelations — no path in it can re-run the
     // tokenize→sign→band computation (it ran once, in the measurement action
     // that filled the caches)
-    val (mh, mhCaches) = Dedup.minhashNearDupsTracked(df, "doc_id", "text",
-      thresholdPct = 70, maxDfFraction = 1.0, corpusRowsHint = Some(38L))
     val want = Dedup.minhashLshPairs(df, "doc_id", "text", thresholdPct = 70,
         maxDf = 38L, maxBucket = 1000L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(mh.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == want)
-    val mhLeaves = mh.queryExecution.optimizedPlan.collectLeaves()
-    assert(mhLeaves.nonEmpty && mhLeaves.forall(
-      _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]),
-      s"every leaf must read the cache:\n${mh.queryExecution.optimizedPlan}")
-    // three handles since r6: toks, banded, and the shared bucket-counts
-    // table (aggregated once for both the drop-volume probe and the cap
-    // semi-join)
-    assert(mhCaches.size == 3 && mhCaches.forall(_.storageLevel.useMemory))
-    mhCaches.foreach(_.unpersist(blocking = true))
-    assert(mhCaches.forall(!_.storageLevel.useMemory))
+    assertReleased {
+      val scope = new CacheScope
+      val mh = Dedup.minhashNearDups(df, "doc_id", "text", scope,
+        thresholdPct = 70, maxDfFraction = 1.0, corpusRowsHint = Some(38L))
+      assert(mh.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == want)
+      val mhLeaves = mh.queryExecution.optimizedPlan.collectLeaves()
+      assert(mhLeaves.nonEmpty && mhLeaves.forall(
+        _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]),
+        s"every leaf must read the cache:\n${mh.queryExecution.optimizedPlan}")
+      // three caches since r6: toks, banded, and the shared bucket-counts
+      // table (aggregated once for both the drop-volume probe and the cap
+      // semi-join)
+      assert(scope.claimed.size == 3 && scope.claimed.forall(_.storageLevel.useMemory))
+      closeReleased(scope)
+    }
 
     // simhash twin
-    val (sh, shCaches) = Dedup.simhashNearDupsTracked(df, "doc_id", "text")
     val wantSh = Dedup.simhashPairs(df, "doc_id", "text", maxBucket = 1000L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(sh.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == wantSh)
-    val shLeaves = sh.queryExecution.optimizedPlan.collectLeaves()
-    assert(shLeaves.nonEmpty && shLeaves.forall(
-      _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]),
-      s"every leaf must read the cache:\n${sh.queryExecution.optimizedPlan}")
-    shCaches.foreach(_.unpersist(blocking = true))
+    assertReleased {
+      val scope = new CacheScope
+      val sh = Dedup.simhashNearDups(df, "doc_id", "text", scope)
+      assert(sh.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == wantSh)
+      val shLeaves = sh.queryExecution.optimizedPlan.collectLeaves()
+      assert(shLeaves.nonEmpty && shLeaves.forall(
+        _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]),
+        s"every leaf must read the cache:\n${sh.queryExecution.optimizedPlan}")
+      closeReleased(scope)
+    }
   }
 
   test("countOverfullBuckets measures exactly what the cap drops") {
@@ -335,35 +341,26 @@ class OpsSpec extends AnyFunSuite {
   test("clusters entry point: capped defaults + single-eval pairs plan") {
     // capped defaults are a no-op at this corpus size (maxDf = max(100,
     // 38/100) = 100 > any df; no bucket near 1000), so the capped entry
-    // point must equal the uncapped composition — while its pairs plan
-    // reads ONLY the persisted signature caches
-    val (clusters, pairs, handles) = Dedup.minhashClustersTracked(
-      corpus, "doc_id", "text", thresholdPct = 70)
+    // point must equal the uncapped composition — while the pairs plan it
+    // clusters reads ONLY the persisted signature caches
+    val scope = new CacheScope
+    val pairs = Dedup.minhashNearDups(corpus, "doc_id", "text", scope, thresholdPct = 70)
     val leaves = pairs.queryExecution.optimizedPlan.collectLeaves()
     assert(leaves.nonEmpty && leaves.forall(
       _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]),
       s"clusters pairs plan must read the cache:\n${pairs.queryExecution.optimizedPlan}")
-    val got = clusters.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    closeReleased(scope)
     val want = graft.pipeline.Canonicalize.connectedComponents(
         Dedup.minhashLshPairs(corpus, "doc_id", "text", thresholdPct = 70)
           .select(col("a").as("u"), col("b").as("v")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got == want, s"capped-default clusters == uncapped at no-op scale")
-    handles.foreach(_.unpersist(blocking = true))
-
-    // the untracked wrapper releases its own caches (CC's probe/checkpoint
-    // has pinned the edge set by then). The release is unpersist(blocking =
-    // false) — ASYNC — so poll by rdd-id until the call's own additions are
-    // gone instead of comparing a racy global size snapshot (which also
-    // breaks under parallel suites sharing this session).
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    Dedup.minhashClusters(corpus, "doc_id", "text", thresholdPct = 70).count()
-    def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    val deadline = System.currentTimeMillis() + 30000
-    while (leaked.nonEmpty && System.currentTimeMillis() < deadline)
-      Thread.sleep(100)
-    assert(leaked.isEmpty,
-      s"minhashClusters must not leak its signature caches: rdd ids $leaked")
+    // the entry point releases its own caches (CC's probe/checkpoint has
+    // pinned the edge set by then)
+    assertReleased {
+      val got = Dedup.minhashClusters(corpus, "doc_id", "text", thresholdPct = 70)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(got == want, s"capped-default clusters == uncapped at no-op scale")
+    }
   }
 
   test("clusters/curate: planted hot bucket stays bounded under the caps") {
@@ -632,22 +629,22 @@ class OpsSpec extends AnyFunSuite {
       "default cap (10k) must be a no-op on small clusters == explicit uncapped")
   }
 
-  test("semantic dedup tracked: assignment evaluated once, leaves read the cache") {
-    val (out, handles) = Similarity.semanticDedupTracked(
-      vecs10x, "vec_id", "embedding", thresholdPct = 40)
+  test("semantic dedup: assignment evaluated once, leaves read the cache") {
+    var out: org.apache.spark.sql.DataFrame = null
+    val plan = checkpointedPlan {
+      out = assertReleased(
+        Similarity.semanticDedup(vecs10x, "vec_id", "embedding", thresholdPct = 40))
+    }
     // every leaf of the pair+keep plan is a persisted cache — no path in it
     // can re-run the Lloyd assignment (it ran once, in the cap-probe action)
-    val leaves = out.queryExecution.optimizedPlan.collectLeaves()
+    val leaves = plan.collectLeaves()
     assert(leaves.nonEmpty && leaves.forall(
       _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]),
-      s"every leaf must read the cache:\n${out.queryExecution.optimizedPlan}")
-    val got = out.collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-    handles.foreach(_.unpersist(blocking = true))
-    assert(handles.forall(!_.storageLevel.useMemory))
-    // tracked == the plain (materialized) entry point
-    val plain = Similarity.semanticDedup(vecs10x, "vec_id", "embedding",
+      s"every leaf must read the cache:\n$plan")
+    // the materialized result == a recomputation
+    val again = Similarity.semanticDedup(vecs10x, "vec_id", "embedding",
       thresholdPct = 40)
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
-    assert(got == plain)
+    assert(out.collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap == again)
   }
 }

@@ -390,6 +390,19 @@ class PipelineE2ESpec extends AnyFunSuite {
     intercept[Exception] { store.snapshotTable(s1, "st").collect() }
   }
 
+  test("a fingerprint with quotes and backslashes resumes and reads back exactly") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-fp-escape").toString
+    val store = new graft.io.ManifestStore(spark, out)
+    val fp = "iv=run \"7\";src=C:\\dumps\\\"q\\\";saltN=0"
+    store.runStage("st", fp)(Seq((1L, "one"), (2L, "two")).toDF("k", "v"))
+    val (_, resumed) = store.runStage("st", fp)(fail("must resume"))
+    assert(resumed, "the second run must resume the committed stage")
+    assert(store.fingerprintOf("st").contains(fp))
+    val snap = store.commitSnapshot()
+    assert(store.snapshotTable(snap, "st").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+  }
+
   test("pipeline run returns a committed snapshot id covering every stage") {
     val entities = Synth.entityDump(spark, nEnts)
     val properties = Synth.propertyDump(spark, mProps)

@@ -163,8 +163,8 @@ class PlanSpec extends AnyFunSuite {
       store.runStageBucketed("mentions", "fp-ord",
         graft.pipeline.KgPipeline.MentionBucketCols,
         graft.pipeline.KgPipeline.MentionSortCols, nBuckets = 4) {
-        graft.pipeline.Mentions.detectRouted(turns, dict, 4, Long.MaxValue,
-          Some(1L), buckets = 4)._1
+        graft.pipeline.Mentions.detectRouted(turns, dict, new CacheScope, 4,
+          Long.MaxValue, Some(1L), buckets = 4)
       }
       spark.range(1).toDF("plan_spec_marker").collect()
       val deadline = System.nanoTime() + 30000000000L
