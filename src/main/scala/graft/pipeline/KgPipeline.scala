@@ -86,32 +86,85 @@ object KgPipeline {
   val MentionSortCols: Seq[String] =
     Seq("conv_id", "turn_idx", "span_start", "span_end", "id")
 
+  /** Every stage `run` commits, in pipeline order: the order of its
+    * `_metrics` rows.
+    */
+  private val StageOrder: Seq[String] = Seq("entity_index", "property_index",
+    "mentions", "link_scores", "triples", "canonical_map", "triples_canonical",
+    "nodes", "edges")
+
   /** The stage hook `run` and `linkAndMaterialize`'s default share: chains
     * each stage's fingerprint onto its parents' (a parent this hook never
     * ran — the prebuilt dictionary — resolves to `unknownParent`), commits
     * through `store` (bucketed for the mentions stage when `buckets > 0`)
-    * and records each stage's (name, wall ms, resumed).
+    * and records each stage's (name, wall ms, resumed). Stages of one wave
+    * call it concurrently; every parent of a stage belongs to an earlier
+    * wave, so its fingerprint is chained before the stage starts. The
+    * stage's Spark jobs carry its name as their job description (a
+    * thread-local property, so concurrent stages label their own jobs).
     */
-  private final class Stages(store: ManifestStore, baseFp: String,
+  private final class Stages(spark: SparkSession, store: ManifestStore, baseFp: String,
       unknownParent: String, buckets: Int, maxRecordsPerFile: Long)
       extends ((String, Seq[String], Seq[String]) => (=> DataFrame) => DataFrame) {
-    val chain = scala.collection.mutable.Map.empty[String, String]
-    val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Boolean)]
+    private val chain = scala.collection.mutable.Map.empty[String, String]
+    private val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Boolean)]
+
+    def fingerprint(stage: String): String = synchronized(chain(stage))
+
+    /** (stage, wall ms, resumed) of every stage run, in [[StageOrder]]. */
+    def timingsInOrder: Seq[(String, Long, Boolean)] =
+      synchronized(timings.toSeq).sortBy(t => StageOrder.indexOf(t._1))
+
     def apply(stage: String, parents: Seq[String],
         partitionBy: Seq[String]): (=> DataFrame) => DataFrame = f => {
-      val fp = stageFp(baseFp, stage, parents.map(p => p -> chain.getOrElse(p, unknownParent)))
-      chain(stage) = fp
-      val s = System.currentTimeMillis()
-      val (df, resumed) =
-        if (stage == "mentions" && buckets > 0)
-          store.runStageBucketed(stage, fp, MentionBucketCols, MentionSortCols,
-            buckets, StageDistinct.get(stage), maxRecordsPerFile,
-            StageDegree.get(stage))(f)
-        else store.runStage(stage, fp, partitionBy,
-          StageDistinct.get(stage), maxRecordsPerFile, StageDegree.get(stage))(f)
-      timings += ((stage, System.currentTimeMillis() - s, resumed))
-      df
+      val fp = synchronized {
+        val fp = stageFp(baseFp, stage, parents.map(p => p -> chain.getOrElse(p, unknownParent)))
+        chain(stage) = fp
+        fp
+      }
+      val sc = spark.sparkContext
+      val description = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(stage)
+      try {
+        val s = System.currentTimeMillis()
+        val (df, resumed) =
+          if (stage == "mentions" && buckets > 0)
+            store.runStageBucketed(stage, fp, MentionBucketCols, MentionSortCols,
+              buckets, StageDistinct.get(stage), maxRecordsPerFile,
+              StageDegree.get(stage))(f)
+          else store.runStage(stage, fp, partitionBy,
+            StageDistinct.get(stage), maxRecordsPerFile, StageDegree.get(stage))(f)
+        synchronized { timings += ((stage, System.currentTimeMillis() - s, resumed)) }
+        df
+      } finally sc.setJobDescription(description)
     }
+  }
+
+  /** Runs one wave of independent stages, each on a fresh thread, joins them
+    * all, then rethrows the first failure in wave order (later ones are
+    * attached as suppressed). Fresh threads, never a shared pool: a thread
+    * inherits the creating thread's Spark local properties (job group,
+    * description, scheduler pool) when it is created, so the wave's jobs
+    * belong to the caller's job group. A stage that fails leaves its
+    * siblings running to their commit.
+    */
+  private def wave(stages: (() => DataFrame)*): Seq[DataFrame] = {
+    val results = new Array[DataFrame](stages.size)
+    val failures = new Array[Throwable](stages.size)
+    val threads = stages.zipWithIndex.map { case (stage, i) =>
+      val t = new Thread(() =>
+        try results(i) = stage()
+        catch { case e: Throwable => failures(i) = e }, s"graft-stage-wave-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    failures.find(_ != null).foreach { first =>
+      failures.filter(e => e != null && (e ne first)).foreach(first.addSuppressed)
+      throw first
+    }
+    results.toSeq
   }
 
   /** Rendered entity+property dictionary for the linker, with popularity
@@ -197,6 +250,11 @@ object KgPipeline {
     *                       = AUTO (defaultParallelism buckets — the
     *                       production shape); 0 opts out (unbucketed);
     *                       positive is explicit
+    * @return the stage outputs; `metrics` holds one row per stage, in
+    *         pipeline order (also appended to `outDir/_metrics`). The
+    *         `wall_ms` of stages in one wave overlap: `entity_index` with
+    *         `property_index`, `link_scores`, `triples` and `canonical_map`
+    *         with each other, and `nodes` with `edges`.
     */
   def run(
       spark: SparkSession,
@@ -218,40 +276,41 @@ object KgPipeline {
     val t0 = System.currentTimeMillis()
     // fingerprint chain: stage fp = base config + input version + parent fps
     // (every parent of a `run` stage ran before it)
-    val stages = new Stages(store, s"cfg=$cfg;saltN=$saltN;iv=$inputVersion", "",
+    val stages = new Stages(spark, store, s"cfg=$cfg;saltN=$saltN;iv=$inputVersion", "",
       buckets, maxRecordsPerFile)
 
     // persistInput forced: the pipeline reads the dump beyond the cascade
     // (dictionary weights join + nodes stage), and its input is often a
     // synthesized/derived plan, not a pruned columnar scan
     val entityCaches = new CacheScope
-    val entityIndexRaw = EntityIndexBuilder.build(entities, entityCaches, cfg, persistInput = true)
-    val entityIndex = stages("entity_index", Nil, Nil) { entityIndexRaw }
-    val propertyIndex = stages("property_index", Nil, Nil) {
-      PropertyIndexBuilder.build(properties)
-    }
-    val dict = dictionary(entityIndex, entities, propertyIndex, properties)
-    // safe UPPER bound on dictionary rows from the committed stage manifests
-    // (renderSurfaces only dedups) — saves detectRouted a counting job over the
-    // dictionary plan (VERDICT r02 #5 / ADVICE r02)
-    val dictRowsHint = for {
-      e <- store.rowCountOf("entity_index")
-      p <- store.rowCountOf("property_index")
-    } yield e + p
+    // the builder's caches are released only at the end (r6), or when a
+    // stage throws: the INPUT dump cache is among them, and the dictionary
+    // weights join below plus the nodes stage inside linkAndMaterialize each
+    // read the dump again — releasing right after the entity_index stage
+    // (the r5 shape) made those re-run the upstream dump plan
+    val r = try {
+      val entityIndexRaw = EntityIndexBuilder.build(entities, entityCaches, cfg, persistInput = true)
+      val Seq(entityIndex, propertyIndex) = wave(
+        () => stages("entity_index", Nil, Nil) { entityIndexRaw },
+        () => stages("property_index", Nil, Nil) { PropertyIndexBuilder.build(properties) })
+      val dict = dictionary(entityIndex, entities, propertyIndex, properties)
+      // safe UPPER bound on dictionary rows from the committed stage manifests
+      // (renderSurfaces only dedups) — saves detectRouted a counting job over the
+      // dictionary plan (VERDICT r02 #5 / ADVICE r02)
+      val dictRowsHint = for {
+        e <- store.rowCountOf("entity_index")
+        p <- store.rowCountOf("property_index")
+      } yield e + p
 
-    val r = linkAndMaterialize(spark, transcripts, entities, redirects, dict,
-      entityIndex, propertyIndex, outDir, saltN, inputVersion, checkpointDir,
-      dictBroadcastMaxRows, dictRowsHint, s"ei=${stages.chain("entity_index")};pi=${stages.chain("property_index")}",
-      stages, maxRecordsPerFile, buckets)
-    // release the builder's caches only now (r6): the INPUT dump cache is
-    // among them, and the dictionary weights join above plus the nodes
-    // stage inside linkAndMaterialize each read the dump again — releasing
-    // right after the entity_index stage (the r5 shape) made those re-run
-    // the upstream dump plan. Every stage is committed by this point.
-    entityCaches.close()
+      linkAndMaterialize(spark, transcripts, entities, redirects, dict,
+        entityIndex, propertyIndex, outDir, saltN, inputVersion, checkpointDir,
+        dictBroadcastMaxRows, dictRowsHint,
+        s"ei=${stages.fingerprint("entity_index")};pi=${stages.fingerprint("property_index")}",
+        stages, maxRecordsPerFile, buckets)
+    } finally entityCaches.close()
 
     import spark.implicits._
-    val metrics = stages.timings.toSeq
+    val metrics = stages.timingsInOrder
       .map { case (st, ms, res) =>
         (st, store.rowCountOf(st).getOrElse(-1L), ms, res, System.currentTimeMillis() - t0) }
       .toDF("stage", "rows_out", "wall_ms", "resumed", "total_ms")
@@ -274,7 +333,14 @@ object KgPipeline {
     * @param dictVersion   identity of the PREBUILT dictionary, folded into
     *                      every stage fingerprint: re-running into the same
     *                      outDir with a different dictionary must not resume
-    *                      stale mentions/triples (ADVICE r02)
+    *                      stale mentions/triples (ADVICE r02). With the
+    *                      `dict` frame it also keys the dictionary broadcast
+    *                      that calls reuse ([[Mentions.dictBroadcast]])
+    * @param timedOpt      stage hook replacing the default commit of each
+    *                      stage: `(stage, parents, partitionBy)(compute)`
+    *                      returns the stage's output. It is called one stage
+    *                      at a time, possibly off the caller's thread (the
+    *                      stages of a wave run on their own threads)
     */
   def linkAndMaterialize(
       spark: SparkSession,
@@ -300,55 +366,69 @@ object KgPipeline {
     // unknown parents (the prebuilt dictionary) resolve to dictVersion, so
     // the dictionary's identity enters the fingerprint chain
     val timed: (String, Seq[String], Seq[String]) => (=> DataFrame) => DataFrame =
-      if (timedOpt != null) timedOpt
-      else new Stages(mStore, s"iv=$inputVersion;saltN=$saltN", dictVersion, buckets,
-        maxRecordsPerFile)
+      timedOpt match {
+        case null => new Stages(spark, mStore, s"iv=$inputVersion;saltN=$saltN", dictVersion,
+          buckets, maxRecordsPerFile)
+        case stages: Stages => stages
+        case hook =>
+          // a caller's hook sees one stage at a time, whatever the waves
+          val lock = new Object
+          (stage, parents, partitionBy) => f =>
+            lock.synchronized(hook(stage, parents, partitionBy)(f))
+      }
 
+    // the stages run in waves — mentions → {link_scores, triples,
+    // canonical_map} → triples_canonical → {nodes, edges} — each stage of a
+    // wave reading only stages of earlier waves
     val mentionCaches = new CacheScope
-    val mentions = timed("mentions", Seq("entity_index", "property_index"), Nil) {
-      // the trie path clusters its ordinal rows into the stage's buckets,
-      // so the bucketed write's repartition is planned away (Mentions.detectTrie)
-      Mentions.detectRouted(transcripts, dict, mentionCaches, maxN = 4,
-        broadcastMaxRows = dictBroadcastMaxRows, knownDictRows = dictRowsHint,
-        buckets = buckets)
-    }
-    // the stage is materialized (or resumed) — release detection's caches
-    mentionCaches.close()
+    val mentions =
+      try timed("mentions", Seq("entity_index", "property_index"), Nil) {
+        // the trie path clusters its ordinal rows into the stage's buckets,
+        // so the bucketed write's repartition is planned away (Mentions.detectTrie)
+        Mentions.detectRouted(transcripts, dict, mentionCaches, maxN = 4,
+          broadcastMaxRows = dictBroadcastMaxRows, knownDictRows = dictRowsHint,
+          buckets = buckets, dictVersion = Some(dictVersion))
+      }
+      // the stage is materialized (or resumed), or failed — release
+      // detection's caches
+      finally mentionCaches.close()
     // skew hint for the link-score salt gate: the HEAD-KEY degree (max
     // mentions per linked id) recorded by the mentions stage write as a
     // column stat in its manifest — a mean cannot bound the head degree
     // (ADVICE r04). A resumed pre-hint manifest yields None → the
     // conservative salted shape (unless the caller forced saltN).
     val maxIdDegree = mStore.maxDegreeOf("mentions")
-    val scores = timed("link_scores", Seq("mentions"), Nil) {
-      SaltedAgg.linkScores(mentions, saltN, maxIdDegree)
-    }
-    val triples = timed("triples", Seq("mentions"), Nil) {
-      // relational-grouping walk on BOTH paths (r5): over the bucketed
-      // mentions table it plans with zero Exchange (the write already
-      // co-located conversations), and on unbucketed input its UnsafeRow
-      // exchange measured ~25% faster than the typed groupByKey shape
-      // (24.1→19.5 s at 2 threads, 7.3→5.2 at 8, on 30M mentions)
-      Triples.extractBucketed(mentions)
-    }
-    val canon = timed("canonical_map", Seq("mentions"), Nil) {
-      Canonicalize.connectedComponents(
-        coreferenceEdges(mentions, redirects), checkpointDir = checkpointDir)
-    }
+    val Seq(scores, triples, canon) = wave(
+      () => timed("link_scores", Seq("mentions"), Nil) {
+        SaltedAgg.linkScores(mentions, saltN, maxIdDegree)
+      },
+      () => timed("triples", Seq("mentions"), Nil) {
+        // relational-grouping walk on BOTH paths (r5): over the bucketed
+        // mentions table it plans with zero Exchange (the write already
+        // co-located conversations), and on unbucketed input its UnsafeRow
+        // exchange measured ~25% faster than the typed groupByKey shape
+        // (24.1→19.5 s at 2 threads, 7.3→5.2 at 8, on 30M mentions)
+        Triples.extractBucketed(mentions)
+      },
+      () => timed("canonical_map", Seq("mentions"), Nil) {
+        Canonicalize.connectedComponents(
+          coreferenceEdges(mentions, redirects), checkpointDir = checkpointDir)
+      })
     val canonTriples = timed("triples_canonical", Seq("triples", "canonical_map"), Nil) {
       Canonicalize.canonicalizeTriples(triples, canon)
     }
-    val nodes = timed("nodes", Seq("triples_canonical"), Nil) {
-      val ids = canonTriples.select(col("subj").as("id"))
-        .union(canonTriples.select(col("obj").as("id"))).distinct()
-      ids.join(entities.select(col("qid").as("id"), col("label"), col("count")),
-        Seq("id"), "left")
-    }
-    val edges = timed("edges", Seq("triples_canonical"), Nil) {
-      canonTriples.groupBy(col("subj").as("src"), col("pred").as("pid"),
-        col("obj").as("dst"))
-        .agg(count(lit(1)).as("weight"), sum(col("score")).as("score"))
-    }
+    val Seq(nodes, edges) = wave(
+      () => timed("nodes", Seq("triples_canonical"), Nil) {
+        val ids = canonTriples.select(col("subj").as("id"))
+          .union(canonTriples.select(col("obj").as("id"))).distinct()
+        ids.join(entities.select(col("qid").as("id"), col("label"), col("count")),
+          Seq("id"), "left")
+      },
+      () => timed("edges", Seq("triples_canonical"), Nil) {
+        canonTriples.groupBy(col("subj").as("src"), col("pred").as("pid"),
+          col("obj").as("dst"))
+          .agg(count(lit(1)).as("weight"), sum(col("score")).as("score"))
+      })
     // standalone callers get an EMPTY metrics frame (never null — ADVICE
     // r02); `run` replaces it with the per-stage timings it gathers itself
     import spark.implicits._

@@ -169,32 +169,6 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(store.rowCountOf("sized").contains(5000L))
   }
 
-  /** Spark jobs `body` launches. The listener bus is asynchronous, so a
-    * marker job in another group runs after `body`, and the count is read
-    * once the listener has seen the marker (events arrive in order).
-    */
-  def jobsLaunchedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"probe-${System.nanoTime()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "probe")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.contains(s"$group-end") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(s"$group-end"), "listener never saw the marker job")
-      seen.toArray.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("stage reads use the recorded schema: no inference job, same schema") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft-schema-read").toString
@@ -205,12 +179,12 @@ class PipelineE2ESpec extends AnyFunSuite {
       spark.read.parquet(s"$out/$stage/${store.dataDirOf(stage).get}").schema
     // plain stage: the commit runs what a bare write runs (no extra job to
     // infer the schema back), the resume runs nothing
-    val bareJobs = jobsLaunchedBy(df.write.parquet(
+    val bareJobs = JobLog.jobsLaunchedBy(df.write.parquet(
       Files.createTempDirectory("graft-bare").resolve("w").toString))
     var committed: org.apache.spark.sql.DataFrame = null
-    assert(jobsLaunchedBy { committed = store.runStage("plain", "fp-p")(df)._1 } == bareJobs)
+    assert(JobLog.jobsLaunchedBy { committed = store.runStage("plain", "fp-p")(df)._1 } == bareJobs)
     var resumed: org.apache.spark.sql.DataFrame = null
-    assert(jobsLaunchedBy {
+    assert(JobLog.jobsLaunchedBy {
       resumed = store.runStage("plain", "fp-p")(fail("must resume"))._1
     } == 0)
     assert(committed.schema == inferred("plain") && resumed.schema == inferred("plain"))
@@ -418,6 +392,12 @@ class PipelineE2ESpec extends AnyFunSuite {
     // the pinned mentions read equals the live stage
     assert(store.snapshotTable(res.snapshotId, "triples").count() ==
       res.triples.count())
+    // _metrics rows follow the pipeline's stage order, whatever order the
+    // stages of one wave finished in
+    val order = Seq("entity_index", "property_index", "mentions", "link_scores", "triples",
+      "canonical_map", "triples_canonical", "nodes", "edges")
+    assert(res.metrics.collect().map(_.getString(0)).toSeq == order)
+    assert(spark.read.parquet(s"$outDir/_metrics").collect().map(_.getString(0)).toSeq == order)
   }
 
   test("resume: second run reads every stage from manifests; outputs identical") {
@@ -504,6 +484,131 @@ class PipelineE2ESpec extends AnyFunSuite {
     KgPipeline.linkAndMaterialize(spark, transcripts, entities, redirects,
       dict, ei, pi, outDir, dictVersion = "dict-v2")
     assert(mentionsManifest() != m1, "new dictionary must invalidate mentions")
+  }
+
+  test("a wave's stages run concurrently: link_scores, triples and canonical_map jobs overlap") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val entities = Synth.entityDump(spark, nEnts)
+    val properties = Synth.propertyDump(spark, mProps)
+    val transcripts = Synth.transcripts(spark, 8L, 4, nEnts, mProps)
+    // canonical_map's first job reads the redirects: its tasks wait (30 s at
+    // most) until jobs of both siblings have started, so the canonical_map
+    // job cannot finish before its siblings begin
+    WaveGate.siblings = new CountDownLatch(2)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val gate = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val d = String.valueOf(e.properties.getProperty("spark.job.description"))
+        if (Set("link_scores", "triples").contains(d) && seen.add(d)) WaveGate.siblings.countDown()
+      }
+    }
+    val held = udf { (q: String) => WaveGate.siblings.await(30, TimeUnit.SECONDS); q }
+    val redirects = Synth.redirects(spark, nEnts).withColumn("qid", held(col("qid")))
+    val outDir = Files.createTempDirectory("graft-wave").toString
+    spark.sparkContext.addSparkListener(gate)
+    val jobs = try JobLog.jobsOf {
+      KgPipeline.run(spark, transcripts, entities, properties, redirects, outDir)
+    } finally spark.sparkContext.removeSparkListener(gate)
+    val byStage = jobs.groupBy(_.description)
+    for (sibling <- Seq("link_scores", "triples"))
+      assert(byStage(sibling).exists(j => byStage("canonical_map").exists(_.overlaps(j))),
+        s"no $sibling job overlaps a canonical_map job: $jobs")
+    // each stage's jobs carry its name as their description
+    assert(Set("entity_index", "property_index", "mentions", "link_scores", "triples",
+      "canonical_map", "triples_canonical", "nodes", "edges").subsetOf(byStage.keySet),
+      byStage.keySet)
+  }
+
+  test("a failing stage fails its wave after its siblings commit; a rerun resumes them") {
+    import spark.implicits._
+    val entities = Synth.entityDump(spark, nEnts)
+    val redirects = Synth.redirects(spark, nEnts)
+    val transcripts = Synth.transcripts(spark, 8L, 4, nEnts, mProps)
+    val properties = Synth.propertyDump(spark, mProps)
+    val scope = new CacheScope
+    val ei = graft.index.EntityIndexBuilder.build(entities, scope,
+      EntityIndexConfig(), persistInput = true)
+    val pi = graft.index.PropertyIndexBuilder.build(properties)
+    val dict = KgPipeline.dictionary(ei, entities, pi, properties)
+    val outDir = Files.createTempDirectory("graft-wave-fail").toString
+    val store = new graft.io.ManifestStore(spark, outDir)
+    // an earlier edges commit whose `src` is a number: the pipeline's string
+    // `src` is a retype, refused before its write
+    store.runStage("edges", "fp-old")(
+      Seq((1L, "P1", "Q2", 1L, 1.0)).toDF("src", "pid", "dst", "weight", "score"))
+    def span(): Unit = KgPipeline.linkAndMaterialize(spark, transcripts, entities,
+      redirects, dict, ei, pi, outDir, dictVersion = "wave-fail")
+    val e = intercept[graft.io.SchemaEvolutionException](span())
+    assert(e.getMessage.contains("'edges'") && e.getMessage.contains("'src' retyped"))
+    assert(store.versionOf("nodes") == 1L, "edges' sibling nodes must be committed")
+    val nodesFp = store.fingerprintOf("nodes")
+    intercept[graft.io.SchemaEvolutionException](span())
+    assert(store.versionOf("nodes") == 1L && store.fingerprintOf("nodes") == nodesFp,
+      "the rerun must resume nodes, not recommit it")
+    assert(store.fingerprintOf("edges").contains("fp-old"))
+    scope.close()
+  }
+
+  test("span jobs reuse the dictionary broadcast of the same frame and dictVersion") {
+    val entities = Synth.entityDump(spark, nEnts)
+    val redirects = Synth.redirects(spark, nEnts)
+    val transcripts = Synth.transcripts(spark, 8L, 4, nEnts, mProps)
+    val properties = Synth.propertyDump(spark, mProps)
+    val scope = new CacheScope
+    val ei = graft.index.EntityIndexBuilder.build(entities, scope,
+      EntityIndexConfig(), persistInput = true)
+    val pi = graft.index.PropertyIndexBuilder.build(properties)
+    def newDict() = KgPipeline.dictionary(ei, entities, pi, properties)
+    def span(dict: org.apache.spark.sql.DataFrame, version: String): Seq[JobRec] =
+      JobLog.jobsOf(KgPipeline.linkAndMaterialize(spark, transcripts, entities, redirects,
+        dict, ei, pi, Files.createTempDirectory("graft-dict-reuse").toString,
+        dictVersion = version))
+    def collects(jobs: Seq[JobRec]) = jobs.filter(_.callSite.startsWith("collect at Mentions"))
+    val dict = newDict()
+    val first = span(dict, "reuse-v1")
+    assert(collects(first).size == 1, first)
+    // the same frame and version: no dictionary collect, nothing else changes
+    val again = span(dict, "reuse-v1")
+    assert(collects(again).isEmpty, again)
+    assert(again.size == first.size - 1)
+    // a new frame, or a new version, rebuilds it
+    assert(collects(span(newDict(), "reuse-v1")).size == 1)
+    assert(collects(span(dict, "reuse-v2")).size == 1)
+
+    // a frame detected before the key changed still decodes through its
+    // broadcast, which was dropped, never destroyed
+    val turns = transcripts.select("conv_id", "turn_idx", "text")
+    val expected = graft.pipeline.Mentions.detectFast(turns, dict).count()
+    val early = graft.pipeline.Mentions.detectRouted(turns, dict, new CacheScope, 4,
+      20000000L, Some(1L), 0, Some("reuse-v3"))
+    val bc = graft.pipeline.Mentions.dictBroadcast(dict, Some("reuse-v3"))
+    assert(graft.pipeline.Mentions.dictBroadcast(dict, Some("reuse-v3")).id == bc.id)
+    assert(graft.pipeline.Mentions.dictBroadcast(dict, Some("reuse-v4")).id != bc.id)
+    System.gc()
+    assert(early.count() == expected)
+    scope.close()
+  }
+
+  test("a failing mentions commit releases detection's and the builder's caches") {
+    val entities = Synth.entityDump(spark, nEnts)
+    val properties = Synth.propertyDump(spark, mProps)
+    val redirects = Synth.redirects(spark, nEnts)
+    // every turn's text throws inside the mentions write job, after the
+    // join path's match set and the builder's caches are in use
+    val planted = udf { (t: String) => if (t != null) throw new IllegalStateException("planted"); t }
+    val transcripts = Synth.transcripts(spark, 8L, 4, nEnts, mProps)
+      .withColumn("text", planted(col("text")))
+    val outDir = Files.createTempDirectory("graft-fail-release").toString
+    CacheChecks.assertReleased {
+      val e = intercept[Exception] {
+        KgPipeline.run(spark, transcripts, entities, properties, redirects, outDir,
+          dictBroadcastMaxRows = 0L)
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("planted")), e)
+    }
+    val store = new graft.io.ManifestStore(spark, outDir)
+    assert(store.versionOf("entity_index") == 1L && store.versionOf("mentions") == 0L)
   }
 
   /** The two stage layouts the store commits, by test-name suffix: plain,
@@ -680,4 +785,11 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(store.versionOf("st") == 1L)
     assert(store.fingerprintOf("st").contains("fp-v1"))
   }
+}
+
+/** Holds the wave-overlap test's canonical_map tasks until jobs of its
+  * sibling stages have started (tasks of a local master share this JVM).
+  */
+object WaveGate {
+  @volatile var siblings = new java.util.concurrent.CountDownLatch(0)
 }
