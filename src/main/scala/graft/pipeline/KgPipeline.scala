@@ -146,20 +146,37 @@ object KgPipeline {
     * inherits the creating thread's Spark local properties (job group,
     * description, scheduler pool) when it is created, so the wave's jobs
     * belong to the caller's job group. A stage that fails leaves its
-    * siblings running to their commit.
+    * siblings running to their commit. If the caller is interrupted, the
+    * wave's jobs (tagged per wave) are cancelled and its threads interrupted
+    * and joined before the interrupt is rethrown: no stage of the wave runs
+    * on once the call has failed, and no cache the caller then releases is
+    * still being read.
     */
-  private def wave(stages: (() => DataFrame)*): Seq[DataFrame] = {
+  private def wave(spark: SparkSession)(stages: (() => DataFrame)*): Seq[DataFrame] = {
+    val sc = spark.sparkContext
+    val tag = s"graft-wave-${java.util.UUID.randomUUID()}"
     val results = new Array[DataFrame](stages.size)
     val failures = new Array[Throwable](stages.size)
     val threads = stages.zipWithIndex.map { case (stage, i) =>
       val t = new Thread(() =>
-        try results(i) = stage()
+        try { sc.addJobTag(tag); results(i) = stage() }
         catch { case e: Throwable => failures(i) = e }, s"graft-stage-wave-$i")
       t.setDaemon(true)
       t.start()
       t
     }
-    threads.foreach(_.join())
+    try threads.foreach(_.join())
+    catch {
+      case e: InterruptedException =>
+        sc.cancelJobsWithTag(tag)
+        threads.foreach(_.interrupt())
+        threads.foreach { t =>
+          while (t.isAlive) try t.join() catch { case _: InterruptedException => }
+        }
+        // a job a stage submitted after the first cancel, then stopped awaiting
+        sc.cancelJobsWithTag(tag)
+        throw e
+    }
     failures.find(_ != null).foreach { first =>
       failures.filter(e => e != null && (e ne first)).foreach(first.addSuppressed)
       throw first
@@ -290,7 +307,7 @@ object KgPipeline {
     // (the r5 shape) made those re-run the upstream dump plan
     val r = try {
       val entityIndexRaw = EntityIndexBuilder.build(entities, entityCaches, cfg, persistInput = true)
-      val Seq(entityIndex, propertyIndex) = wave(
+      val Seq(entityIndex, propertyIndex) = wave(spark)(
         () => stages("entity_index", Nil, Nil) { entityIndexRaw },
         () => stages("property_index", Nil, Nil) { PropertyIndexBuilder.build(properties) })
       val dict = dictionary(entityIndex, entities, propertyIndex, properties)
@@ -333,9 +350,7 @@ object KgPipeline {
     * @param dictVersion   identity of the PREBUILT dictionary, folded into
     *                      every stage fingerprint: re-running into the same
     *                      outDir with a different dictionary must not resume
-    *                      stale mentions/triples (ADVICE r02). With the
-    *                      `dict` frame it also keys the dictionary broadcast
-    *                      that calls reuse ([[Mentions.dictBroadcast]])
+    *                      stale mentions/triples (ADVICE r02)
     * @param timedOpt      stage hook replacing the default commit of each
     *                      stage: `(stage, parents, partitionBy)(compute)`
     *                      returns the stage's output. It is called one stage
@@ -371,10 +386,13 @@ object KgPipeline {
           buckets, maxRecordsPerFile)
         case stages: Stages => stages
         case hook =>
-          // a caller's hook sees one stage at a time, whatever the waves
-          val lock = new Object
-          (stage, parents, partitionBy) => f =>
-            lock.synchronized(hook(stage, parents, partitionBy)(f))
+          // a caller's hook sees one stage at a time, whatever the waves; a
+          // stage waiting for its turn gives up when its wave is interrupted
+          val lock = new java.util.concurrent.locks.ReentrantLock
+          (stage, parents, partitionBy) => f => {
+            lock.lockInterruptibly()
+            try hook(stage, parents, partitionBy)(f) finally lock.unlock()
+          }
       }
 
     // the stages run in waves — mentions → {link_scores, triples,
@@ -387,7 +405,7 @@ object KgPipeline {
         // so the bucketed write's repartition is planned away (Mentions.detectTrie)
         Mentions.detectRouted(transcripts, dict, mentionCaches, maxN = 4,
           broadcastMaxRows = dictBroadcastMaxRows, knownDictRows = dictRowsHint,
-          buckets = buckets, dictVersion = Some(dictVersion))
+          buckets = buckets)
       }
       // the stage is materialized (or resumed), or failed — release
       // detection's caches
@@ -398,7 +416,7 @@ object KgPipeline {
     // (ADVICE r04). A resumed pre-hint manifest yields None → the
     // conservative salted shape (unless the caller forced saltN).
     val maxIdDegree = mStore.maxDegreeOf("mentions")
-    val Seq(scores, triples, canon) = wave(
+    val Seq(scores, triples, canon) = wave(spark)(
       () => timed("link_scores", Seq("mentions"), Nil) {
         SaltedAgg.linkScores(mentions, saltN, maxIdDegree)
       },
@@ -417,7 +435,7 @@ object KgPipeline {
     val canonTriples = timed("triples_canonical", Seq("triples", "canonical_map"), Nil) {
       Canonicalize.canonicalizeTriples(triples, canon)
     }
-    val Seq(nodes, edges) = wave(
+    val Seq(nodes, edges) = wave(spark)(
       () => timed("nodes", Seq("triples_canonical"), Nil) {
         val ids = canonTriples.select(col("subj").as("id"))
           .union(canonTriples.select(col("obj").as("id"))).distinct()

@@ -256,38 +256,6 @@ object Mentions {
     spark.sparkContext.broadcast(rows)
   }
 
-  /** The one reused [[DictRows]] broadcast and the key it was built for. */
-  private final class SharedDict(sc: org.apache.spark.SparkContext, frame: DataFrame,
-      version: String, val bc: org.apache.spark.broadcast.Broadcast[DictRows]) {
-    private val scRef = new java.lang.ref.WeakReference(sc)
-    private val frameRef = new java.lang.ref.WeakReference(frame)
-    def matches(s: org.apache.spark.SparkContext, f: DataFrame, v: String): Boolean =
-      (scRef.get eq s) && (frameRef.get eq f) && version == v
-  }
-  private var shared: SharedDict = null
-
-  /** The dictionary broadcast for `dictVersion`: None compacts and
-    * broadcasts afresh ([[compactDict]]). Some(v) reuses the broadcast the
-    * last call built while the SparkContext, the dictionary frame (by
-    * reference) and `v` are unchanged: a prebuilt dictionary reused across
-    * span jobs then skips its collect, and executors keep the trie they
-    * built for its broadcast id. At most one broadcast is held; on a new key
-    * the old one is only dropped, never destroyed, because a lazy frame
-    * returned earlier may still decode through it — the ContextCleaner
-    * frees it once no plan holds it.
-    */
-  private[graft] def dictBroadcast(dictionary: DataFrame,
-      dictVersion: Option[String]): org.apache.spark.broadcast.Broadcast[DictRows] =
-    dictVersion match {
-      case None => compactDict(dictionary)
-      case Some(v) => synchronized {
-        val sc = dictionary.sparkSession.sparkContext
-        if (shared == null || !shared.matches(sc, dictionary, v))
-          shared = new SharedDict(sc, dictionary, v, compactDict(dictionary))
-        shared.bc
-      }
-    }
-
   /** Whitespace tokenizer of the scan hot loop, compiled ONCE per JVM:
     * `String.split("\\s+")` recompiles the regex on every call (the JDK
     * fast path covers only single literal characters) — at 10^7 turns per
@@ -359,12 +327,10 @@ object Mentions {
     * The payload never leaves the plan that made it, so it needs no stable
     * encoding and never reaches storage. Output columns: those of
     * [[detectFast]], then `passThrough` (the streaming path carries `ts`).
-    * `dictVersion` selects the reused broadcast ([[dictBroadcast]]).
     */
   private[graft] def detectTrie(turns: DataFrame, dictionary: DataFrame,
-      maxN: Int = 4, passThrough: Seq[String] = Nil, buckets: Int = 0,
-      dictVersion: Option[String] = None): DataFrame = {
-    val bcRows = dictBroadcast(dictionary, dictVersion)
+      maxN: Int = 4, passThrough: Seq[String] = Nil, buckets: Int = 0): DataFrame = {
+    val bcRows = compactDict(dictionary)
     val scanned = scanPayloads(turns, bcRows, maxN, passThrough)
     decodePayloads(
       if (buckets > 0) scanned.repartition(buckets, col("conv_id")) else scanned,
@@ -440,18 +406,15 @@ object Mentions {
     *                      ADVICE r02). None → count once over a persisted
     *                      dictionary so the (often expensive) dictionary plan
     *                      is not evaluated twice by count + collect.
-    * @param dictVersion   the dictionary's identity: the trie path reuses
-    *                      its broadcast across calls ([[dictBroadcast]])
     */
   private[graft] def detectRouted(turns: DataFrame, dictionary: DataFrame,
       scope: CacheScope, maxN: Int, broadcastMaxRows: Long,
-      knownDictRows: Option[Long], buckets: Int,
-      dictVersion: Option[String] = None): DataFrame = {
+      knownDictRows: Option[Long], buckets: Int): DataFrame = {
     // without a hint, count once over a persisted dictionary: the trie path
     // then collects it from the cache, the shuffle join reads it again
     val d = if (knownDictRows.isEmpty) scope.persist(dictionary) else dictionary
     if (knownDictRows.getOrElse(d.count()) <= broadcastMaxRows)
-      detectTrie(turns, d, maxN, buckets = buckets, dictVersion = dictVersion)
+      detectTrie(turns, d, maxN, buckets = buckets)
     else detect(turns, d, scope, maxN, broadcastDict = false)
   }
 }

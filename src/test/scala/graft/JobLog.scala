@@ -4,12 +4,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import org.scalatest.Assertions._
 
 /** One Spark job as a listener saw it: its job group and description (the
-  * local properties it was submitted with), the name of its result stage
-  * (the call site, e.g. `collect at Mentions.scala:240`) and its start and
-  * end in listener-event time (epoch ms; -1 when no end was seen).
+  * local properties it was submitted with) and its start and end in
+  * listener-event time (epoch ms; -1 when no end was seen).
   */
-final case class JobRec(group: String, description: String, callSite: String,
-    startMs: Long, endMs: Long) {
+final case class JobRec(group: String, description: String, startMs: Long, endMs: Long) {
   def overlaps(o: JobRec): Boolean = startMs < o.endMs && o.startMs < endMs
 }
 
@@ -31,9 +29,8 @@ object JobLog {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         def prop(k: String) = String.valueOf(e.properties.getProperty(k))
-        val callSite = e.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("")
         started.put(e.jobId, JobRec(prop("spark.jobGroup.id"), prop("spark.job.description"),
-          callSite, e.time, -1L))
+          e.time, -1L))
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.put(e.jobId, e.time)
     }

@@ -549,7 +549,8 @@ class PipelineE2ESpec extends AnyFunSuite {
     scope.close()
   }
 
-  test("span jobs reuse the dictionary broadcast of the same frame and dictVersion") {
+  test("an interrupted caller ends its wave before the call fails") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
     val entities = Synth.entityDump(spark, nEnts)
     val redirects = Synth.redirects(spark, nEnts)
     val transcripts = Synth.transcripts(spark, 8L, 4, nEnts, mProps)
@@ -558,34 +559,35 @@ class PipelineE2ESpec extends AnyFunSuite {
     val ei = graft.index.EntityIndexBuilder.build(entities, scope,
       EntityIndexConfig(), persistInput = true)
     val pi = graft.index.PropertyIndexBuilder.build(properties)
-    def newDict() = KgPipeline.dictionary(ei, entities, pi, properties)
-    def span(dict: org.apache.spark.sql.DataFrame, version: String): Seq[JobRec] =
-      JobLog.jobsOf(KgPipeline.linkAndMaterialize(spark, transcripts, entities, redirects,
-        dict, ei, pi, Files.createTempDirectory("graft-dict-reuse").toString,
-        dictVersion = version))
-    def collects(jobs: Seq[JobRec]) = jobs.filter(_.callSite.startsWith("collect at Mentions"))
-    val dict = newDict()
-    val first = span(dict, "reuse-v1")
-    assert(collects(first).size == 1, first)
-    // the same frame and version: no dictionary collect, nothing else changes
-    val again = span(dict, "reuse-v1")
-    assert(collects(again).isEmpty, again)
-    assert(again.size == first.size - 1)
-    // a new frame, or a new version, rebuilds it
-    assert(collects(span(newDict(), "reuse-v1")).size == 1)
-    assert(collects(span(dict, "reuse-v2")).size == 1)
-
-    // a frame detected before the key changed still decodes through its
-    // broadcast, which was dropped, never destroyed
-    val turns = transcripts.select("conv_id", "turn_idx", "text")
-    val expected = graft.pipeline.Mentions.detectFast(turns, dict).count()
-    val early = graft.pipeline.Mentions.detectRouted(turns, dict, new CacheScope, 4,
-      20000000L, Some(1L), 0, Some("reuse-v3"))
-    val bc = graft.pipeline.Mentions.dictBroadcast(dict, Some("reuse-v3"))
-    assert(graft.pipeline.Mentions.dictBroadcast(dict, Some("reuse-v3")).id == bc.id)
-    assert(graft.pipeline.Mentions.dictBroadcast(dict, Some("reuse-v4")).id != bc.id)
-    System.gc()
-    assert(early.count() == expected)
+    val dict = KgPipeline.dictionary(ei, entities, pi, properties)
+    // the hook holds link_scores until it is interrupted; its siblings wait
+    // for the hook's turn or have already run
+    val entered = new CountDownLatch(1)
+    val calls = new ConcurrentLinkedQueue[String]()
+    val hook: (String, Seq[String], Seq[String]) =>
+      (=> org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame =
+      (stage, _, _) => f => {
+        calls.add(stage)
+        if (stage == "link_scores") { entered.countDown(); Thread.sleep(120000L) }
+        f
+      }
+    @volatile var thrown: Throwable = null
+    val caller = new Thread(() =>
+      try KgPipeline.linkAndMaterialize(spark, transcripts, entities, redirects, dict,
+        ei, pi, Files.createTempDirectory("graft-wave-interrupt").toString, timedOpt = hook)
+      catch { case e: Throwable => thrown = e })
+    caller.start()
+    assert(entered.await(60, TimeUnit.SECONDS), "link_scores never reached the hook")
+    caller.interrupt()
+    caller.join(60000L)
+    assert(!caller.isAlive, "the interrupted call did not return")
+    assert(thrown.isInstanceOf[InterruptedException], thrown)
+    // every thread of the wave ended before the call failed, and no later
+    // stage started
+    val waveThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-stage-wave-") && t.isAlive)
+    assert(waveThreads.isEmpty, waveThreads)
+    assert(!calls.asScala.exists(Set("triples_canonical", "nodes", "edges")), calls)
     scope.close()
   }
 
