@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -15,8 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Exactly the semantics of the built-in formulation
   * `aggregate(filter(split(s, "")), 0L, (acc, c) -> pmod(acc*31 + ascii(c), 1e9+7))`
   * — Java's `split("")` yields CODEPOINTS (it does not cut surrogate pairs)
-  * and `ascii` returns `codePointAt(0)` — but as one fused loop with
-  * `doGenCode`: no per-character string array, no two lambda evals per
+  * and `ascii` returns `codePointAt(0)` — but as one fused loop
+  * ([[PolyHash.fold]], shared by the sketch expressions and the transcript
+  * bucket mirror): no per-character string array, no two lambda evals per
   * character. On the MinHash/SimHash path this hash runs once per token per
   * document, so the constant factor is the dominant cost of candidate
   * generation at corpus scale. Equivalence is property-tested against the
@@ -35,9 +37,22 @@ case class PolyHash(child: Expression) extends UnaryExpression {
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"poly_hash expects string, got ${child.dataType.catalogString}")
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    var acc = 0L
+  override def nullSafeEval(input: Any): Any =
+    PolyHash.of(input.asInstanceOf[UTF8String].toString)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, x =>
+      s"${ev.value} = graft.functions.PolyHash.of($x.toString());")
+
+  override protected def withNewChildInternal(newChild: Expression): PolyHash =
+    copy(child = newChild)
+}
+
+object PolyHash {
+
+  /** Folds the codepoints of `s` into `acc`: acc ← (31·acc + cp) mod 1e9+7. */
+  def fold(acc0: Long, s: String): Long = {
+    var acc = acc0
     var i = 0
     while (i < s.length) {
       val cp = s.codePointAt(i)
@@ -47,30 +62,27 @@ case class PolyHash(child: Expression) extends UnaryExpression {
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val cp = ctx.freshName("cp")
-      val acc = ctx.freshName("acc")
-      s"""
-         |java.lang.String $s = $x.toString();
-         |long $acc = 0L;
-         |int $i = 0;
-         |while ($i < $s.length()) {
-         |  int $cp = $s.codePointAt($i);
-         |  $acc = ($acc * 31L + $cp) % 1000000007L;
-         |  $i += java.lang.Character.charCount($cp);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  /** The hash of `s`. */
+  def of(s: String): Long = fold(0L, s)
 
-  override protected def withNewChildInternal(newChild: Expression): PolyHash =
-    copy(child = newChild)
-}
+  /** The hashes of a token array's non-null tokens, in order (null tokens
+    * never vote in a sketch).
+    */
+  def ofNonNull(toks: ArrayData): Array[Long] = {
+    val n = toks.numElements()
+    val hs = new Array[Long](n)
+    var m = 0
+    var t = 0
+    while (t < n) {
+      if (!toks.isNullAt(t)) {
+        hs(m) = of(toks.getUTF8String(t).toString)
+        m += 1
+      }
+      t += 1
+    }
+    if (m == n) hs else java.util.Arrays.copyOf(hs, m)
+  }
 
-object PolyHash {
   /** Column API. */
   def poly_hash(c: Column): Column = Bridge.column(PolyHash(Bridge.expression(c)))
 

@@ -57,8 +57,6 @@ case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
 
 object ShingleHashes {
 
-  private final val M = 1000000007L
-
   /** One pass over the pre-split tokens: for each window of `n`, poly-hash
     * the codepoints of the tokens with a single space (32) hashed between
     * them — exactly the hash of `concat_ws(" ", slice(toks, i, n))`
@@ -72,17 +70,10 @@ object ShingleHashes {
     val out = new Array[Long](k - n + 1)
     var i = 0
     while (i <= k - n) {
-      var acc = 0L
-      var j = i
+      var acc = PolyHash.of(toks(i))
+      var j = i + 1
       while (j < i + n) {
-        if (j > i) acc = (acc * 31L + 32L) % M
-        val t = toks(j)
-        var p = 0
-        while (p < t.length) {
-          val cp = t.codePointAt(p)
-          acc = (acc * 31L + cp) % M
-          p += Character.charCount(cp)
-        }
+        acc = PolyHash.fold(PolyHash.fold(acc, " "), toks(j))
         j += 1
       }
       out(i) = acc

@@ -67,31 +67,10 @@ object MinhashSigs {
 
   private final val P31 = 2147483647L // 2^31 - 1
 
-  /** Polynomial codepoint hash mod 1e9+7 — [[PolyHash]]'s loop. */
-  private def polyHash(s: String): Long = {
-    var acc = 0L
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      acc = (acc * 31L + cp) % 1000000007L
-      i += Character.charCount(cp)
-    }
-    acc
-  }
-
   def compute(toks: ArrayData, numHashes: Int): ArrayData = {
-    val n = toks.numElements()
     // token hashes once (null tokens excluded — array_min ignores nulls)
-    val hs = new Array[Long](n)
-    var m = 0
-    var t = 0
-    while (t < n) {
-      if (!toks.isNullAt(t)) {
-        hs(m) = polyHash(toks.getUTF8String(t).toString)
-        m += 1
-      }
-      t += 1
-    }
+    val hs = PolyHash.ofNonNull(toks)
+    val m = hs.length
     val out = new Array[Any](numHashes)
     var i = 0
     while (i < numHashes) {
@@ -159,29 +138,10 @@ object SimhashBitsExpr {
 
   private final val P = 1000000007L
 
-  private def polyHash(s: String): Long = {
-    var acc = 0L
-    var i = 0
-    while (i < s.length) {
-      val cp = s.codePointAt(i)
-      acc = (acc * 31L + cp) % P
-      i += Character.charCount(cp)
-    }
-    acc
-  }
-
   def compute(toks: ArrayData, bits: Int): ArrayData = {
-    val n = toks.numElements()
-    val hs = new Array[Long](n)
-    var m = 0
-    var t = 0
-    while (t < n) {
-      if (!toks.isNullAt(t)) {
-        hs(m) = polyHash(toks.getUTF8String(t).toString)
-        m += 1
-      }
-      t += 1
-    }
+    val n = toks.numElements() // null tokens count here but never vote
+    val hs = PolyHash.ofNonNull(toks)
+    val m = hs.length
     val out = new Array[Int](bits)
     var b = 0
     while (b < bits) {

@@ -183,9 +183,6 @@ object VecFunctions {
   def long_vec_dot(a: Column, b: Column): Column =
     Bridge.column(LongVecDot(Bridge.expression(a), Bridge.expression(b)))
 
-  def vec_norm(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(vec_dot(a, a))
-
   /** Register as SQL functions `vec_dot` / `long_vec_dot`. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -143,11 +143,11 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     readManifest(stage).flatMap(field(_, "distinct", num = true)).map(_.toLong)
 
   /** Head-key degree (max rows per key) of the column named via `runStage`'s
-    * `degreeOf` — the skew signal downstream salt gates key on. A mean
+    * `degreeOf` — the skew signal the link-score salt gate
+    * ([[graft.pipeline.SaltedAgg.linkScores]]) keys on. A mean
     * (rows ÷ distinct) cannot bound the max: a Zipfian head key holds a hot
     * reducer's worth of rows while millions of singletons keep the mean low
-    * (ADVICE r04), so the gate needs the observed MAX, mirroring
-    * `Canonicalize.autoSaltMaxDegree`.
+    * (ADVICE r04), so the gate needs the observed MAX.
     */
   def maxDegreeOf(stage: String): Option[Long] =
     readManifest(stage).flatMap(field(_, "max_degree", num = true)).map(_.toLong)
@@ -251,7 +251,7 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     * column stat computed post-write from a column-pruned scan of the
     * committed files. Exact up to `exactDegreeRows`; above it a 1%
     * Bernoulli sample scales up: a head key of degree d surfaces ~d/100
-    * sampled rows, so degrees near the salt gates' thresholds (~10^6) are
+    * sampled rows, so degrees near the salt gate's threshold (10^6) are
     * estimated within a few percent while light keys vanish — exactly the
     * asymmetry a skew gate wants. The seed is fixed: the stat must be
     * deterministic across reruns of the same committed files.
@@ -279,7 +279,7 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     * @param degreeOf   also record the max rows-per-key of this column
     *                   ([[maxDegree]] — one column-pruned pass over the
     *                   committed files, sampled above [[ExactDegreeRows]]):
-    *                   the head-key skew stat downstream salt gates read
+    *                   the head-key skew stat the link-score salt gate reads
     * @param maxRecordsPerFile bound output file sizes (0 = writer default):
     *                          without it a low-parallelism write emits one
     *                          giant file per task and a high-parallelism

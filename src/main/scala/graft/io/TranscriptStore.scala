@@ -38,19 +38,9 @@ object TranscriptStore {
   def bucketCol(convId: Column, nBuckets: Int): Column =
     pmod(graft.functions.PolyHash.poly_hash(convId), lit(nBuckets.toLong)).cast("int")
 
-  /** Driver-side mirror of [[bucketCol]] (same arithmetic as the PolyHash
-    * codegen: fold codepoints, mod 1e9+7).
-    */
-  def bucketOf(convId: String, nBuckets: Int): Int = {
-    var acc = 0L
-    var i = 0
-    while (i < convId.length) {
-      val cp = convId.codePointAt(i)
-      acc = (acc * 31L + cp) % 1000000007L
-      i += Character.charCount(cp)
-    }
-    (acc % nBuckets).toInt
-  }
+  /** Driver-side mirror of [[bucketCol]] (the same [[graft.functions.PolyHash.of]]). */
+  def bucketOf(convId: String, nBuckets: Int): Int =
+    (graft.functions.PolyHash.of(convId) % nBuckets).toInt
 
   private def layoutPath(path: String) = Paths.get(path, "_LAYOUT.json")
 

@@ -44,10 +44,6 @@ object Curate {
       .otherwise("test")
   }
 
-  def assignSplits(df: DataFrame, idCol: String,
-      trainBp: Int = 9000, valBp: Int = 500): DataFrame =
-    df.withColumn("split", splitCol(col(idCol), trainBp, valBp))
-
   /** Quality gate → cluster dedup (drop every clustered doc except its
     * min-id representative) → split assignment.
     *

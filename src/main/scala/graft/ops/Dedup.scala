@@ -335,13 +335,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** UNCAPPED (id, chunk, ckey) banding rows of the simhash chunks — the
-    * measurement twin of [[minhashBands]].
-    */
-  def simhashBands(df: DataFrame, idCol: String, textCol: String,
-      chunks: Int = 4): DataFrame =
-    simhashBandedBits(df, idCol, textCol, chunks).drop("bits")
-
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.ops.Dedup")
 
   /** Pipeline-facing MinHash near-dup entry point with the 100-TB safety caps

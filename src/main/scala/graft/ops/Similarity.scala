@@ -291,21 +291,21 @@ object Similarity {
     * corpus-structure step (domain discovery, stratified sampling, and the
     * coarse partitioner for [[semanticDedup]]). Same deterministic training
     * as [[ivfTopK]] (hash-ordered seeding, truncated-mean Lloyd rounds), so
-    * the same oracle CTEs reproduce it.
+    * the same oracle CTEs reproduce it. The result is materialized before it
+    * returns, so the caller's actions never re-quantize the input.
     *
     * @param nClusters 0 → ceil(sqrt(N)); at corpus scale pass an explicit
     *                  count sized so N/nClusters rows fit a partition
     * @return (idCol, cluster)
     */
   def kmeansClusters(df: DataFrame, idCol: String, vecCol: String,
-      nClusters: Int = 0, lloydRounds: Int = 2, quantScale: Int = 1000): DataFrame = {
-    val v = quantized(df, idCol, vecCol, quantScale).persist()
+      nClusters: Int = 0, lloydRounds: Int = 2, quantScale: Int = 1000)
+      : DataFrame = CacheScope.materialized { scope =>
+    val v = scope.persist(quantized(df, idCol, vecCol, quantScale))
     val nVec = v.count()
     val nc = if (nClusters > 0) nClusters else math.ceil(math.sqrt(nVec.toDouble)).toInt
-    val out = lloydAssign(v, nc, lloydRounds)(1)
+    lloydAssign(v, nc, lloydRounds)(1)
       .select(col("id").as(idCol), col("cid").as("cluster"))
-    v.unpersist(blocking = false)
-    out
   }
 
   /** SemDeDup (Abbas et al. '23, arXiv:2303.09540): semantic deduplication

@@ -17,45 +17,26 @@ import org.apache.spark.sql.functions._
   *    checkpoints die with their executor, so cluster runs pass a
   *    `checkpointDir` and get RELIABLE `checkpoint()` to shared storage
   *    (a lost executor mid-fixpoint then recovers instead of failing the job);
-  *  - the per-node min-reductions CAN be two-phase salted on the NEIGHBOR
-  *    value (content hash, deterministic under recompute): a giant star
-  *    funnels every neighbor into one groupBy key, and while map-side partial
-  *    aggregation bounds reducer input to one row per map partition, the
-  *    pathological one-map-partition-per-hot-key layout does arise after
-  *    skewed joins — the salt makes the bound unconditional. min is
-  *    idempotent/associative so the result is bit-identical. Because the
-  *    second phase costs a real extra shuffle at EVERY scale (VERDICT r02 #4:
-  *    +62% on cc_components when unconditional), the salt is now GATED on
-  *    observed skew: each convergence check also measures the max root
-  *    degree of the current edge set (for free, in the same job), and the
-  *    salt switches on only when a root exceeds `autoSaltMaxDegree` —
-  *    emergent giant stars are detected mid-fixpoint, typical inputs never
-  *    pay the second phase;
+  *  - the per-node min-reductions are plain `groupBy(u).agg(min(v))`: Spark
+  *    plans each as partial min → exchange → final min, so a giant star's
+  *    hub reaches its reducer as at most one row per map task. A forced
+  *    two-phase salt was measured to cost more shuffle and wall on a
+  *    1M-leaf star, a 100k chain and a 1M-edge uniform graph, with the
+  *    same max task time on the star (CHANGES.md); the hub's remaining
+  *    cost is in the `und ⋈ mins` join, which no aggregation salt touches;
   *  - driver round-trips are halved: two large/small-star rounds run per
   *    convergence check (the check is a driver barrier — a fixed serial cost
   *    the full-span scaling pair exposes; VERDICT r02 next-step #2).
   */
 object Canonicalize {
 
-  /** Two-phase min: phase 1 groups by (key, hash(value) mod saltN), phase 2
-    * reduces the ≤saltN partials. Identical result to a direct groupBy-min.
-    */
-  private def saltedMin(df: DataFrame, key: String, valCol: String,
-      saltN: Int): DataFrame =
-    if (saltN <= 1)
-      df.groupBy(col(key)).agg(min(col(valCol)).as(valCol))
-    else
-      df.withColumn("_s", pmod(xxhash64(col(valCol)), lit(saltN.toLong)))
-        .groupBy(col(key), col("_s")).agg(min(col(valCol)).as(valCol))
-        .groupBy(col(key)).agg(min(col(valCol)).as(valCol))
-
   /** large-star: connect every neighbor strictly larger than u to
     * min(u ∪ N(u)).
     */
-  private def largeStar(edges: DataFrame, saltN: Int): DataFrame = {
+  private[graft] def largeStar(edges: DataFrame): DataFrame = {
     val und = edges.select(col("u"), col("v"))
       .union(edges.select(col("v").as("u"), col("u").as("v")))
-    val mins = saltedMin(und, "u", "v", saltN)
+    val mins = und.groupBy(col("u")).agg(min(col("v")).as("v"))
       .select(col("u").as("lu"), least(col("lu"), col("v")).as("m"))
     und.join(mins, col("u") === col("lu"))
       .filter(col("v") > col("u"))
@@ -66,11 +47,11 @@ object Canonicalize {
   /** small-star: for u > v edges, connect every smaller neighbor (and u) to
     * min(u ∪ smaller-N(u)).
     */
-  private def smallStar(edges: DataFrame, saltN: Int): DataFrame = {
+  private[graft] def smallStar(edges: DataFrame): DataFrame = {
     val dir = edges
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v"))
-    val mins = saltedMin(dir, "u", "v", saltN).select(col("u"), col("v").as("m"))
+    val mins = dir.groupBy(col("u")).agg(min(col("v")).as("m"))
     dir.join(mins, Seq("u"))
       .select(col("v").as("u"), col("m").as("v"))
       .union(mins.select(col("u"), col("m").as("v")))
@@ -137,15 +118,6 @@ object Canonicalize {
     *
     * @param checkpointDir reliable checkpoint location for cluster runs;
     *                      None → executor-local checkpoints (single-node use)
-    * @param skewSaltN     salt fan-out for the min-reductions: a positive
-    *                      value forces it (1 disables); 0 (the default) is
-    *                      AUTO — start unsalted, switch to 16 for the next
-    *                      rounds when the convergence check observes a root
-    *                      whose degree exceeds `autoSaltMaxDegree`
-    * @param autoSaltMaxDegree emergent-star degree above which AUTO mode
-    *                      enables the salt (a single reducer/join task
-    *                      absorbing millions of rows for one key is where
-    *                      the two-phase reduction starts paying for itself)
     * @param driverMaxEdges size guard for the driver union-find fast path
     *                      (the `detectRouted` pattern): a bounded
     *                      `limit(N+1).collect()` probes the deduped edge
@@ -156,8 +128,7 @@ object Canonicalize {
     *                      distributed machinery force this).
     */
   def connectedComponents(edges0: DataFrame, maxIter: Int = 25,
-      checkpointDir: Option[String] = None, skewSaltN: Int = 0,
-      autoSaltMaxDegree: Long = 1000000L,
+      checkpointDir: Option[String] = None,
       driverMaxEdges: Long = 1000000L): DataFrame = {
     val spark = edges0.sparkSession
     val dedup0 = edges0.select(col("u"), col("v"))
@@ -190,8 +161,6 @@ object Canonicalize {
         // ONE driver barrier (the check), not three
         df => df.localCheckpoint(false)
     }
-    val auto = skewSaltN <= 0
-    var salt = if (auto) 1 else skewSaltN
     var edges = probed match {
       case Some(d) =>
         // eager checkpoint off the probe's cache (one extra barrier, no
@@ -206,27 +175,18 @@ object Canonicalize {
     var iter = 0
     while (!converged && iter < maxIter) {
       // two rounds per driver barrier (the check collect is the serial cost)
-      val a = cut(smallStar(largeStar(edges, salt), salt))
-      val b = cut(smallStar(largeStar(a, salt), salt))
+      val a = cut(smallStar(largeStar(edges)))
+      val b = cut(smallStar(largeStar(a)))
       // fixpoint: successive edge sets stable. ONE job: per-side count +
-      // order-insensitive checksum, grouped by root first so the same pass
-      // also yields the max root degree (the emergent-skew probe for AUTO
-      // salting — largeStar/smallStar group on the star root `v`).
+      // order-insensitive checksum
       val stats = edges.select(lit(0).as("side"), col("u"), col("v"))
         .union(a.select(lit(1).as("side"), col("u"), col("v")))
         .union(b.select(lit(2).as("side"), col("u"), col("v")))
-        .groupBy(col("side"), col("v"))
-        .agg(count(lit(1)).as("n"), expr("bit_xor(xxhash64(u, v))").as("h"))
         .groupBy(col("side"))
-        .agg(sum(col("n")).as("n"), expr("bit_xor(h)").as("h"),
-          max(col("n")).as("maxdeg"))
+        .agg(count(lit(1)).as("n"), expr("bit_xor(xxhash64(u, v))").as("h"))
         .collect()
-        .map(r => r.getInt(0) -> ((r.getLong(1), r.get(2), r.getLong(3)))).toMap
-      def same(x: Int, y: Int): Boolean =
-        stats.get(x).map(t => (t._1, t._2)) == stats.get(y).map(t => (t._1, t._2))
-      converged = same(0, 1) || same(1, 2)
-      if (auto)
-        salt = if (stats.get(2).exists(_._3 > autoSaltMaxDegree)) 16 else 1
+        .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      converged = stats.get(0) == stats.get(1) || stats.get(1) == stats.get(2)
       edges = b
       iter += 2
     }

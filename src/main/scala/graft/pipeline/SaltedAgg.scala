@@ -59,18 +59,20 @@ object SaltedAgg {
         measures.tail.map(x => m(reFn(x.fn), col(x.as)).as(x.as)): _*)
   }
 
+  /** Head-key degree from which [[linkScores]] salts. */
+  private val SkewMaxDegree = 1000000L
+
   /** Link-score aggregation: per linked id, mention count + summed score —
     * the head-QID-skewed shuffle of the pipeline. Salted from the mention's
     * position columns (stable content, uncorrelated with the hot id).
     *
-    * The salt is GATED on the observed HEAD-KEY DEGREE, mirroring the CC
-    * salt's `autoSaltMaxDegree` (`Canonicalize`): the round-4 gate keyed on
-    * MEAN mentions-per-id, but a mean cannot bound the max — a Zipfian head
-    * QID holds a hot reducer's worth of rows while millions of singleton
-    * ids keep the mean low, disabling the salt exactly when it is needed
-    * (ADVICE r04). `maxDegreeHint` is the max rows-per-id column stat the
-    * mentions stage write records in its manifest
-    * ([[graft.io.ManifestStore.maxDegreeOf]]); under `skewMaxDegree` the
+    * The salt is GATED on the observed HEAD-KEY DEGREE: the round-4 gate
+    * keyed on MEAN mentions-per-id, but a mean cannot bound the max — a
+    * Zipfian head QID holds a hot reducer's worth of rows while millions of
+    * singleton ids keep the mean low, disabling the salt exactly when it is
+    * needed (ADVICE r04). `maxDegreeHint` is the max rows-per-id column stat
+    * the mentions stage write records in its manifest
+    * ([[graft.io.ManifestStore.maxDegreeOf]]); under `SkewMaxDegree` the
     * two-phase plan — whose second exchange is a real fixed cost at EVERY
     * scale — degenerates to the plain one-exchange aggregate.
     *
@@ -82,12 +84,11 @@ object SaltedAgg {
     * hint only picks the physical shape.
     */
   def linkScores(mentions: DataFrame, saltN: Int = 0,
-      maxDegreeHint: Option[Long] = None,
-      skewMaxDegree: Long = 1000000L): DataFrame = {
+      maxDegreeHint: Option[Long] = None): DataFrame = {
     val effSaltN =
       if (saltN > 0) saltN
       else maxDegreeHint match {
-        case Some(d) if d < skewMaxDegree => 1
+        case Some(d) if d < SkewMaxDegree => 1
         case _ => 16
       }
     apply(mentions, Seq("id"),

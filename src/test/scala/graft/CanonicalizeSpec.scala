@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateMode, Final, Min, Partial}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.Canonicalize
@@ -26,6 +32,17 @@ class CanonicalizeSpec extends AnyFunSuite {
     val byRoot = nodes.groupBy(find)
     byRoot.flatMap { case (_, ns) => val m = ns.min; ns.map(_ -> m) }.toMap
   }
+
+  /** The min aggregates of `df`'s physical plan in `mode`. */
+  def minAggregates(df: DataFrame, mode: AggregateMode): Seq[BaseAggregateExec] =
+    minAggregates(df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }, mode)
+
+  def minAggregates(plan: SparkPlan, mode: AggregateMode): Seq[BaseAggregateExec] =
+    plan.collect { case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+      e.mode == mode && e.aggregateFunction.isInstanceOf[Min]) => a }
 
   /** Runs the DISTRIBUTED fixpoint (fast path disabled): this spec's
     * shape tests exist to exercise the large/small-star machinery; the
@@ -65,33 +82,31 @@ class CanonicalizeSpec extends AnyFunSuite {
     assert(got("s1") == "hub" && got("s2") == "hub" && got("s3") == "hub")
   }
 
-  test("giant star (skew): salted min-reduction matches oracle; per-key input bounded") {
+  test("hub star matches union-find; each star step's min plans a partial aggregate") {
     import spark.implicits._
-    // one hot root with 5000 leaves — the aggregation-skew shape the salt
-    // exists for: phase 1 fans the hot key over saltN reducers, so no single
-    // task sees more than ~n/saltN + saltN rows for it
+    // one hot root with 5000 leaves: every leaf's edge funnels into the
+    // hub's min-reduction key
     val edges = (1 to 5000).map(i => (f"L$i%05d", "A_HUB"))
     val got = runCC(edges)
     val want = unionFind(edges)
     assert(got == want)
     assert(got.values.toSet == Set("A_HUB"))
-    // salted two-phase min == direct min even when hot key dominates a round
-    val hot = edges.toDF("u", "v")
-    val direct = hot.groupBy("v").count().count()
-    assert(direct == 1L)
-  }
-
-  test("auto salt: forced-low degree threshold engages mid-fixpoint, same result") {
-    import spark.implicits._
-    // star chained to a path so convergence takes >1 round pair and the
-    // emergent-degree probe actually fires with the threshold forced to 10
-    val edges = (1 to 300).map(i => (f"L$i%04d", "HUB")) ++
-      (0 until 20).map(i => (f"P$i%03d", f"P${i + 1}%03d")) :+ (("P000", "HUB"))
-    val auto = Canonicalize.connectedComponents(
-      edges.toDF("u", "v"), skewSaltN = 0, autoSaltMaxDegree = 10L,
-      driverMaxEdges = 0)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(auto == unionFind(edges))
+    // the per-key bound needs no salt: each min-reduction is planned as
+    // partial min → exchange → final min, so the hub reaches its reducer
+    // as at most one partial row per map task
+    val hub = edges.toDF("u", "v")
+    for ((step, df) <- Seq("largeStar" -> Canonicalize.largeStar(hub),
+        "smallStar" -> Canonicalize.smallStar(hub))) {
+      val finals = minAggregates(df, Final)
+      assert(finals.nonEmpty,
+        s"$step plans no min-reduction:\n${df.queryExecution.executedPlan}")
+      finals.foreach { f =>
+        val below = f.child.collectFirst { case x: ShuffleExchangeExec => x }
+          .flatMap(_.child.collectFirst { case a: BaseAggregateExec => a })
+        assert(below.exists(minAggregates(_, Partial).nonEmpty),
+          s"$step: no partial min below the exchange:\n${f.treeString}")
+      }
+    }
   }
 
   test("reliable checkpoint dir: identical result to local checkpoints") {
@@ -147,16 +162,5 @@ class CanonicalizeSpec extends AnyFunSuite {
     val dist = runCC(edges)
     assert(fast == dist, s"fast=$fast dist=$dist")
     assert(fast.values.toSet == Set(bmp), s"min must be the BMP char: $fast")
-  }
-
-  test("skewSaltN = 1 (salt disabled) produces the same components") {
-    import spark.implicits._
-    val edges = (0 until 50).map(i => (s"Q${i % 13}", s"Q${(i * 3) % 13}"))
-      .filter(e => e._1 != e._2)
-    val salted = runCC(edges)
-    val unsalted = Canonicalize.connectedComponents(edges.toDF("u", "v"),
-      skewSaltN = 1, driverMaxEdges = 0)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(salted == unsalted)
   }
 }

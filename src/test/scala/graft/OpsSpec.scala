@@ -576,6 +576,22 @@ class OpsSpec extends AnyFunSuite {
     assert(again == out, "training must be deterministic under recompute")
   }
 
+  test("kmeans clusters: input quantized once, leaves read the cache") {
+    var out: org.apache.spark.sql.DataFrame = null
+    val plan = checkpointedPlan {
+      out = assertReleased(Similarity.kmeansClusters(vecs10x, "vec_id", "embedding"))
+    }
+    // the quantized input is read from its cache; the one other leaf is the
+    // trained codebook, built on the driver from the collected centroids
+    val (cached, other) = plan.collectLeaves().partition(
+      _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
+    assert(cached.nonEmpty && other.forall(_.output.map(_.name) == Seq("cid", "s", "s2")),
+      s"every input leaf must read the cache:\n$plan")
+    val again = Similarity.kmeansClusters(vecs10x, "vec_id", "embedding")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == again)
+  }
+
   test("semantic dedup == exact within-cluster cosine recomputation") {
     val pct = 40
     val got = Similarity.semanticDedup(vecs10x, "vec_id", "embedding", thresholdPct = pct)

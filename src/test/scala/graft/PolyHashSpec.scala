@@ -35,6 +35,24 @@ class PolyHashSpec extends AnyFunSuite {
     assert(fp == 97L * 31 * 31 + 98L * 31 + 99L)
   }
 
+  test("TranscriptStore.bucketOf == bucketCol on crafted conv ids") {
+    import spark.implicits._
+    import graft.io.TranscriptStore.{bucketCol, bucketOf}
+    val ids = Seq("", "c", "conv-000001", "conv:\uD83D\uDE42",
+      new String(Character.toChars(0x10000)), new String(Character.toChars(0x10FFFF)),
+      "\uE000\uFFFD", "会话-42", "x" * 300)
+    val df = ids.zipWithIndex.toDF("conv_id", "i")
+    for (nb <- Seq(1, 7, 256); rows <- Seq(df, df.repartition(2))) {
+      // the local relation folds the projection interpreted; the
+      // repartitioned one runs it through codegen
+      val got = rows.select(col("i"), bucketCol(col("conv_id"), nb))
+        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+      ids.zipWithIndex.foreach { case (id, i) =>
+        assert(got(i) == bucketOf(id, nb), s"nBuckets=$nb id#$i")
+      }
+    }
+  }
+
   test("GraftExtensions injects poly_hash + vec_dot (session built WITH the extension)") {
     // TestSpark sets spark.sql.extensions=graft.functions.GraftExtensions —
     // a STATIC conf, so the functions below resolve WITHOUT any per-session
