@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -28,22 +29,49 @@ final class SchemaEvolutionException(stage: String, detail: String)
   extends RuntimeException(s"stage '$stage': incompatible schema change — $detail")
 
 /** Bucket spec of a bucketed stage. */
-private final case class Buckets(cols: Seq[String], sortCols: Seq[String], n: Int)
+private[io] final case class Buckets(cols: Seq[String], sortCols: Seq[String], n: Int)
+
+/** One committed version of a stage: the record of one numbered manifest
+  * file ([[TableJson]] codec; field names are the on-disk names). The
+  * optional counts name their boxed type: erasure hides `Long` inside an
+  * `Option` from the codec.
+  */
+private[io] final case class StageVersion(
+    stage: String, fingerprint: String, data: String, version: Long, rows: Long,
+    @JsonDeserialize(contentAs = classOf[java.lang.Long]) distinct: Option[Long],
+    @JsonDeserialize(contentAs = classOf[java.lang.Long]) max_degree: Option[Long],
+    maxRecordsPerFile: Long,
+    bucketBy: Option[String], sortBy: Option[String],
+    @JsonDeserialize(contentAs = classOf[java.lang.Integer]) nBuckets: Option[Int],
+    committed_at: Long, schema: String) {
+
+  def structType: StructType = DataType.fromJson(schema).asInstanceOf[StructType]
+
+  /** The bucket spec this version was written with (None: written plain). */
+  def buckets: Option[Buckets] = for (cols <- bucketBy; n <- nBuckets)
+    yield Buckets(cols.split(",").toSeq, sortBy.toSeq.flatMap(_.split(",")).filter(_.nonEmpty), n)
+}
+
+/** A stage version a snapshot pins. */
+private[io] final case class Pinned(fingerprint: String, data: String)
+
+/** One run-level snapshot file: the live version of every committed stage. */
+private[io] final case class Snapshot(id: String, created_at: Long, stages: Map[String, Pinned])
 
 /** Iceberg-style table layer (SURVEY.md §7.0): partitioned Parquet plus a
-  * per-stage numbered-manifest commit log recording input fingerprint, row
-  * count, schema and commit time. Gives the properties the north rule uses
-  * Iceberg for — atomic commit (data published, then one atomic manifest
-  * link), lineage (fingerprint chain), idempotent resume (a stage whose
-  * manifest matches its input fingerprint is read back instead of
-  * recomputed), snapshot isolation + version time travel (immutable
-  * fingerprint-versioned data dirs), optimistic concurrent writers
-  * (hard-link CAS on the next manifest number; see [[casCommit]]) and
-  * additive schema evolution (see [[validateEvolution]]). A real Iceberg
-  * catalog can replace this behind the same `runStage` seam; the sandbox
-  * ships no Iceberg runtime jar.
-  */
-/** @param exactDegreeRows stages above this row count estimate the
+  * per-stage numbered-manifest commit log, one [[StageVersion]] record per
+  * version: input fingerprint, data dir, row count and column stats, schema
+  * and commit time. Gives the properties the north rule uses Iceberg for —
+  * atomic commit (data published, then one atomic manifest link), lineage
+  * (fingerprint chain), idempotent resume (a stage whose live version
+  * matches its input fingerprint is read back instead of recomputed),
+  * snapshot isolation + version time travel (immutable fingerprint-versioned
+  * data dirs), optimistic concurrent writers (hard-link CAS on the next
+  * manifest number; see [[casCommit]]) and additive schema evolution (see
+  * [[validateEvolution]]). A real Iceberg catalog can replace this behind
+  * the same `runStage` seam; the sandbox ships no Iceberg runtime jar.
+  *
+  * @param exactDegreeRows stages above this row count estimate the
   *                        [[maxDegree]] column stat from a 1% sample
   *                        instead of an exact group-count (the default
   *                        matches production; tests inject a small bound
@@ -52,20 +80,13 @@ private final case class Buckets(cols: Seq[String], sortCols: Seq[String], n: In
 final class ManifestStore(spark: SparkSession, baseDir: String,
     exactDegreeRows: Long = 10000000L) {
 
-  // binary-compatible 2-arg constructor (the pre-r5 public shape)
-  def this(spark: SparkSession, baseDir: String) =
-    this(spark, baseDir, 10000000L)
-
-  private def manifestPath(stage: String): Path = Paths.get(baseDir, stage, "_MANIFEST.json")
-  private def versionsDir(stage: String): Path = Paths.get(baseDir, stage, "_versions")
-
   /** The stage's commit log: numbered immutable manifest files, newest =
-    * source of truth (`_MANIFEST.json` is kept as a best-effort mirror for
-    * pre-r5 readers; a legacy stage with only the mirror reads as v1).
-    * Field-extraction regexes below take the FIRST match, so manifest
-    * writers must keep `schema` (the one field whose VALUE can embed other
-    * field names) last.
+    * the live version.
     */
+  private def versionsDir(stage: String): Path = Paths.get(baseDir, stage, "_versions")
+  private def versionPath(stage: String, v: Long): Path =
+    versionsDir(stage).resolve(f"manifest-v$v%09d.json")
+
   private def versionFileNum(name: String): Option[Long] =
     "manifest-v(\\d+)\\.json".r.unapplySeq(name).flatMap(_.headOption).map(_.toLong)
 
@@ -75,72 +96,49 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
   private def listDir[A](d: Path)(f: Iterator[Path] => A): A =
     Using.resource(Files.list(d))(s => f(s.iterator().asScala))
 
-  private def latestVersion(stage: String): Option[Long] = {
-    val d = versionsDir(stage)
-    if (!Files.exists(d)) return None
-    listDir(d)(_.flatMap(p => versionFileNum(p.getFileName.toString)).maxOption)
-  }
-
   /** Current commit version of the stage: 0 = never committed. */
-  def versionOf(stage: String): Long =
-    latestVersion(stage).getOrElse(
-      if (Files.exists(manifestPath(stage))) 1L else 0L)
-
-  private def readManifest(stage: String): Option[String] =
-    readManifestVersion(stage, versionOf(stage))
-
-  /** The raw manifest committed as version `v` of the stage (legacy stages
-    * expose their single `_MANIFEST.json` as v1).
-    */
-  def readManifestVersion(stage: String, v: Long): Option[String] = {
-    if (v <= 0) return None
-    val versioned = versionsDir(stage).resolve(f"manifest-v$v%09d.json")
-    val p =
-      if (Files.exists(versioned)) versioned
-      else if (latestVersion(stage).isEmpty && v == 1L && Files.exists(manifestPath(stage)))
-        manifestPath(stage)
-      else return None
-    Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+  def versionOf(stage: String): Long = {
+    val d = versionsDir(stage)
+    if (!Files.exists(d)) 0L
+    else listDir(d)(_.flatMap(p => versionFileNum(p.getFileName.toString)).maxOption).getOrElse(0L)
   }
+
+  /** The raw manifest committed as version `v` of the stage. */
+  def readManifestVersion(stage: String, v: Long): Option[String] = {
+    val p = versionPath(stage, v)
+    if (Files.exists(p)) Some(Files.readString(p)) else None
+  }
+
+  private def recordAt(stage: String, v: Long): Option[StageVersion] =
+    readManifestVersion(stage, v).map(TableJson.parse[StageVersion])
+
+  /** The live version's record: every accessor below reads one record once. */
+  private def live(stage: String): Option[StageVersion] = recordAt(stage, versionOf(stage))
 
   /** Stage data dirs are VERSIONED by the fingerprint digest (r5, VERDICT
     * r04 #7): a rerun writes `data-<digest>` next to the previous version
-    * instead of overwriting `data` in place, so a reader pinned to an
-    * older snapshot ([[commitSnapshot]]) keeps reading intact files while
-    * the rerun commits. The manifest's `data` field names the live dir;
-    * legacy manifests (no field) resolve to the round-4 `data` layout.
+    * instead of overwriting in place, so a reader pinned to an older
+    * snapshot ([[commitSnapshot]]) keeps reading intact files while the
+    * rerun commits. The record's `data` field names the version's dir.
     */
-  private def versionedDataDir(fingerprint: String): String =
-    s"data-${digest(fingerprint).take(16)}"
+  private def digest16(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes(StandardCharsets.UTF_8)).map(b => f"$b%02x").mkString.take(16)
   private def dataPathFor(stage: String, dir: String): String =
     Paths.get(baseDir, stage, dir).toString
-  private def digest(s: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s.getBytes(StandardCharsets.UTF_8)).map(b => f"$b%02x").mkString
 
-  /** Manifest field `name`: a string value (unescaped), or with `num` an integer. */
-  private def field(manifest: String, name: String, num: Boolean = false): Option[String] =
-    (s"\"$name\"\\s*:\\s*" + (if (num) "(\\d+)" else "\"((?:[^\"\\\\]|\\\\.)*)\"")).r
-      .findFirstMatchIn(manifest).map(m => if (num) m.group(1) else jsonUnescape(m.group(1)))
+  /** The committed data dir of a stage. */
+  def dataDirOf(stage: String): Option[String] = live(stage).map(_.data)
 
-  /** The committed data dir of a stage per its manifest (legacy = `data`). */
-  def dataDirOf(stage: String): Option[String] =
-    readManifest(stage).map(field(_, "data").getOrElse("data"))
-  private def dataPath(stage: String): String =
-    dataPathFor(stage, dataDirOf(stage).getOrElse("data"))
+  def fingerprintOf(stage: String): Option[String] = live(stage).map(_.fingerprint)
 
-  def fingerprintOf(stage: String): Option[String] =
-    readManifest(stage).flatMap(field(_, "fingerprint"))
-
-  def rowCountOf(stage: String): Option[Long] =
-    readManifest(stage).flatMap(field(_, "rows", num = true)).map(_.toLong)
+  def rowCountOf(stage: String): Option[Long] = live(stage).map(_.rows)
 
   /** Approximate distinct count of the column named via `runStage`'s
     * `distinctOf` — an observability column stat (observed free during the
     * write job).
     */
-  def distinctCountOf(stage: String): Option[Long] =
-    readManifest(stage).flatMap(field(_, "distinct", num = true)).map(_.toLong)
+  def distinctCountOf(stage: String): Option[Long] = live(stage).flatMap(_.distinct)
 
   /** Head-key degree (max rows per key) of the column named via `runStage`'s
     * `degreeOf` — the skew signal the link-score salt gate
@@ -149,45 +147,10 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     * reducer's worth of rows while millions of singletons keep the mean low
     * (ADVICE r04), so the gate needs the observed MAX.
     */
-  def maxDegreeOf(stage: String): Option[Long] =
-    readManifest(stage).flatMap(field(_, "max_degree", num = true)).map(_.toLong)
+  def maxDegreeOf(stage: String): Option[Long] = live(stage).flatMap(_.max_degree)
 
-  /** The bucket spec the stage's manifest recorded (None: written plain;
-    * no sort columns on a manifest that predates `sortBy`).
-    */
-  private def bucketsOf(stage: String): Option[Buckets] =
-    readManifest(stage).flatMap(m => for {
-      cols <- field(m, "bucketBy"); n <- field(m, "nBuckets", num = true)
-    } yield Buckets(cols.split(",").toSeq,
-      field(m, "sortBy").toSeq.flatMap(_.split(",")).filter(_.nonEmpty), n.toInt))
-
-  /** The committed schema of a stage (absent on legacy pre-schema manifests). */
-  def schemaOf(stage: String): Option[StructType] =
-    schemaOfVersion(stage, versionOf(stage))
-
-  /** The schema committed at stage version `v`. */
-  def schemaOfVersion(stage: String, v: Long): Option[StructType] =
-    readManifestVersion(stage, v).flatMap(field(_, "schema"))
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
-
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-  private def jsonUnescape(s: String): String = {
-    val b = new StringBuilder; var i = 0
-    while (i < s.length) {
-      if (s(i) == '\\' && i + 1 < s.length) s(i + 1) match {
-        case 'n' => b += '\n'; i += 2
-        case 'u' => b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-        case c => b += c; i += 2
-      } else { b += s(i); i += 1 }
-    }
-    b.toString
-  }
+  /** The committed schema of a stage. */
+  def schemaOf(stage: String): Option[StructType] = live(stage).map(_.structType)
 
   /** Additive-evolution validation: every committed column must keep its
     * name and type; new columns must be nullable (an old snapshot read
@@ -213,38 +176,20 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     }
   }
 
-  /** Optimistic-concurrency commit: atomically create the next numbered
-    * manifest file via a hard link (`link(2)` fails if the name exists —
+  /** Optimistic-concurrency commit: atomically create manifest number
+    * `record.version` via a hard link (`link(2)` fails if the name exists —
     * the one local-FS primitive that is both atomic AND create-new;
     * `rename(2)` silently replaces on POSIX so ATOMIC_MOVE cannot CAS).
-    * Returns None on win; the winner's fingerprint on loss. The
-    * `_MANIFEST.json` mirror is updated best-effort after the win — the
-    * numbered file is the commit point, so a crash between the two leaves
-    * a fully committed stage.
+    * Returns whether this writer won the version.
     */
-  private def casCommit(stage: String, manifestJson: String, expected: Long): Option[String] = {
+  private def casCommit(stage: String, record: StageVersion): Boolean = {
     val vDir = versionsDir(stage)
     Files.createDirectories(vDir)
-    val target = vDir.resolve(f"manifest-v${expected + 1}%09d.json")
     val tmp = vDir.resolve(s".tmp-${System.nanoTime()}")
-    Files.write(tmp, manifestJson.getBytes(StandardCharsets.UTF_8))
-    try {
-      Files.createLink(target, tmp)
-      Files.delete(tmp)
-      writeAtomic(manifestPath(stage), manifestJson)
-      None
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        Some(fingerprintOf(stage).getOrElse(""))
-    }
-  }
-
-  /** Write `body` to `target` through a sibling temp file and one atomic rename. */
-  private def writeAtomic(target: Path, body: String): Unit = {
-    val tmp = target.resolveSibling(s"${target.getFileName}.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Files.write(tmp, TableJson.bytes(record))
+    try { Files.createLink(versionPath(stage, record.version), tmp); true }
+    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    finally Files.delete(tmp)
   }
 
   /** Max rows-per-key of `c` over the written stage — an Iceberg-style
@@ -278,8 +223,9 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     *                   manifest
     * @param degreeOf   also record the max rows-per-key of this column
     *                   ([[maxDegree]] — one column-pruned pass over the
-    *                   committed files, sampled above [[ExactDegreeRows]]):
-    *                   the head-key skew stat the link-score salt gate reads
+    *                   committed files, sampled above the store's
+    *                   `exactDegreeRows`): the head-key skew stat the
+    *                   link-score salt gate reads
     * @param maxRecordsPerFile bound output file sizes (0 = writer default):
     *                          without it a low-parallelism write emits one
     *                          giant file per task and a high-parallelism
@@ -297,11 +243,13 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
       degreeOf: Option[String] = None)(compute: => DataFrame): (DataFrame, Boolean) =
     commit(stage, fingerprint, partitionBy, None, distinctOf, maxRecordsPerFile, degreeOf)(compute)
 
-  /** The one commit sequence of every stage: resume check → expected
-    * version → compute → schema-evolution check → observed write into an
-    * inflight dir → atomic rename → stats → manifest → CAS → adopt or abort.
-    * The layout (plain, or `bucketed`) changes only the write call and how
-    * committed data is read back.
+  /** The one commit sequence of every stage: resume check → compute →
+    * schema-evolution check → observed write into an inflight dir → atomic
+    * rename → stats → manifest → CAS → adopt or abort. The resume check and
+    * the evolution check read the record of one version, the one the CAS
+    * expects to follow; a lost CAS reads the record it lost to. The layout
+    * (plain, or `bucketed`) changes only the write call and how committed
+    * data is read back.
     */
   private def commit(
       stage: String, fingerprint: String, partitionBy: Seq[String],
@@ -310,35 +258,35 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     // committed files → the stage's output. A bucketed stage reads them
     // through its catalog table, re-pointed here — after a win, an adopt or
     // a resume only — so the live name never points at uncommitted files
-    def readBack(path: String, schema: Option[StructType],
+    def readBack(path: String, schema: StructType,
         layout: Option[Buckets]): DataFrame = layout match {
       case None => readCommitted(path, schema, partitionBy)
       case Some(b) =>
         val table = bucketedTableName(stage)
         spark.sql(s"DROP TABLE IF EXISTS $table")
         spark.sql(
-          s"""CREATE TABLE $table (${schema.getOrElse(spark.read.parquet(path).schema).toDDL})
+          s"""CREATE TABLE $table (${schema.toDDL})
              |USING parquet CLUSTERED BY (${b.cols.mkString(", ")})
              |${if (b.sortCols.isEmpty) "" else b.sortCols.mkString("SORTED BY (", ", ", ")")}
              |INTO ${b.n} BUCKETS LOCATION '$path'""".stripMargin)
         spark.table(table)
     }
-    // a resume or an adopt reads the layout the commit recorded: the
-    // fingerprint does not cover the bucket spec
-    def readLive(): DataFrame =
-      readBack(dataPath(stage), schemaOf(stage), bucketed.flatMap(_ => bucketsOf(stage)))
-    if (fingerprintOf(stage).contains(fingerprint)) {
-      return (readLive(), true)
-    }
+    // a resume or an adopt reads a committed version in the layout it
+    // recorded: the fingerprint does not cover the bucket spec
+    def adopt(r: StageVersion): (DataFrame, Boolean) =
+      (readBack(dataPathFor(stage, r.data), r.structType, bucketed.flatMap(_ => r.buckets)), true)
     val expected = versionOf(stage)
+    val prev = recordAt(stage, expected)
+    if (prev.exists(_.fingerprint == fingerprint)) return adopt(prev.get)
     val out = compute
     // fail BEFORE the write if this commit would break pinned history
-    schemaOf(stage).foreach(prev => validateEvolution(stage, prev, out.schema))
-    // a bucketed dir's name also digests the bucket spec the manifest records,
-    // so a reused dir (stale, or a concurrent same-job commit's) holds it
+    prev.foreach(p => validateEvolution(stage, p.structType, out.schema))
+    // a bucketed dir's name also digests the bucket spec, in the field form
+    // manifests record it, so a reused dir (stale, or a concurrent same-job
+    // commit's) holds it
     val bucketJson = bucketed.fold("")(b =>
       s""""bucketBy":"${b.cols.mkString(",")}","sortBy":"${b.sortCols.mkString(",")}","nBuckets":${b.n},""")
-    val dir = versionedDataDir(fingerprint + bucketJson)
+    val dir = s"data-${digest16(fingerprint + bucketJson)}"
     val path = dataPathFor(stage, dir)
     // data lands in an inflight dir first, then one atomic rename publishes
     // it — a concurrent same-fingerprint writer never half-overwrites the
@@ -374,46 +322,41 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
         finally spark.sql(s"DROP TABLE IF EXISTS $scratch")
     }
     val rows = obs.get("rows").asInstanceOf[Long]
-    val distinctJson = distinctOf
-      .map(_ => s""","distinct":${obs.get("distinct").asInstanceOf[Long]}""")
-      .getOrElse("")
-    // publish the version dir (a same-fingerprint winner racing us may have
-    // published it already — identical content by contract, keep theirs)
+    // publish the version dir. A same-fingerprint winner racing us may have
+    // published it already (identical content by contract: keep theirs);
+    // any other failure — the inflight dir gone, a file in the way — fails
+    // this commit before it names a dir that holds no data
     try Files.move(Paths.get(inflight), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
     catch {
-      // FileAlreadyExists, DirectoryNotEmpty and the like
-      case _: java.nio.file.FileSystemException => deleteTree(Paths.get(inflight))
+      case e: java.nio.file.FileSystemException =>
+        deleteTree(Paths.get(inflight))
+        if (!Files.isDirectory(Paths.get(path))) throw e
     }
-    val degreeJson = degreeOf
-      .map(c => maxDegree(readCommitted(path, Some(out.schema), partitionBy), c, rows))
-      .map(d => s""","max_degree":$d""").getOrElse("")
-    val manifest =
-      s"""{"stage":"$stage","fingerprint":"${jsonEscape(fingerprint)}","data":"$dir","version":${expected + 1},""" +
-        s""""rows":$rows$distinctJson$degreeJson,"maxRecordsPerFile":$maxRecordsPerFile,""" +
-        s"""$bucketJson"committed_at":${System.currentTimeMillis()},"schema":"${jsonEscape(out.schema.json)}"}"""
-    casCommit(stage, manifest, expected) match {
-      case None => (readBack(path, Some(out.schema), bucketed), false)
-      case Some(winner) if winner == fingerprint =>
-        // a concurrent run of the SAME job won the version race: adopt its
-        // commit (the data dir is shared and content-identical)
-        (readLive(), true)
-      case Some(winner) =>
-        throw new ConcurrentWriteException(stage, fingerprint, winner)
+    val record = StageVersion(stage, fingerprint, dir, expected + 1, rows,
+      distinctOf.map(_ => obs.get("distinct").asInstanceOf[Long]),
+      degreeOf.map(c => maxDegree(readCommitted(path, out.schema, partitionBy), c, rows)),
+      maxRecordsPerFile, bucketed.map(_.cols.mkString(",")),
+      bucketed.map(_.sortCols.mkString(",")), bucketed.map(_.n),
+      System.currentTimeMillis(), out.schema.json)
+    if (casCommit(stage, record)) (readBack(path, out.schema, bucketed), false)
+    else recordAt(stage, expected + 1) match {
+      // a concurrent run of the SAME job won the version this writer raced
+      // for: adopt its commit (the data dir is shared and content-identical)
+      case Some(winner) if winner.fingerprint == fingerprint => adopt(winner)
+      case winner =>
+        throw new ConcurrentWriteException(stage, fingerprint, winner.fold("")(_.fingerprint))
     }
   }
 
   /** Read committed stage files under their KNOWN schema: a bare
     * `spark.read.parquet` launches one footer-reading job per call to infer
-    * it. Partition columns move last, where a partitioned read places them;
-    * `None` (a legacy manifest without a schema) falls back to inference.
+    * it. Partition columns move last, where a partitioned read places them.
     */
-  private def readCommitted(path: String, schema: Option[StructType],
-      partitionBy: Seq[String]): DataFrame = schema match {
-    case None => spark.read.parquet(path)
-    case Some(s) =>
-      val parts = partitionBy.flatMap(p => s.fields.find(_.name == p))
-      spark.read.schema(StructType(s.fields.filterNot(parts.contains) ++ parts))
-        .parquet(path)
+  private def readCommitted(path: String, schema: StructType,
+      partitionBy: Seq[String]): DataFrame = {
+    val parts = partitionBy.flatMap(p => schema.fields.find(_.name == p))
+    spark.read.schema(StructType(schema.fields.filterNot(parts.contains) ++ parts))
+      .parquet(path)
   }
 
   private def deleteTree(p: Path): Unit = if (Files.exists(p))
@@ -421,21 +364,18 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
       _.sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(f => Files.deleteIfExists(f)))
 
-  /** Force the next run of `stage` to recompute: drop its commit metadata
-    * (the numbered log AND the mirror — deleting `_MANIFEST.json` alone no
-    * longer invalidates, the log is authoritative). Data dirs stay on disk
-    * for pinned snapshot readers; [[gcSnapshots]] collects them later.
+  /** Force the next run of `stage` to recompute: drop its commit log. Data
+    * dirs stay on disk for pinned snapshot readers; [[gcSnapshots]]
+    * collects them later.
     */
-  def invalidateStage(stage: String): Unit = {
-    deleteTree(versionsDir(stage))
-    Files.deleteIfExists(manifestPath(stage))
-  }
+  def invalidateStage(stage: String): Unit = deleteTree(versionsDir(stage))
 
   /** Catalog table name for a bucketed stage — derived from the stage and
-    * the base directory so two stores never collide in one session catalog.
+    * a digest of the base directory so two stores never collide in one
+    * session catalog.
     */
   def bucketedTableName(stage: String): String =
-    s"graft_${stage}_${Integer.toHexString(baseDir.hashCode)}".replace('-', 'm')
+    s"graft_${stage}_${digest16(baseDir)}".replace('-', 'm')
 
   /** [[runStage]] for a BUCKETED stage: the output is written
     * `bucketBy(bucketCols).sortBy(sortCols)` and read back as a path-backed
@@ -461,12 +401,12 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
 
   private def snapshotsDir: Path = Paths.get(baseDir, "_snapshots")
 
-  /** Names of the stages committed under the base directory. */
+  /** Names of the stages with a commit log under the base directory. */
   private def stageNames(): Seq[String] = {
     val base = Paths.get(baseDir)
     if (!Files.exists(base)) Seq.empty
     else listDir(base)(_
-      .filter(p => Files.isDirectory(p) && Files.exists(p.resolve("_MANIFEST.json")))
+      .filter(p => Files.isDirectory(p.resolve("_versions")))
       .map(_.getFileName.toString).toSeq.sorted)
   }
 
@@ -479,18 +419,15 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     * dir, but identical fingerprint means identical content by the resume
     * contract). So "stage N+1's new data with stage N's old manifest" can
     * no longer be observed mid-rerun — the failure mode in-place
-    * overwriting had.
+    * overwriting had. Each stage's entry comes from one manifest record.
     */
   def commitSnapshot(): String = {
     val id = s"snap-${System.currentTimeMillis()}-${System.nanoTime() % 1000000}"
-    val body = stageNames().flatMap { st =>
-      for (fp <- fingerprintOf(st); d <- dataDirOf(st))
-        yield s""""$st":{"fingerprint":"${jsonEscape(fp)}","data":"$d"}"""
-    }.mkString(",")
-    val json =
-      s"""{"id":"$id","created_at":${System.currentTimeMillis()},"stages":{$body}}"""
+    val stages = stageNames().flatMap(st =>
+      live(st).map(r => st -> Pinned(r.fingerprint, r.data))).toMap
     Files.createDirectories(snapshotsDir)
-    writeAtomic(snapshotsDir.resolve(s"$id.json"), json)
+    TableJson.writeAtomic(snapshotsDir.resolve(s"$id.json"),
+      Snapshot(id, System.currentTimeMillis(), stages))
     id
   }
 
@@ -503,15 +440,14 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
       .map(_.stripSuffix(".json")).toSeq.sorted)
   }
 
-  /** The data dir a snapshot pinned for `stage` (relative to the stage). */
-  def snapshotDataDirOf(snapshotId: String, stage: String): Option[String] = {
+  private def snapshot(snapshotId: String): Option[Snapshot] = {
     val p = snapshotsDir.resolve(s"$snapshotId.json")
-    if (!Files.exists(p)) return None
-    val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    // the stage's own entry: escaped values never hold a bare `"<stage>":{`
-    val at = s.indexOf(s""""$stage":{""")
-    if (at < 0) None else field(s.substring(at), "data")
+    if (Files.exists(p)) Some(TableJson.read[Snapshot](p)) else None
   }
+
+  /** The data dir a snapshot pinned for `stage` (relative to the stage). */
+  def snapshotDataDirOf(snapshotId: String, stage: String): Option[String] =
+    snapshot(snapshotId).flatMap(_.stages.get(stage)).map(_.data)
 
   /** Read `stage` AS OF `snapshotId` — pinned to the version dirs the
     * snapshot recorded, immune to later reruns (plain parquet read: bucket
@@ -545,23 +481,24 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     }
   }
 
-  /** Read `stage` AS OF commit version `v` — the per-stage commit log
-    * ([[readManifestVersion]]) names each version's immutable data dir, so
-    * any un-GC'd version is readable (version-based time travel; snapshot
-    * ids give the cross-stage variant).
+  /** Read `stage` AS OF commit version `v` — the per-stage commit log names
+    * each version's immutable data dir, so any un-GC'd version is readable
+    * (version-based time travel; snapshot ids give the cross-stage variant).
     */
   def tableAsOfVersion(stage: String, v: Long): DataFrame = {
-    val m = readManifestVersion(stage, v).getOrElse(
+    val r = recordAt(stage, v).getOrElse(
       throw new IllegalArgumentException(s"stage '$stage' has no version $v"))
-    spark.read.parquet(dataPathFor(stage, field(m, "data").getOrElse("data")))
+    spark.read.parquet(dataPathFor(stage, r.data))
   }
 
   /** Garbage-collect retired stage versions: keep the newest
     * `keepSnapshots` snapshot files, then delete every `data-*` version
-    * dir referenced by NEITHER a kept snapshot NOR a live stage manifest
-    * (the legacy unversioned `data` dir is never touched). Retention is
-    * the caller's policy — nothing expires implicitly; a reader pinned to
-    * a KEPT snapshot is unaffected by construction.
+    * dir and `.inflight-*` write dir referenced by NEITHER a kept snapshot
+    * NOR a live stage manifest. Retention is the caller's policy — nothing
+    * expires implicitly; a reader pinned to a KEPT snapshot is unaffected by
+    * construction. A GC running beside a commit may take that commit's
+    * inflight dir for a crashed write: the commit then fails loudly at its
+    * publish rename and commits no manifest.
     *
     * @return (snapshot files deleted, version dirs deleted)
     */
@@ -570,10 +507,10 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     val all = listSnapshots()
     val (drop, keep) = all.splitAt(math.max(0, all.size - keepSnapshots))
     drop.foreach(id => Files.deleteIfExists(snapshotsDir.resolve(s"$id.json")))
+    val kept = keep.flatMap(snapshot)
     var removedDirs = 0
     stageNames().foreach { st =>
-      val referenced =
-        dataDirOf(st).toSet ++ keep.flatMap(id => snapshotDataDirOf(id, st))
+      val referenced = dataDirOf(st).toSet ++ kept.flatMap(_.stages.get(st).map(_.data))
       listDir(Paths.get(baseDir, st))(_
         .filter(p => Files.isDirectory(p) &&
           (p.getFileName.toString.startsWith(".inflight-") || // crashed writes

@@ -1,10 +1,13 @@
 package graft.io
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+/** The `_LAYOUT.json` record of a transcript table ([[TableJson]] codec). */
+private[io] final case class Layout(table: String, partitioning: String, nBuckets: Int,
+    maxRecordsPerFile: Long)
 
 /** Iceberg-style layout for the TRANSCRIPT table itself (SURVEY.md §1.5,
   * VERDICT r02 missing #1): transcripts are written hash-partitioned by a
@@ -59,21 +62,16 @@ object TranscriptStore {
       .write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("conv_bucket").parquet(path)
-    val tmp = layoutPath(path).resolveSibling("_LAYOUT.json.tmp")
-    Files.write(tmp,
-      s"""{"table":"transcripts","partitioning":"conv_bucket","nBuckets":$nBuckets,"maxRecordsPerFile":$maxRecordsPerFile}"""
-        .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, layoutPath(path),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    TableJson.writeAtomic(layoutPath(path),
+      Layout("transcripts", "conv_bucket", nBuckets, maxRecordsPerFile))
   }
 
   def nBucketsOf(path: String): Int = {
     val p = layoutPath(path)
     require(Files.exists(p), s"no _LAYOUT.json under $path — not a TranscriptStore table")
-    val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    "\"nBuckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toInt)
-      .getOrElse(sys.error(s"malformed _LAYOUT.json under $path"))
+    val n = TableJson.read[Layout](p).nBuckets
+    require(n > 0, s"malformed _LAYOUT.json under $path")
+    n
   }
 
   /** Full-table read (the pipeline's input shape — conv_bucket rides along

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.index.EntityIndexConfig
@@ -161,8 +163,7 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(perFile.max <= 1000L, s"file exceeds the record bound: ${perFile.max}")
     assert(perFile.sum == 5000L)
     // manifest records the policy and the observed approx-distinct hint
-    val manifest = new String(Files.readAllBytes(
-      Paths.get(out, "sized", "_MANIFEST.json")))
+    val manifest = store.readManifestVersion("sized", store.versionOf("sized")).get
     assert(manifest.contains("\"maxRecordsPerFile\":1000"))
     assert(store.distinctCountOf("sized").exists(d => d >= 6 && d <= 8),
       s"approx distinct of 7 ids: ${store.distinctCountOf("sized")}")
@@ -368,13 +369,119 @@ class PipelineE2ESpec extends AnyFunSuite {
     import spark.implicits._
     val out = Files.createTempDirectory("graft-fp-escape").toString
     val store = new graft.io.ManifestStore(spark, out)
-    val fp = "iv=run \"7\";src=C:\\dumps\\\"q\\\";saltN=0"
-    store.runStage("st", fp)(Seq((1L, "one"), (2L, "two")).toDF("k", "v"))
-    val (_, resumed) = store.runStage("st", fp)(fail("must resume"))
-    assert(resumed, "the second run must resume the committed stage")
-    assert(store.fingerprintOf("st").contains(fp))
+    val df = Seq((1L, "one"), (2L, "two")).toDF("k", "v")
+    // valid Unicode only (no lone surrogates): JSON specials, control
+    // characters, line/paragraph separators, supplementary-plane characters
+    // and fragments that would close a hand-built JSON string early
+    val special = Seq(0x22, 0x5c, 0x0a, 0x09, 0x00, 0x01, 0x1f, 0x7f, 0x2028, 0x2029,
+      0x1f600, 0x10ffff).map(cp => new String(Character.toChars(cp))) ++
+      Seq("\"}", "\",\"data\":\"x", "\\u0022")
+    val piece = Gen.frequency(
+      3 -> Gen.oneOf(special),
+      2 -> Gen.alphaNumStr.map(_.take(4)),
+      1 -> Gen.choose(0x20, 0xd7ff).map(c => c.toChar.toString),
+      1 -> Gen.choose(0x10000, 0x10ffff).map(cp => new String(Character.toChars(cp))))
+    val genFp = Gen.choose(1, 12).flatMap(n => Gen.listOfN(n, piece)).map(_.mkString)
+    val fps = "iv=run \"7\";src=C:\\dumps\\\"q\\\";saltN=0" +:
+      (1 to 15).map(seed => genFp(Gen.Parameters.default, Seed(seed.toLong)).get)
+    // premise: the cases cover every character class named above
+    for (cp <- Seq(0x22, 0x5c, 0x01, 0x2028))
+      assert(fps.exists(_.contains(cp.toChar)), f"no case holds U+$cp%04X")
+    assert(fps.exists(_.codePoints().anyMatch(Character.isSupplementaryCodePoint)))
+    for ((fp, i) <- fps.zipWithIndex) {
+      val st = s"st$i"
+      val (_, first) = store.runStage(st, fp)(df)
+      val (_, resumed) = store.runStage(st, fp)(fail("must resume"))
+      assert(!first && resumed, s"the second run must resume the committed stage: $fp")
+      assert(store.fingerprintOf(st).contains(fp))
+    }
     val snap = store.commitSnapshot()
-    assert(store.snapshotTable(snap, "st").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+    for (i <- fps.indices) {
+      assert(store.snapshotDataDirOf(snap, s"st$i") == store.dataDirOf(s"st$i"))
+      assert(store.snapshotTable(snap, s"st$i").collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+    }
+  }
+
+  test("a manifest in the pre-codec byte format resumes and reads back its rows") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-fp-compat").toString
+    val store = new graft.io.ManifestStore(spark, out)
+    val df = Seq((1L, "one"), (2L, "two")).toDF("k", "v")
+    df.write.parquet(s"$out/st/data-0123456789abcdef")
+    // field order, escapes and `schema` last exactly as the string-built
+    // writer emitted them
+    val fp = "iv=\"7\";src=C:\\d\n"
+    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")
+    Files.createDirectories(Paths.get(out, "st", "_versions"))
+    Files.writeString(Paths.get(out, "st", "_versions", "manifest-v000000001.json"),
+      s"""{"stage":"st","fingerprint":"${esc(fp)}","data":"data-0123456789abcdef",""" +
+        s""""version":1,"rows":2,"distinct":2,"max_degree":1,"maxRecordsPerFile":0,""" +
+        s""""committed_at":1700000000000,"schema":"${esc(df.schema.json)}"}""")
+    val (back, resumed) = store.runStage("st", fp)(fail("must resume"))
+    assert(resumed && store.versionOf("st") == 1L)
+    assert(back.collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
+      Set((1L, "one"), (2L, "two")))
+    assert(store.fingerprintOf("st").contains(fp) && store.rowCountOf("st").contains(2L) &&
+      store.distinctCountOf("st").contains(2L) && store.maxDegreeOf("st").contains(1L) &&
+      store.schemaOf("st").contains(df.schema))
+    // a fresh commit names its data dir as before: the first 16 hex digits
+    // of the SHA-256 of the fingerprint (bucketed: plus the bucket fields)
+    def digest16(s: String) = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString.take(16)
+    store.runStage("plain", fp)(df)
+    assert(store.dataDirOf("plain").contains(s"data-${digest16(fp)}"))
+    store.runStageBucketed("bk", fp, Seq("k"), Seq("k", "v"), 2)(df)
+    assert(store.dataDirOf("bk").contains(
+      s"data-${digest16(fp + "\"bucketBy\":\"k\",\"sortBy\":\"k,v\",\"nBuckets\":2,")}"))
+  }
+
+  test("a stage holding only a pre-log _MANIFEST.json is uncommitted and recomputes") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-prelog").toString
+    val store = new graft.io.ManifestStore(spark, out)
+    Files.createDirectories(Paths.get(out, "st"))
+    Files.writeString(Paths.get(out, "st", "_MANIFEST.json"),
+      """{"stage":"st","fingerprint":"fp","rows":1,"committed_at":1}""")
+    assert(store.versionOf("st") == 0L && store.fingerprintOf("st").isEmpty)
+    val (df, resumed) = store.runStage("st", "fp")(Seq((1L, "one")).toDF("k", "v"))
+    assert(!resumed && df.count() == 1L && store.versionOf("st") == 1L)
+  }
+
+  test("a failed publish commits no manifest") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-publish").toString
+    val store = new graft.io.ManifestStore(spark, out)
+    val df = Seq((1L, "one")).toDF("k", "v")
+    store.runStage("st", "fp-f")(df)
+    // the version dir F publishes to is a regular file when F commits again
+    val dir = Paths.get(out, "st", store.dataDirOf("st").get)
+    store.invalidateStage("st")
+    scala.util.Using.resource(Files.walk(dir))(
+      _.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]()).forEach(Files.delete(_)))
+    Files.writeString(dir, "not a data dir")
+    intercept[java.nio.file.FileSystemException](store.runStage("st", "fp-f")(df))
+    assert(store.versionOf("st") == 0L, "a manifest names a dir that holds no data")
+    assert(scala.util.Using.resource(Files.list(Paths.get(out, "st")))(
+      !_.iterator().asScala.exists(_.getFileName.toString.startsWith(".inflight-"))))
+  }
+
+  test("bucketed table names of stores on hashCode-colliding dirs are distinct") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-tname").toString
+    val (d1, d2) = (s"$base/Aa", s"$base/BB")
+    assert(d1.hashCode == d2.hashCode, "crafted 32-bit collision (test premise)")
+    val stores = Seq(new graft.io.ManifestStore(spark, d1), new graft.io.ManifestStore(spark, d2))
+    assert(stores(0).bucketedTableName("st") != stores(1).bucketedTableName("st"))
+    def run(i: Int)(f: => org.apache.spark.sql.DataFrame) =
+      stores(i).runStageBucketed("st", "fp", Seq("k"), Seq("k"), 2)(f)
+    for (i <- stores.indices) run(i)(Seq((i.toLong, s"v$i")).toDF("k", "v"))
+    // each resume re-points its own table; neither moves the other's
+    val resumed = stores.indices.map(i => run(i)(fail("must resume")))
+    for (i <- stores.indices) {
+      assert(resumed(i)._2 && resumed(i)._1.collect().map(_.getLong(0)).toSeq == Seq(i.toLong))
+      assert(spark.table(stores(i).bucketedTableName("st")).collect().map(_.getLong(0)).toSeq ==
+        Seq(i.toLong))
+    }
   }
 
   test("pipeline run returns a committed snapshot id covering every stage") {
@@ -420,8 +527,7 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(r2.triples.collect().map(_.toString).sorted.sameElements(t1))
 
     // invalidate one mid-pipeline stage → only it recomputes, same rows
-    // (via the store API: the numbered commit log is authoritative now, so
-    // deleting the _MANIFEST.json mirror alone would NOT invalidate)
+    // (via the store API: it drops the stage's numbered commit log)
     new graft.io.ManifestStore(spark, outDir).invalidateStage("triples")
     val r3 = KgPipeline.run(spark, transcripts, entities, properties, redirects, outDir)
     val resumed3 = r3.metrics.select("stage", "resumed").collect()
@@ -469,8 +575,9 @@ class PipelineE2ESpec extends AnyFunSuite {
     val dict = KgPipeline.dictionary(ei, entities, pi, properties)
     val outDir = Files.createTempDirectory("graft-dictver").toString
 
-    def mentionsManifest(): String = Files.readString(
-      Paths.get(outDir, "mentions", "_MANIFEST.json"))
+    val store = new graft.io.ManifestStore(spark, outDir)
+    def mentionsManifest(): String =
+      store.readManifestVersion("mentions", store.versionOf("mentions")).get
 
     KgPipeline.linkAndMaterialize(spark, transcripts, entities, redirects,
       dict, ei, pi, outDir, dictVersion = "dict-v1")
@@ -684,6 +791,25 @@ class PipelineE2ESpec extends AnyFunSuite {
       assert(dirsGone == 1, s"loser's orphan version dir collected: $dirsGone")
       assert(spark.read.parquet(s"$out/st/${store.dataDirOf("st").get}")
         .collect().map(_.getLong(0)).toSet == Set(1L))
+    }
+
+    test(s"concurrent writers: a race lost to the same job adopts it, whatever commits next$suffix") {
+      import spark.implicits._
+      val out = Files.createTempDirectory("graft-ccw-next").toString
+      val store = new graft.io.ManifestStore(spark, out)
+      val commit = layout(store)
+      // B reads version 0; inside B's compute, A (same job) commits v1 and
+      // C (another job) commits v2; B then loses the race for v1, to A
+      val (bDf, bResumed) = commit("st", "fp-x") {
+        commit("st", "fp-x")(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+        commit("st", "fp-y")(Seq((3L, "c")).toDF("k", "v"))
+        Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+      }
+      assert(bResumed, "B lost v1 to its own fingerprint -> adopt v1")
+      assert(bDf.collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
+        Set((1L, "a"), (2L, "b")))
+      assert(store.versionOf("st") == 2L && store.fingerprintOf("st").contains("fp-y"))
+      assert(inflightTables().isEmpty, s"throwaway tables left: ${inflightTables()}")
     }
   }
 
