@@ -70,15 +70,11 @@ private[io] final case class Snapshot(id: String, created_at: Long, stages: Map[
   * manifest number; see [[casCommit]]) and additive schema evolution (see
   * [[validateEvolution]]). A real Iceberg catalog can replace this behind
   * the same `runStage` seam; the sandbox ships no Iceberg runtime jar.
-  *
-  * @param exactDegreeRows stages above this row count estimate the
-  *                        [[maxDegree]] column stat from a 1% sample
-  *                        instead of an exact group-count (the default
-  *                        matches production; tests inject a small bound
-  *                        to exercise the sampled path)
+  * Every column stat (row count, distinct count, head-key degree) is
+  * observed during the write job itself: a commit runs no Spark job after
+  * its write.
   */
-final class ManifestStore(spark: SparkSession, baseDir: String,
-    exactDegreeRows: Long = 10000000L) {
+final class ManifestStore(spark: SparkSession, baseDir: String) {
 
   /** The stage's commit log: numbered immutable manifest files, newest =
     * the live version.
@@ -145,7 +141,12 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     * ([[graft.pipeline.SaltedAgg.linkScores]]) keys on. A mean
     * (rows ÷ distinct) cannot bound the max: a Zipfian head key holds a hot
     * reducer's worth of rows while millions of singletons keep the mean low
-    * (ADVICE r04), so the gate needs the observed MAX.
+    * (ADVICE r04), so the gate needs the observed MAX. It is the count of
+    * the top item of an `approx_top_k` sketch observed during the write:
+    * exact while the column has fewer distinct keys than the sketch tracks
+    * (10,000), an estimate a little above the true head degree beyond
+    * that. The estimate only picks between two link-score plans with
+    * identical output.
     */
   def maxDegreeOf(stage: String): Option[Long] = live(stage).flatMap(_.max_degree)
 
@@ -192,26 +193,6 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     finally Files.delete(tmp)
   }
 
-  /** Max rows-per-key of `c` over the written stage — an Iceberg-style
-    * column stat computed post-write from a column-pruned scan of the
-    * committed files. Exact up to `exactDegreeRows`; above it a 1%
-    * Bernoulli sample scales up: a head key of degree d surfaces ~d/100
-    * sampled rows, so degrees near the salt gate's threshold (10^6) are
-    * estimated within a few percent while light keys vanish — exactly the
-    * asymmetry a skew gate wants. The seed is fixed: the stat must be
-    * deterministic across reruns of the same committed files.
-    */
-  private def maxDegree(df: DataFrame, c: String, rows: Long): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit, max}
-    val keyed =
-      if (rows <= exactDegreeRows) df.select(col(c))
-      else df.select(col(c)).sample(withReplacement = false, 0.01, seed = 42L)
-    val r = keyed.groupBy(col(c)).agg(count(lit(1)).as("n"))
-      .agg(max(col("n"))).collect()(0)
-    val m = if (r.isNullAt(0)) 0L else r.getLong(0)
-    if (rows <= exactDegreeRows) m else m * 100L
-  }
-
   /** Run (or resume) a stage. `fingerprint` must deterministically describe
     * the stage's inputs + config; on match the previous output is read back.
     * Commit order: data → manifest, so a crash between the two re-runs the
@@ -221,11 +202,10 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     *                   the write job (zero extra scan — same Observation
     *                   mechanism as the row count) and record it in the
     *                   manifest
-    * @param degreeOf   also record the max rows-per-key of this column
-    *                   ([[maxDegree]] — one column-pruned pass over the
-    *                   committed files, sampled above the store's
-    *                   `exactDegreeRows`): the head-key skew stat the
-    *                   link-score salt gate reads
+    * @param degreeOf   also observe the max rows-per-key of this column
+    *                   during the write job (`approx_top_k`, see
+    *                   [[maxDegreeOf]]) and record it in the manifest: the
+    *                   head-key skew stat the link-score salt gate reads
     * @param maxRecordsPerFile bound output file sizes (0 = writer default):
     *                          without it a low-parallelism write emits one
     *                          giant file per task and a high-parallelism
@@ -292,14 +272,19 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     // it — a concurrent same-fingerprint writer never half-overwrites the
     // shared version dir, and a crashed write leaves no visible files
     val inflight = dataPathFor(stage, s".inflight-$dir-${System.nanoTime()}")
-    // row count observed DURING the write job — the round-2 shape re-read
-    // the whole committed parquet just to count it (one extra full scan per
-    // stage, a fixed IO cost the scaling pair paid at every stage)
+    // row count and column stats observed DURING the write job — the
+    // round-2 shape re-read the whole committed parquet just to count it,
+    // and the head degree once took a group-count pass over the committed
+    // files (extra jobs on every commit's serial path)
     val obs = new org.apache.spark.sql.Observation(
       s"rows-$stage-${System.nanoTime()}")
-    import org.apache.spark.sql.functions.{approx_count_distinct, col, count, lit}
+    import org.apache.spark.sql.functions.{approx_count_distinct, call_function, coalesce,
+      col, count, lit, try_element_at}
     val metricCols = count(lit(1)).as("rows") +:
-      distinctOf.map(c => approx_count_distinct(c).as("distinct")).toSeq
+      (distinctOf.map(c => approx_count_distinct(c).as("distinct")).toSeq ++
+        degreeOf.map(c => coalesce( // the top item's count; 0 for an empty stage
+          try_element_at(call_function("approx_top_k", col(c), lit(1)), lit(1)).getField("count"),
+          lit(0L)).as("degree")))
     // one shuffle partition per bucket: one file per bucket, no
     // tasks×buckets small-file spray
     val shaped = bucketed.fold(out)(b => out.repartition(b.n, b.cols.map(col): _*))
@@ -334,7 +319,7 @@ final class ManifestStore(spark: SparkSession, baseDir: String,
     }
     val record = StageVersion(stage, fingerprint, dir, expected + 1, rows,
       distinctOf.map(_ => obs.get("distinct").asInstanceOf[Long]),
-      degreeOf.map(c => maxDegree(readCommitted(path, out.schema, partitionBy), c, rows)),
+      degreeOf.map(_ => obs.get("degree").asInstanceOf[Long]),
       maxRecordsPerFile, bucketed.map(_.cols.mkString(",")),
       bucketed.map(_.sortCols.mkString(",")), bucketed.map(_.n),
       System.currentTimeMillis(), out.schema.json)

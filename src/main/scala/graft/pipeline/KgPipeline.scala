@@ -36,10 +36,10 @@ object KgPipeline {
     */
   private val StageDistinct: Map[String, String] = Map("mentions" -> "id")
 
-  /** Stages that record a head-key degree stat (max rows per key — one
-    * column-pruned pass over the committed files, sampled at scale): the
-    * mentions stage's max mentions-per-id drives the link-score salt gate
-    * (a MEAN hint cannot bound the head degree — ADVICE r04).
+  /** Stages that record a head-key degree stat (max rows per key — an
+    * `approx_top_k` sketch observed during the stage's write job, no extra
+    * pass): the mentions stage's max mentions-per-id drives the link-score
+    * salt gate (a MEAN hint cannot bound the head degree — ADVICE r04).
     */
   private val StageDegree: Map[String, String] = Map("mentions" -> "id")
 
@@ -401,7 +401,7 @@ object KgPipeline {
     val mentionCaches = new CacheScope
     val mentions =
       try timed("mentions", Seq("entity_index", "property_index"), Nil) {
-        // the trie path clusters its ordinal rows into the stage's buckets,
+        // the trie path clusters its packed per-turn rows into the buckets,
         // so the bucketed write's repartition is planned away (Mentions.detectTrie)
         Mentions.detectRouted(transcripts, dict, mentionCaches, maxN = 4,
           broadcastMaxRows = dictBroadcastMaxRows, knownDictRows = dictRowsHint,

@@ -21,11 +21,13 @@ import graft.CacheScope
   *  - [[detectFast]] — a broadcast token-TRIE scanned in one narrow
   *    `mapPartitions` (Aho-Corasick-style, SURVEY §2.7): no gram explode, no
   *    shuffle, zero string concatenation in the hot loop. The pipeline's
-  *    default for broadcast-sized dictionaries. The scan emits each match as
-  *    an `Int` ordinal into the broadcast dictionary and a narrow projection
-  *    decodes it; the conv-bucketed mentions stage clusters the ORDINAL rows
-  *    by `conv_id` between the two, so its one exchange carries ints, not
-  *    dictionary strings ([[detectTrie]]).
+  *    default for broadcast-sized dictionaries. The scan emits one row per
+  *    matched turn, its matches packed as `Int` spans and ordinals into the
+  *    broadcast dictionary, and a narrow generator + projection expands and
+  *    decodes them; the conv-bucketed mentions stage clusters the PACKED
+  *    rows by `conv_id` between the two, so its one exchange carries one
+  *    int array per turn, not a dictionary-string row per mention
+  *    ([[detectTrie]]).
   *
   * [[detectRouted]] picks between the trie scan and the shuffle join by the
   * dictionary's size — an unconditional broadcast/driver-collect of a 10^8-row
@@ -199,14 +201,26 @@ object Mentions {
       new SurfaceTrie(kids.toArray, hit.toArray, rows)
     }
 
-    // per-JVM trie cache keyed by broadcast id: the trie is built once per
-    // executor (in parallel across executors, off the driver's critical
-    // path) and shared by every task/partition in that JVM
-    private val cache = new java.util.concurrent.ConcurrentHashMap[Long, SurfaceTrie]()
+    /** Tries one executor JVM keeps: one batch and one streaming
+      * dictionary may share a JVM. Every span call broadcasts a new
+      * [[DictRows]], so an older trie (and, through `rows`, its whole
+      * dictionary) is dead weight once a newer call has started.
+      */
+    private val MaxCached = 2
 
-    def of(broadcastId: Long, rows: => DictRows): SurfaceTrie = {
-      if (cache.size > 8) cache.clear() // bound growth across dictionaries
-      cache.computeIfAbsent(broadcastId, _ => build(rows))
+    // per-JVM trie cache keyed by broadcast id, least recently used first:
+    // the trie is built once per executor (in parallel across executors,
+    // off the driver's critical path) and shared by every task/partition
+    // in that JVM
+    private val cache = new java.util.LinkedHashMap[Long, SurfaceTrie](4, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Long, SurfaceTrie]): Boolean = size > MaxCached
+    }
+
+    def of(broadcastId: Long, rows: => DictRows): SurfaceTrie = cache.synchronized {
+      var t = cache.get(broadcastId)
+      if (t == null) { t = build(rows); cache.put(broadcastId, t) }
+      t
     }
   }
 
@@ -264,16 +278,18 @@ object Mentions {
     */
   private val Whitespace = java.util.regex.Pattern.compile("\\s+")
 
-  /** One turn's trie scan + dominance filter: (span_start, span_end,
-    * payload index) of the surviving matches. A NULL text has none, as in
-    * [[detect]].
+  private val NoMatches = new Array[Int](0)
+
+  /** One turn's trie scan + dominance filter: the surviving matches as
+    * packed (span_start, span_end, payload index) triples in scan order,
+    * empty when none survives. A NULL text has none, as in [[detect]].
     */
-  private[graft] def scanText(t: SurfaceTrie, text: String,
-      maxN: Int): Iterator[(Int, Int, Int)] = {
-    if (text == null) return Iterator.empty
+  private[graft] def scanText(t: SurfaceTrie, text: String, maxN: Int): Array[Int] = {
+    if (text == null) return NoMatches
     val toks = Whitespace.split(text)
-    // (start, end, payload)
-    val found = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
+    // packed (start, end, payload) of every match, `n` ints used
+    var found = NoMatches
+    var n = 0
     var i = 0
     while (i < toks.length) {
       var node = 0
@@ -285,24 +301,42 @@ object Mentions {
         else {
           node = nxt.intValue()
           j += 1
-          if (t.hit(node) >= 0) found += ((i, j, t.hit(node)))
+          if (t.hit(node) >= 0) {
+            if (n == found.length) found = java.util.Arrays.copyOf(found, math.max(24, n * 2))
+            found(n) = i; found(n + 1) = j; found(n + 2) = t.hit(node)
+            n += 3
+          }
         }
       }
       i += 1
     }
     // dominance: survives iff no overlapping strictly-better match
-    found.iterator.filter { case (s, e, _) =>
-      !found.exists { case (s2, e2, _) =>
-        s2 < e && s < e2 &&
+    val out = new Array[Int](n)
+    var kept = 0
+    var a = 0
+    while (a < n) {
+      val s = found(a); val e = found(a + 1)
+      var dominated = false
+      var b = 0
+      while (!dominated && b < n) {
+        val s2 = found(b); val e2 = found(b + 1)
+        dominated = s2 < e && s < e2 &&
           ((e2 - s2) > (e - s) || ((e2 - s2) == (e - s) && s2 < s))
+        b += 3
       }
+      if (!dominated) {
+        out(kept) = s; out(kept + 1) = e; out(kept + 2) = found(a + 2)
+        kept += 3
+      }
+      a += 3
     }
+    if (kept == n) out else java.util.Arrays.copyOf(out, kept)
   }
 
   /** Trie-scan variant of [[detect]] — IDENTICAL semantics (same match set,
     * same dominance rule; equivalence-tested), different physical shape: a
     * single narrow `mapPartitions` over turns probing a broadcast token-trie,
-    * then a narrow decode projection ([[detectTrie]] with no exchange).
+    * then a narrow decode ([[detectTrie]] with no exchange).
     *
     * The dictionary is collected to the driver and broadcast — use
     * [[detectRouted]] when the dictionary may exceed broadcast scale.
@@ -313,15 +347,20 @@ object Mentions {
   /** The trie path as scan → (optional exchange) → decode, over ONE
     * dictionary broadcast:
     *
-    *  - the scan emits `(conv_id, turn_idx, span_start, span_end, payload)`
-    *    plus the `passThrough` columns, where `payload` is the match's index
-    *    into the broadcast [[DictRows]];
+    *  - the scan emits ONE row per turn with at least one surviving match:
+    *    `(conv_id, turn_idx, m)` plus the `passThrough` columns, where `m`
+    *    packs the turn's (span_start, span_end, payload) triples into one
+    *    `array<int>` and `payload` is the match's index into the broadcast
+    *    [[DictRows]];
     *  - `buckets > 0` hash-clusters those rows by `conv_id` into `buckets`
     *    partitions — the distribution a conv-bucketed stage write requires,
     *    so the write's own repartition is planned away and the stage's one
-    *    exchange moves ints instead of six dictionary-derived columns
-    *    (Hyper Dimension Shuffle's bytes-moved cost);
-    *  - the decode projection then maps `payload` to
+    *    exchange moves one int array per turn instead of one row of six
+    *    dictionary-derived columns per mention (Hyper Dimension Shuffle's
+    *    bytes-moved cost);
+    *  - the decode expands `m` to one row per match with a generator that
+    *    keeps every other column as the same attribute (the clustering
+    *    survives it), then maps `payload` to
     *    `surface, id, kind, is_prop, score, base` through the same broadcast.
     *
     * The payload never leaves the plan that made it, so it needs no stable
@@ -341,39 +380,39 @@ object Mentions {
       bcRows: org.apache.spark.broadcast.Broadcast[DictRows], maxN: Int,
       passThrough: Seq[String]): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructField, StructType}
     val in = turns.select(Seq(col("conv_id").cast("string"),
       col("turn_idx").cast("int"), col("text")) ++ passThrough.map(col): _*)
     val schema = StructType(Seq(
       StructField("conv_id", StringType),
       StructField("turn_idx", IntegerType, nullable = false),
-      StructField("span_start", IntegerType, nullable = false),
-      StructField("span_end", IntegerType, nullable = false),
-      StructField("payload", IntegerType, nullable = false)) ++
+      StructField("m", ArrayType(IntegerType, containsNull = false), nullable = false)) ++
       in.schema.fields.drop(3))
     in.mapPartitions { it =>
       // trie built once per executor JVM from the flat broadcast arrays
       val t = SurfaceTrie.of(bcRows.id, bcRows.value)
       it.flatMap { r =>
-        val conv = r.getString(0)
         val turn = r.getInt(1) // a null turn_idx fails loudly here
-        scanText(t, r.getString(2), maxN).map { case (s, e, p) =>
+        val m = scanText(t, r.getString(2), maxN)
+        if (m.length == 0) Iterator.empty
+        else {
           // one flat array per row: building it from Seqs cost a quarter of
           // the scan's CPU
-          val v = new Array[Any](r.length + 2)
-          v(0) = conv; v(1) = turn; v(2) = s; v(3) = e; v(4) = p
+          val v = new Array[Any](r.length)
+          v(0) = r.getString(0); v(1) = turn; v(2) = m
           var k = 3
-          while (k < r.length) { v(k + 2) = r.get(k); k += 1 }
-          Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(v))
+          while (k < r.length) { v(k) = r.get(k); k += 1 }
+          Iterator.single(Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(v)))
         }
       }
     }(Encoders.row(schema))
   }
 
-  /** Narrow projection: payload → the dictionary columns, through ONE udf
+  /** Narrow decode: one row per packed triple of `m` (the scan emits no
+    * empty `m`), then payload → the dictionary columns through ONE udf
     * returning all six (six single-column udfs measured ~10% more CPU).
-    * Every other column passes through as the same attribute, so a
-    * `conv_id` hash partitioning below survives it.
+    * The generator keeps `conv_id`, `turn_idx` and `passThrough` as the
+    * same attributes, so a `conv_id` hash partitioning below survives it.
     */
   private def decodePayloads(scanned: DataFrame,
       bcRows: org.apache.spark.broadcast.Broadcast[DictRows],
@@ -382,8 +421,12 @@ object Mentions {
       val d = bcRows.value
       (d.surfaces(p), d.ids(p), d.kinds(p), d.isProp(p), d.weights(p), d.bases(p))
     }.asNonNullable()
+    val m = col("m")
+    val matches = inline(transform(sequence(lit(0), size(m) - 1, lit(3)), k =>
+      struct(m(k).as("span_start"), m(k + 1).as("span_end"), m(k + 2).as("payload"))))
     val span = Seq("conv_id", "turn_idx", "span_start", "span_end").map(col)
-    scanned.select(span ++ passThrough.map(col) :+ decode(col("payload")).as("decoded"): _*)
+    scanned.select((Seq("conv_id", "turn_idx") ++ passThrough).map(col) :+ matches: _*)
+      .select(span ++ passThrough.map(col) :+ decode(col("payload")).as("decoded"): _*)
       .select(span ++ Seq("surface", "id", "kind", "is_prop", "score", "base")
         .zipWithIndex.map { case (c, i) => col(s"decoded._${i + 1}").as(c) } ++
         passThrough.map(col): _*)
@@ -393,8 +436,8 @@ object Mentions {
     * (row-count proxy; ~100 bytes/entry ⇒ the 20M default is a ~2 GB
     * broadcast), shuffle join beyond it. Both paths produce identical rows.
     * Persists through the caller's `scope`, released once the result is
-    * materialized. `buckets > 0` clusters the trie path's ordinal rows by
-    * `conv_id` for a conv-bucketed stage write (see [[detectTrie]]); the
+    * materialized. `buckets > 0` clusters the trie path's packed per-turn
+    * rows by `conv_id` for a conv-bucketed stage write (see [[detectTrie]]); the
     * shuffle-join path keeps its shape and leaves the clustering to the
     * write.
     *

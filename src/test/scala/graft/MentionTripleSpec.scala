@@ -276,4 +276,92 @@ class MentionTripleSpec extends AnyFunSuite {
     val triples = Triples.extractBucketed(Mentions.detectFast(turns, dict))
     assert(triples.count() > 0)
   }
+
+  // ---- the trie path's packed per-turn row: (span_start, span_end,
+  // ---- payload) triples of one turn in one int array, expanded after the
+  // ---- exchange
+
+  /** The trie path both ways: unclustered, and clustered as the bucketed
+    * mentions stage runs it.
+    */
+  private def triePaths(t: org.apache.spark.sql.DataFrame,
+      d: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.DataFrame] =
+    Seq(Mentions.detectFast(t, d),
+      Mentions.detectRouted(t, d, new CacheScope, 4, Long.MaxValue, Some(1L), buckets = 3))
+
+  private def spanSet(df: org.apache.spark.sql.DataFrame) =
+    df.select("conv_id", "turn_idx", "span_start", "span_end", "id")
+      .collect().map(_.toString).toSet
+
+  test("packed row: a match past token 65,535 of a 70k-token turn keeps its spans") {
+    val d = dict(("paris", "Q90", false, 50L), ("borders", "P47", true, 20L),
+      ("new york", "Q60", false, 100L))
+    val long = (Seq.fill(65540)("x") ++ Seq("paris", "y", "new", "york") ++
+      Seq.fill(4460)("z") ++ Seq("borders")).mkString(" ")
+    val t = turns(("c1", 0, long), ("c1", 1, "paris"))
+    val expected = Set("[c1,0,65540,65541,Q90]", "[c1,0,65542,65544,Q60]",
+      "[c1,0,70004,70005,P47]", "[c1,1,0,1,Q90]")
+    triePaths(t, d).foreach(df => assert(spanSet(df) == expected))
+  }
+
+  test("packed row: several dominance survivors of overlapping candidates in one turn") {
+    val d = dict(("new york", "Q60", false, 100L), ("york city", "Q61", false, 90L),
+      ("new", "Q1", false, 1L), ("york", "Q2", false, 1L), ("city", "Q3", false, 1L),
+      ("big apple", "Q4", false, 10L), ("apple", "Q5", false, 1L))
+    // candidates overlap pairwise; new york beats the equally long york city
+    // by its earlier start, york city still removes the contained city
+    val t = turns(("c1", 0, "i saw new york city and a big apple in new york"))
+    val expected = Set("[c1,0,2,4,Q60]", "[c1,0,7,9,Q4]", "[c1,0,10,12,Q60]")
+    assert(spanSet(Mentions.detect(t, d)) == expected)
+    triePaths(t, d).foreach(df => assert(spanSet(df) == expected))
+  }
+
+  test("packed row: zero-match, NULL and whitespace-only turns share a partition") {
+    val d = dict(("paris", "Q90", false, 50L), ("borders", "P47", true, 20L),
+      ("berlin", "Q64", false, 40L))
+    val t = turns(("c1", 0, null), ("c1", 1, "   "), ("c1", 2, "nothing matches here"),
+      ("c1", 3, "paris"), ("c2", 0, ""), ("c2", 1, "berlin borders paris"),
+      ("c2", 2, "\t\n"), ("c3", 0, "no match")).coalesce(1)
+    val expected = Set("[c1,3,0,1,Q90]", "[c2,1,0,1,Q64]", "[c2,1,1,2,P47]",
+      "[c2,1,2,3,Q90]")
+    assert(spanSet(Mentions.detect(t, d)) == expected)
+    triePaths(t, d).foreach(df => assert(spanSet(df) == expected))
+  }
+
+  test("packed row: the ts pass-through column rides with every mention of its turn") {
+    import spark.implicits._
+    val d = dict(("paris", "Q90", false, 50L), ("berlin", "Q64", false, 40L))
+    val t = Seq(("c1", 0, "paris and berlin", new java.sql.Timestamp(1000L)),
+      ("c1", 1, "nothing", new java.sql.Timestamp(2000L)),
+      ("c2", 0, "berlin", new java.sql.Timestamp(3000L)))
+      .toDF("conv_id", "turn_idx", "text", "ts")
+    for (buckets <- Seq(0, 2)) {
+      val out = Mentions.detectTrie(t, d, passThrough = Seq("ts"), buckets = buckets)
+      assert(out.columns.last == "ts")
+      assert(out.select("conv_id", "turn_idx", "span_start", "id", "ts").collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(3),
+          r.getTimestamp(4).getTime)).toSet ==
+        Set(("c1", 0, 0, "Q90", 1000L), ("c1", 0, 2, "Q64", 1000L), ("c2", 0, 0, "Q64", 3000L)))
+    }
+  }
+
+  test("executor trie cache holds at most two tries, least recently used evicted first") {
+    val rows = Mentions.DictRows(Array("paris"), Array("Q90"), Array(0), Array(false),
+      Array(1.0), Array("paris"))
+    // negative ids: no broadcast of this JVM can hold them
+    val Seq(a, b, c) = Seq(-101L, -102L, -103L)
+    def cached(id: Long) = Mentions.SurfaceTrie.of(id, fail(s"trie $id rebuilt"))
+    val ta = Mentions.SurfaceTrie.of(a, rows)
+    val tb = Mentions.SurfaceTrie.of(b, rows)
+    // a cached id returns the same instance without rebuilding
+    assert(cached(a) eq ta)
+    val tc = Mentions.SurfaceTrie.of(c, rows)
+    assert((cached(c) eq tc) && (cached(a) eq ta))
+    // b was the least recently used: evicted, so it is built anew, which
+    // evicts c in turn
+    val tb2 = Mentions.SurfaceTrie.of(b, rows)
+    assert(tb2 ne tb)
+    assert((cached(a) eq ta) && (cached(b) eq tb2))
+    assert(Mentions.SurfaceTrie.of(c, rows) ne tc)
+  }
 }

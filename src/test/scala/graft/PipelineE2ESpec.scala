@@ -308,20 +308,52 @@ class PipelineE2ESpec extends AnyFunSuite {
     store.runStage("nodeg", "fp-nodeg")(df)
     assert(store.maxDegreeOf("nodeg").isEmpty)
 
-    // the SAMPLED path (stage rows above the injected exact bound): a
-    // 50k-degree head key surfaces ~500 sampled rows, so the ×100
-    // scale-up estimates it within a few percent — wide assertion bounds
-    // cover sampling variance at the fixed seed
+    // the SKETCH regime: 100k rows, a 50k-row head and 50k singletons —
+    // more distinct keys than approx_top_k tracks (10,000), so the count is
+    // an estimate; it stays within 1% of the true head degree
     val big = spark.range(100000L)
       .selectExpr("CASE WHEN id < 50000 THEN 'HEAD' ELSE concat('q', id) END AS id",
         "id AS v")
     val sStore = new graft.io.ManifestStore(spark,
-      Files.createTempDirectory("graft-degree-s").toString,
-      exactDegreeRows = 1000L)
+      Files.createTempDirectory("graft-degree-s").toString)
     sStore.runStage("deg", "fp-deg-s", Nil, degreeOf = Some("id"))(big)
     val est = sStore.maxDegreeOf("deg").get
-    assert(est >= 35000L && est <= 65000L,
-      s"sampled head-degree estimate must land near 50k: $est")
+    assert(math.abs(est - 50000L) <= 500L,
+      s"sketched head-degree estimate must land within 1% of 50k: $est")
+  }
+
+  test("degree stat: observed in the write job, no Spark job after it") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-degree-jobs").toString
+    val store = new graft.io.ManifestStore(spark, out)
+    val df = ((1 to 300).map(_ => "HEAD") ++ (1 to 50).map(i => s"q$i"))
+      .zipWithIndex.map { case (id, i) => (id, i.toLong) }.toDF("id", "v")
+    // the same commit without the stat launches exactly the write's jobs
+    val plain = JobLog.jobsLaunchedBy(store.runStage("plain", "fp-plain")(df))
+    val plainB = JobLog.jobsLaunchedBy(
+      store.runStageBucketed("plainb", "fp-plainb", Seq("id"), Seq("id"), 2)(df))
+    assert(JobLog.jobsLaunchedBy(
+      store.runStage("deg", "fp-deg", Nil, Some("id"), 0L, Some("id"))(df)) == plain)
+    assert(JobLog.jobsLaunchedBy(store.runStageBucketed("degb", "fp-degb", Seq("id"),
+      Seq("id"), 2, Some("id"), 0L, Some("id"))(df)) == plainB)
+    assert(store.maxDegreeOf("deg").contains(300L) && store.maxDegreeOf("degb").contains(300L))
+    // an empty stage records degree 0
+    store.runStage("empty", "fp-empty", Nil, degreeOf = Some("id"))(df.limit(0))
+    assert(store.maxDegreeOf("empty").contains(0L))
+
+    // a manifest written before the sketch (same record, field order as that
+    // writer emitted it) resumes with its recorded degree
+    df.write.parquet(s"$out/old/data-00000000000000aa")
+    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
+    Files.createDirectories(Paths.get(out, "old", "_versions"))
+    Files.writeString(Paths.get(out, "old", "_versions", "manifest-v000000001.json"),
+      s"""{"stage":"old","fingerprint":"fp-old","data":"data-00000000000000aa",""" +
+        s""""version":1,"rows":350,"distinct":51,"max_degree":300,"maxRecordsPerFile":0,""" +
+        s""""committed_at":1700000000000,"schema":"${esc(df.schema.json)}"}""")
+    val (back, resumed) = store.runStage("old", "fp-old", Nil, Some("id"), 0L,
+      Some("id"))(fail("must resume"))
+    assert(resumed && back.count() == 350L)
+    assert(store.maxDegreeOf("old").contains(300L) && store.versionOf("old") == 1L)
   }
 
   test("snapshot isolation: a reader pinned to a snapshot survives a rerun") {

@@ -179,15 +179,19 @@ class PlanSpec extends AnyFunSuite {
     val exchanges = H.collect(writes.head) { case e: ShuffleExchangeExec => e }
     assert(exchanges.length == 1,
       s"the bucketed write must plan exactly one exchange:\n${writes.head}")
-    assert(exchanges.head.child.output.map(_.name) ==
-      Seq("conv_id", "turn_idx", "span_start", "span_end", "payload"),
-      s"the exchange must carry ordinals, not dictionary strings:\n${writes.head}")
+    assert(exchanges.head.child.output.map(_.name) == Seq("conv_id", "turn_idx", "m"),
+      s"the exchange must carry packed ordinals, not dictionary strings:\n${writes.head}")
     // and what it committed is the trie scan's decoded output
+    val committed = spark.table(store.bucketedTableName("mentions"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("conv_id", "turn_idx", "span_start", "span_end", "surface",
         "id", "kind", "is_prop", "score", "base").collect().map(_.toString).toSet
-    assert(rows(spark.table(store.bucketedTableName("mentions"))) ==
-      rows(graft.pipeline.Mentions.detectFast(turns, dict)))
+    assert(rows(committed) == rows(graft.pipeline.Mentions.detectFast(turns, dict)))
+    // one exchanged row per turn with a match, not one per mention
+    val matchedTurns = committed.select("conv_id", "turn_idx").distinct().count()
+    assert(committed.count() > matchedTurns)
+    assert(exchanges.head.metrics("shuffleRecordsWritten").value == matchedTurns,
+      s"the exchange must carry one row per matched turn:\n${writes.head}")
   }
 
   test("entity cascade under AQE: no forced join strategy, small sides broadcast") {
